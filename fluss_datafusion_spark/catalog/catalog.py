@@ -116,6 +116,100 @@ def bucket_id_expr(spec: TableSpec, *key_cols) -> F.Column:
     which is what makes bucket pruning sound."""
     return F.pmod(F.xxhash64(*key_cols), F.lit(spec.num_buckets)).cast("int")
 
+
+_U64 = (1 << 64) - 1
+_XXP1 = 0x9E3779B185EBCA87
+_XXP2 = 0xC2B2AE3D27D4EB4F
+_XXP3 = 0x165667B19E3779F9
+_XXP4 = 0x85EBCA77C2B2AE63
+_XXP5 = 0x27D4EB2F165667C5
+
+
+def _rotl64(x: int, r: int) -> int:
+    return ((x << r) | (x >> (64 - r))) & _U64
+
+
+def _xxh64_round(acc: int, lane: int) -> int:
+    return (_rotl64((acc + lane * _XXP2) & _U64, 31) * _XXP1) & _U64
+
+
+def _xxh64(data: bytes, seed: int) -> int:
+    """XXH64 of ``data`` (unsigned 64-bit result), as Spark's
+    ``XXH64.hashUnsafeBytes``; its ``hashInt``/``hashLong`` are this
+    function over the 4-/8-byte little-endian encoding."""
+    import struct
+
+    n, i = len(data), 0
+    if n >= 32:
+        v = [
+            (seed + _XXP1 + _XXP2) & _U64,
+            (seed + _XXP2) & _U64,
+            seed,
+            (seed - _XXP1) & _U64,
+        ]
+        while i <= n - 32:
+            lanes = struct.unpack_from("<4Q", data, i)
+            v = [_xxh64_round(a, b) for a, b in zip(v, lanes)]
+            i += 32
+        h = (
+            _rotl64(v[0], 1) + _rotl64(v[1], 7)
+            + _rotl64(v[2], 12) + _rotl64(v[3], 18)
+        ) & _U64
+        for a in v:
+            h = ((h ^ _xxh64_round(0, a)) * _XXP1 + _XXP4) & _U64
+    else:
+        h = (seed + _XXP5) & _U64
+    h = (h + n) & _U64
+    while i + 8 <= n:
+        (lane,) = struct.unpack_from("<Q", data, i)
+        h = (_rotl64(h ^ _xxh64_round(0, lane), 27) * _XXP1 + _XXP4) & _U64
+        i += 8
+    if i + 4 <= n:
+        (lane,) = struct.unpack_from("<I", data, i)
+        h = (_rotl64(h ^ ((lane * _XXP1) & _U64), 23) * _XXP2 + _XXP3) & _U64
+        i += 4
+    while i < n:
+        h = (_rotl64(h ^ ((data[i] * _XXP5) & _U64), 11) * _XXP1) & _U64
+        i += 1
+    h ^= h >> 33
+    h = (h * _XXP2) & _U64
+    h ^= h >> 29
+    h = (h * _XXP3) & _U64
+    return h ^ (h >> 32)
+
+
+def bucket_id(spec: TableSpec, key: Dict[str, object]) -> Optional[int]:
+    """``bucket_id_expr`` evaluated in Python for a key's literal
+    values (``key`` maps logical column name -> value): Spark's
+    ``xxhash64`` chains seed 42 through the bucket columns in order,
+    ints/dates hash as 4 bytes, bigints as 8, strings as UTF-8 bytes,
+    and a null leaves the running hash unchanged.  Returns None for a
+    bucket-column type this port does not cover (the caller falls back
+    to the Spark expression)."""
+    import datetime as _dt
+    import struct
+
+    from pyspark.sql import types as T
+
+    h = 42
+    for name in spec.bucket_keys:
+        value, dt = key[name], spec.column(name).spark_type
+        if value is None:
+            continue
+        if isinstance(dt, T.LongType):
+            data = struct.pack("<q", value)
+        elif isinstance(dt, (T.IntegerType, T.ShortType, T.ByteType)):
+            data = struct.pack("<i", value)
+        elif isinstance(dt, T.DateType):
+            data = struct.pack("<i", (value - _dt.date(1970, 1, 1)).days)
+        elif isinstance(dt, T.StringType):
+            data = value.encode("utf-8")
+        else:
+            return None
+        h = _xxh64(data, h)
+    signed = h - (1 << 64) if h >> 63 else h
+    return signed % spec.num_buckets
+
 DEFAULT_DATABASE = "fluss"
 
 
@@ -4226,9 +4320,9 @@ class FlussCatalog:
             target, input_df, branch=branch,
             maybe_local=values_body and not overwrite,
         )
-        # pure-JVM scalar frame (see EngineSession._scalar_df): the
-        # python-RDD constructor is ~2x slower per statement
-        return self.spark.range(1).select(
+        # LocalRelation scalar frame (see EngineSession._scalar_df):
+        # collecting it runs no Spark job
+        return self.spark.sql("VALUES (1)").select(
             F.lit(count).cast("bigint").alias("count")
         )
 

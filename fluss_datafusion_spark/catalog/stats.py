@@ -139,14 +139,6 @@ def analyze_table(
     return stats
 
 
-def drop_stats(catalog, spec) -> None:
-    """Remove persisted stats (table dropped/truncated/restored —
-    callers where the snapshot changes shape discontinuously)."""
-    path = _stats_path(catalog, spec)
-    if os.path.exists(path):
-        os.remove(path)
-
-
 def broadcast_hint_if_small(catalog, spec, df: DataFrame) -> DataFrame:
     """Attach an explicit broadcast hint when FRESH stats prove the
     live snapshot fits under autoBroadcastJoinThreshold but the raw

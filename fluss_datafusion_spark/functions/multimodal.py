@@ -1001,23 +1001,6 @@ def synthesize_png_media(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     )
 
 
-def frame_sample_plan(media: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Video frame-sampling *plan*: one output row per planned frame
-    using the metadata duration — demonstrates explode-based fan-out
-    without decoding.  Real frame extraction would replace the payload
-    passthrough inside mapInPandas."""
-    return media.select(
-        "media_id",
-        F.explode(
-            F.sequence(
-                F.lit(0),
-                F.greatest(F.coalesce(F.col("meta.duration_ms"), F.lit(0)), F.lit(0)),
-                F.lit(every_ms),
-            )
-        ).alias("frame_ts_ms"),
-    )
-
-
 def parse_wav_header(payload):
     """(sample_rate, channels, bits_per_sample, n_frames) parsed from a
     RIFF/WAVE payload's chunk headers, or (None,)*4 if the payload is not

@@ -53,14 +53,6 @@ def stopword_hits(text, words) -> Column:
     return F.size(hits)
 
 
-def lang_scores(text) -> Column:
-    """Map lang -> stopword hit count."""
-    return F.map_from_arrays(
-        F.array(*[F.lit(k) for k in LANG_STOPWORDS]),
-        F.array(*[stopword_hits(text, v) for v in LANG_STOPWORDS.values()]),
-    )
-
-
 def lang_id(text) -> Column:
     """Predicted language = argmax stopword hits; 'und' (undetermined)
     when no stopword matches."""

@@ -33,16 +33,6 @@ def cosine(a, b) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
-def l2_distance(a, b) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            F.zip_with(_d(a), _d(b), lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
-
-
 def l1_norm(a) -> Column:
     return F.aggregate(_d(a), F.lit(0.0), lambda acc, x: acc + F.abs(x))
 

@@ -235,16 +235,6 @@ def minhash_signatures(
     )
 
 
-def _minhash_coefficients(num_perm: int):
-    """Fixed-seed affine-permutation coefficients shared by both
-    signature paths (identical signatures by construction)."""
-    import random
-
-    p = (1 << 31) - 1
-    rng = random.Random(42)
-    return p, [(rng.randrange(1, p), rng.randrange(p)) for _ in range(num_perm)]
-
-
 def minhash_band_buckets(
     df: DataFrame,
     id_col: str,
@@ -468,78 +458,6 @@ def _band_buckets_from_token_hashes(
             )
 
     sig = toks.mapInPandas(buckets_fn, "__id__ long, __bks__ array<long>")
-    return sig.select(
-        "__id__", F.posexplode("__bks__").alias("__band__", "__bucket__")
-    )
-
-
-def band_buckets_from_shingles(
-    sh: DataFrame,
-    num_perm: int = 128,
-    rows_per_band: int = 2,
-) -> DataFrame:
-    """OPH band buckets over a pre-shingled (__id__, __sh__) DataFrame
-    (shingle-STRING hashes).  NOTE (r7): bucket values from this path
-    differ from ``minhash_band_buckets``'s token-hash kernel — do NOT
-    mix the two across an index and its probes; the incremental index
-    now derives buckets via ``minhash_band_buckets`` for exactly that
-    reason.  Kept for callers that only have shingle arrays.
-
-    r7 kernel: ONE-PERMUTATION HASHING (Li, Owen & Zhang, NIPS 2012)
-    with hashed-probe OPTIMAL densification (Shrivastava, ICML 2017) —
-    each shingle's single hash is split into (bin = h mod num_perm,
-    value = h div num_perm), the signature is the per-bin minimum (one
-    O(n) scatter instead of a num_perm x n matmul), and an empty bin i
-    copies the value of the first FILLED bin along the probe sequence
-    probe(i, t), t = 1, 2, ..., mixed with (i, t) so different probe
-    paths cannot accidentally agree.  (Rotation densification —
-    nearest-filled-to-the-right — is deliberately NOT used: sparse docs
-    share whole empty-bin windows, so one common shingle densifies
-    identically across its entire gap; see _oph_pack for the measured
-    blowup.)  The whole batch vectorizes: flat scatter-min + bounded
-    probe gathers, no per-document Python loop.  Candidate sets differ
-    from the classic affine kernel (same banding guarantee:
-    P(candidate) = 1-(1-j^r)^b), but every candidate is still
-    EXACT-verified downstream, so results are unchanged wherever recall
-    holds — the corpus oracle pins that.
-    NOTE: a persisted LSH index built by an older (affine) kernel must
-    be rebuilt; probe and index must share the kernel."""
-    import numpy as np
-    import pandas as pd
-
-    if rows_per_band != 2:
-        raise ValueError("injective band packing requires rows_per_band=2")
-    p = (1 << 31) - 1
-
-    def buckets_fn(it):
-        for pdf in it:
-            hs_list = pdf["__hs__"]
-            n_docs = len(hs_list)
-            if n_docs == 0:
-                yield pd.DataFrame({"__id__": pdf["__id__"], "__bks__": []})
-                continue
-            arrs = [np.asarray(h, dtype=np.int64) for h in hs_list]
-            counts = np.fromiter((a.size for a in arrs), dtype=np.int64,
-                                 count=n_docs)
-            flat = (
-                np.concatenate(arrs)
-                if counts.sum()
-                else np.empty(0, dtype=np.int64)
-            )
-            doc_idx = np.repeat(np.arange(n_docs), counts)
-            packed = _oph_pack(np, doc_idx, flat, n_docs, num_perm)
-            yield pd.DataFrame(
-                {"__id__": pdf["__id__"], "__bks__": list(packed)}
-            )
-
-    hashed = sh.select(
-        "__id__",
-        F.transform(
-            F.col("__sh__"),
-            lambda s: F.pmod(F.xxhash64(s), F.lit(p).cast("long")),
-        ).alias("__hs__"),
-    )
-    sig = hashed.mapInPandas(buckets_fn, "__id__ long, __bks__ array<long>")
     return sig.select(
         "__id__", F.posexplode("__bks__").alias("__band__", "__bucket__")
     )

@@ -30,7 +30,7 @@ anyway).
 
 from __future__ import annotations
 
-from typing import Dict, List, Sequence, Tuple
+from typing import Dict, Sequence, Tuple
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -148,17 +148,3 @@ def with_curve_key(
 
         return df.withColumn(out_col, zorder_key(df, list(cols)))
     raise ValueError(f"unknown clustering curve {curve!r}")
-
-
-def cluster_by_hilbert(
-    df: DataFrame, cols: List[str], n_files: int
-) -> DataFrame:
-    """Rewrite plan: range-partition on the Hilbert key into ``n_files``
-    tasks and sort within each, so file k holds the k-th contiguous
-    curve segment (tight per-file min/max boxes for both columns)."""
-    keyed = with_hilbert_key(df, cols)
-    return (
-        keyed.repartitionByRange(max(1, n_files), F.col("__h__"))
-        .sortWithinPartitions("__h__")
-        .drop("__h__")
-    )

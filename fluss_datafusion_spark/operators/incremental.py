@@ -493,6 +493,8 @@ def dedup_ingest_sink(
     """
     from pyspark.sql import functions as F  # noqa: F811 (local clarity)
 
+    from fluss_datafusion_spark.catalog.catalog import _RMW_LOCAL_CAP
+
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         import contextlib
 
@@ -555,7 +557,9 @@ def dedup_ingest_sink(
                 # collect is a cache read, never a second execution
                 _parallel_writes(
                     lambda: catalog.insert(
-                        table, survivors, collect_local=n_kept <= 10_000,
+                        table,
+                        survivors,
+                        collect_local=n_kept <= _RMW_LOCAL_CAP,
                     ),
                     lambda: append_to_index(
                         survivors, id_col, text_col, index_path
@@ -873,8 +877,10 @@ def _local_append_hamming(
     gets one pyarrow part file written under the store's EXISTING
     parquet schema, and the skipping manifest is extended for the new
     files only.  Returns False (caller falls back to the distributed
-    appends) when either store is missing or its schema can't be read
-    — never raises."""
+    appends) when either store is missing or its schema can't be read,
+    or when collecting, building or writing fails (e.g. a null hash) —
+    never raises; a file written before a failure is removed, so the
+    fallback does not append it twice."""
     import uuid
 
     import pyarrow as pa
@@ -884,6 +890,7 @@ def _local_append_hamming(
 
     bpath = os.path.join(path, "buckets")
     hpath = os.path.join(path, "hashes")
+    written = []
     try:
         from fluss_datafusion_spark.catalog.catalog import _parquet_files
 
@@ -894,51 +901,64 @@ def _local_append_hamming(
         # distributed writer's output
         bschema = pq.read_schema(next(iter(sorted(bfiles))))
         hschema = pq.read_schema(next(iter(sorted(hfiles))))
-    except Exception:
-        return False
-    rows = (
-        df.select(
-            F.col(id_col).alias("__id__"),
-            F.col(hash_col).alias("__h__"),
-            F.array(*hamming_band_keys(n_bands, key_blocks)).alias(
-                "__keys__"
-            ),
+        # two selects: the band keys read __h__ from the projection
+        # below, never from an input column that happens to share the
+        # name (a lateral alias would resolve to the input's)
+        rows = (
+            df.select(
+                F.col(id_col).alias("__id__"), F.col(hash_col).alias("__h__")
+            )
+            .select(
+                "__id__",
+                "__h__",
+                F.array(*hamming_band_keys(n_bands, key_blocks)).alias(
+                    "__keys__"
+                ),
+            )
+            .limit(_HAMMING_LOCAL_APPEND_CAP + 1)
+            .collect()
         )
-        .limit(_HAMMING_LOCAL_APPEND_CAP + 1)
-        .collect()
-    )
-    if len(rows) > _HAMMING_LOCAL_APPEND_CAP:
+        if len(rows) > _HAMMING_LOCAL_APPEND_CAP:
+            return False
+        ids = [r["__id__"] for r in rows]
+        hs = [r["__h__"] for r in rows]
+        b_ids, b_bands, b_slices = [], [], []
+        for r in rows:
+            for band, sl in enumerate(r["__keys__"]):
+                b_ids.append(r["__id__"])
+                b_bands.append(band)
+                b_slices.append(sl)
+        # sort the bucket rows by slice so the appended file's footer
+        # bounds stay tight for probe pruning (mirrors the distributed
+        # path's sortWithinPartitions("__slice__"))
+        order = sorted(range(len(b_slices)), key=lambda i: (b_slices[i],))
+        btab = pa.table(
+            {
+                "__id__": [b_ids[i] for i in order],
+                "__band__": [b_bands[i] for i in order],
+                "__slice__": [b_slices[i] for i in order],
+            }
+        ).select(bschema.names).cast(bschema)
+        horder = sorted(range(len(ids)), key=lambda i: (ids[i],))
+        htab = pa.table(
+            {
+                "__id__": [ids[i] for i in horder],
+                "__h__": [hs[i] for i in horder],
+            }
+        ).select(hschema.names).cast(hschema)
+        for store, tab in ((bpath, btab), (hpath, htab)):
+            fpath = os.path.join(
+                store, f"part-{uuid.uuid4().hex}-local.snappy.parquet"
+            )
+            written.append(fpath)
+            pq.write_table(tab, fpath, compression="snappy")
+    except Exception:
+        for fpath in written:
+            try:
+                os.remove(fpath)
+            except OSError:
+                pass
         return False
-    ids = [r["__id__"] for r in rows]
-    hs = [r["__h__"] for r in rows]
-    b_ids, b_bands, b_slices = [], [], []
-    for r in rows:
-        for band, sl in enumerate(r["__keys__"]):
-            b_ids.append(r["__id__"])
-            b_bands.append(band)
-            b_slices.append(sl)
-    # sort the bucket rows by slice so the appended file's footer
-    # bounds stay tight for probe pruning (mirrors the distributed
-    # path's sortWithinPartitions("__slice__"))
-    order = sorted(range(len(b_slices)), key=lambda i: (b_slices[i],))
-    btab = pa.table(
-        {
-            "__id__": [b_ids[i] for i in order],
-            "__band__": [b_bands[i] for i in order],
-            "__slice__": [b_slices[i] for i in order],
-        }
-    ).select(bschema.names).cast(bschema)
-    horder = sorted(range(len(ids)), key=lambda i: (ids[i],))
-    htab = pa.table(
-        {
-            "__id__": [ids[i] for i in horder],
-            "__h__": [hs[i] for i in horder],
-        }
-    ).select(hschema.names).cast(hschema)
-    bfile = os.path.join(bpath, f"part-{uuid.uuid4().hex}-local.snappy.parquet")
-    hfile = os.path.join(hpath, f"part-{uuid.uuid4().hex}-local.snappy.parquet")
-    pq.write_table(btab, bfile, compression="snappy")
-    pq.write_table(htab, hfile, compression="snappy")
     _harvest_store_manifest(bpath, before=bfiles)
     _harvest_store_manifest(hpath, before=hfiles)
     return True

@@ -192,12 +192,6 @@ def learn_unigram(
     return sorted(logp.items())
 
 
-def vocab_table(spark, vocab: List[Tuple[str, float]]) -> DataFrame:
-    return spark.createDataFrame(
-        [(p, float(lp)) for p, lp in vocab], "piece string, logprob double"
-    )
-
-
 def apply_unigram(
     docs: DataFrame,
     id_col: str,

@@ -22,7 +22,7 @@ sorted, so the whole job is linear and fully parallel at any scale.
 
 from __future__ import annotations
 
-from typing import Dict, List, Sequence, Tuple
+from typing import Dict, Sequence, Tuple
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -123,18 +123,3 @@ def zorder_key(
             cmin, cmax = 0, 0
         scaled.append(_scale_expr(F.col(c), dtypes[c], cmin, cmax))
     return interleave_bits(scaled)
-
-
-def cluster_by_zorder(
-    df: DataFrame, cols: List[str], n_files: int
-) -> DataFrame:
-    """Rewrite plan: range-partition on the z-key into ``n_files`` tasks
-    and sort within each, so file k holds the k-th contiguous slice of
-    the Morton curve (tight per-file min/max for every z column)."""
-    z = zorder_key(df, cols)
-    return (
-        df.withColumn("__z__", z)
-        .repartitionByRange(max(1, n_files), F.col("__z__"))
-        .sortWithinPartitions("__z__")
-        .drop("__z__")
-    )

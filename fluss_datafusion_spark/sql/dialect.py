@@ -72,11 +72,6 @@ def parse_qualified_name(name: str) -> List[str]:
     return [p for p in parts]
 
 
-def is_special_command(line: str) -> bool:
-    """REPL meta-commands: ``\\dt`` ``\\q`` ``\\?`` (src/sql/dialect.rs:47-60)."""
-    return line.strip().startswith("\\")
-
-
 _SPECIAL_PREFIXES = (
     "SHOW PARTITIONS",
     "SHOW BUCKETS",

@@ -100,21 +100,6 @@ def tumbling_counts(
     )
 
 
-def sliding_counts(
-    stream: DataFrame,
-    window: str = "1 hour",
-    slide: str = "30 minutes",
-    watermark: str = "2 hours",
-    ts_col: str = "ts",
-) -> DataFrame:
-    return (
-        stream.withWatermark(ts_col, watermark)
-        .groupBy(F.window(ts_col, window, slide).alias("w"))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .select(F.col("w.start").alias("window_start"), "n")
-    )
-
-
 def session_window_counts(
     stream: DataFrame,
     gap: str = "30 minutes",

@@ -237,3 +237,54 @@ def test_media_sink_metrics_off_same_table(spark, tmp_path):
     with_metrics = []
     assert run("off", None) == run("on", with_metrics)
     assert [m["n_kept"] for m in with_metrics] == [25, 0]
+
+
+def _hash_frames(spark):
+    import random
+
+    rng = random.Random(7)
+    corpus = spark.createDataFrame(
+        [(i, rng.getrandbits(63)) for i in range(20)],
+        "media_id long, dhash long",
+    )
+    return corpus, rng
+
+
+def test_hamming_local_append_null_hash_falls_back(spark, tmp_path):
+    """A null fingerprint makes the driver-local build fail: the seam
+    returns False (never raises), leaves no local file behind, and the
+    caller's distributed append lands the batch."""
+    corpus, _ = _hash_frames(spark)
+    idx = str(tmp_path / "idx")
+    inc.write_hamming_index(corpus, "media_id", "dhash", idx)
+    batch = spark.createDataFrame(
+        [(100, 5), (101, None)], "media_id long, dhash long"
+    )
+    assert inc._local_append_hamming(batch, "media_id", "dhash", idx, 4, 1) is False
+    inc.append_to_hamming_index(batch, "media_id", "dhash", idx, known_count=2)
+    for store in ("hashes", "buckets"):
+        assert not any("-local" in f for f in os.listdir(os.path.join(idx, store)))
+    ids = {r[0] for r in spark.read.parquet(os.path.join(idx, "hashes")).collect()}
+    assert {100, 101} <= ids
+
+
+def test_hamming_local_append_ignores_an_input_h_column(spark, tmp_path):
+    """An input frame that already carries a ``__h__`` column must not
+    feed the band keys: the local append equals the distributed one."""
+    corpus, rng = _hash_frames(spark)
+    batch = spark.createDataFrame(
+        [(100 + i, rng.getrandbits(63), 0) for i in range(8)],
+        "media_id long, dhash long, __h__ long",
+    )
+    local_idx, dist_idx = str(tmp_path / "local"), str(tmp_path / "dist")
+    for p in (local_idx, dist_idx):
+        inc.write_hamming_index(corpus, "media_id", "dhash", p)
+    inc.append_to_hamming_index(
+        batch, "media_id", "dhash", local_idx, known_count=8
+    )
+    inc.append_to_hamming_index(batch, "media_id", "dhash", dist_idx)
+    lp = os.path.join(local_idx, "buckets")
+    assert any("-local" in f for f in os.listdir(lp))
+    a = spark.read.parquet(lp)
+    b = spark.read.parquet(os.path.join(dist_idx, "buckets"))
+    assert a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty()
