@@ -185,12 +185,21 @@ def bucket_id(spec: TableSpec, key: Dict[str, object]) -> Optional[int]:
     ints/dates hash as 4 bytes, bigints as 8, strings as UTF-8 bytes,
     and a null leaves the running hash unchanged.  Returns None for a
     bucket-column type this port does not cover (the caller falls back
-    to the Spark expression)."""
+    to the Spark expression) — whatever the key's values, so an
+    all-null key checks the column types alone."""
     import datetime as _dt
     import struct
 
     from pyspark.sql import types as T
 
+    hashed = (
+        T.LongType, T.IntegerType, T.ShortType, T.ByteType, T.DateType,
+        T.StringType,
+    )
+    if not all(
+        isinstance(spec.column(k).spark_type, hashed) for k in spec.bucket_keys
+    ):
+        return None
     h = 42
     for name in spec.bucket_keys:
         value, dt = key[name], spec.column(name).spark_type
@@ -198,17 +207,31 @@ def bucket_id(spec: TableSpec, key: Dict[str, object]) -> Optional[int]:
             continue
         if isinstance(dt, T.LongType):
             data = struct.pack("<q", value)
-        elif isinstance(dt, (T.IntegerType, T.ShortType, T.ByteType)):
-            data = struct.pack("<i", value)
         elif isinstance(dt, T.DateType):
             data = struct.pack("<i", (value - _dt.date(1970, 1, 1)).days)
         elif isinstance(dt, T.StringType):
             data = value.encode("utf-8")
         else:
-            return None
+            data = struct.pack("<i", value)
         h = _xxh64(data, h)
     signed = h - (1 << 64) if h >> 63 else h
     return signed % spec.num_buckets
+
+
+def _local_write_ok(spec: TableSpec) -> bool:
+    """The driver-local writer's one eligibility check, made before any
+    seq is reserved: every column has a pyarrow type (_pa_type), the
+    table is unpartitioned (Hive dir naming and escaping stay with
+    Spark), and every bucket column has a type ``bucket_id`` hashes."""
+    return (
+        not spec.partition_keys
+        and all(_pa_type(c.spark_type) is not None for c in spec.columns)
+        and (
+            not (spec.num_buckets and spec.bucket_keys)
+            or bucket_id(spec, dict.fromkeys(spec.bucket_keys)) is not None
+        )
+    )
+
 
 DEFAULT_DATABASE = "fluss"
 
@@ -3546,12 +3569,12 @@ class FlussCatalog:
             # Driver-local fast path (guide §1.2 first-principles): a
             # literal VALUES insert / point tombstone folds to a
             # LocalRelation — its rows are already driver-resident, so
-            # the write is one pyarrow file + the same commit protocol,
-            # not a Spark job through the Hadoop committer (measured
-            # ~107 -> ~35 ms per statement on a quiet host).  Returns
-            # None whenever anything disqualifies (non-local plan,
-            # bucketed/partitioned layout, unsupported type) and the
-            # distributed path below runs as before.
+            # the write is one pyarrow file per touched bucket + the same
+            # commit protocol, not a Spark job through the Hadoop
+            # committer (measured ~107 -> ~35 ms per statement on a quiet
+            # host).  Returns None whenever anything disqualifies
+            # (non-local plan, _local_write_ok) and the distributed path
+            # below runs as before.
             local = self._try_local_append(
                 spec, aligned, deleted, reserved_seq, expect_base,
                 deleted_col, branch,
@@ -3710,64 +3733,43 @@ class FlussCatalog:
         harvest, commit record, auto-compaction policy.  Returns the
         written file list (or _CountedFiles) like _append_log, or None
         when the fast path does not apply."""
-        if spec.num_buckets and spec.bucket_keys:
-            return None  # __bkt__ layout needs the xxhash64 expression
-        if spec.partition_keys:
-            return None  # Hive dir naming/escaping stays with Spark
         try:
             plan = aligned._jdf.queryExecution().optimizedPlan()
             if plan.getClass().getSimpleName() != "LocalRelation":
                 return None
         except Exception:
             return None
-        fields = list(aligned.schema.fields)
-        data_fields = [f for f in fields if f.name != deleted_col]
-        pa_types = {}
-        for f in data_fields:
-            t = _pa_type(f.dataType)
-            if t is None:
+
+        def collect():
+            rows = aligned.collect()  # LocalRelation: no job — plan literals
+            if len(rows) > _LOCAL_WRITE_MAX_ROWS:
                 return None
-            pa_types[f.name] = t
-        rows = aligned.collect()  # LocalRelation: no job — plan literals
-        if len(rows) > _LOCAL_WRITE_MAX_ROWS:
-            return None
-        if not deleted and spec.check_constraints:
-            # identical CHECK semantics (violation only on FALSE); the
-            # input is a literal plan, so no pinning checkpoint is needed
-            check_src = (
-                aligned
-                if deleted_col is None
-                else aligned.filter(~F.col(deleted_col).cast("boolean"))
-            )
-            for cname, expr in spec.check_constraints.items():
-                bad = (
-                    check_src.filter(~F.coalesce(F.expr(expr), F.lit(True)))
-                    .limit(1)
-                    .collect()
+            if not deleted and spec.check_constraints:
+                # identical CHECK semantics (violation only on FALSE); the
+                # input is a literal plan, so no pinning checkpoint is needed
+                check_src = (
+                    aligned
+                    if deleted_col is None
+                    else aligned.filter(~F.col(deleted_col).cast("boolean"))
                 )
-                if bad:
-                    raise ValueError(
-                        f"CHECK constraint {cname} ({expr}) violated by "
-                        f"rows written to {spec.qualified_name}"
+                for cname, expr in spec.check_constraints.items():
+                    bad = (
+                        check_src.filter(
+                            ~F.coalesce(F.expr(expr), F.lit(True))
+                        )
+                        .limit(1)
+                        .collect()
                     )
-        del_flags = None
-        if deleted_col is not None:
-            del_flags = [
-                None if r[deleted_col] is None else bool(r[deleted_col])
-                for r in rows
-            ]
-        columns = {
-            f.name: [r[f.name] for r in rows] for f in data_fields
-        }
-        return self._local_write_rows(
-            spec,
-            columns,
-            {f.name: pa_types[f.name] for f in data_fields},
-            deleted=deleted,
-            del_flags=del_flags,
-            reserved_seq=reserved_seq,
-            expect_base=expect_base,
-            branch=branch,
+                    if bad:
+                        raise ValueError(
+                            f"CHECK constraint {cname} ({expr}) violated by "
+                            f"rows written to {spec.qualified_name}"
+                        )
+            return rows
+
+        return self._try_collect_local_append(
+            spec, aligned, deleted, reserved_seq, expect_base, deleted_col,
+            branch, collect=collect,
         )
 
     def _pk_bounded_predicate(self, spec: TableSpec, predicate: str) -> bool:
@@ -3803,11 +3805,9 @@ class FlussCatalog:
     ) -> bool:
         """Pre-signal gate for the collect-local RMW probe (see
         _RMW_PROBE_MAX_FILES).  Layouts the local writer declines
-        anyway (buckets/partitions) short-circuit to False so the
+        anyway (_local_write_ok) short-circuit to False so the
         listing isn't paid for nothing."""
-        if spec.num_buckets and spec.bucket_keys:
-            return False
-        if spec.partition_keys:
+        if not _local_write_ok(spec):
             return False
         if predicate is not None and self._pk_bounded_predicate(
             spec, predicate
@@ -3832,27 +3832,26 @@ class FlussCatalog:
         expect_base: Optional[int],
         deleted_col: Optional[str],
         branch: Optional[str],
+        collect=None,
     ):
         """RMW driver-local append (see _append_log's collect_local
         seam): one limit-capped collect of the delta plan; at or under
         the cap the rows are written locally, else None (the caller runs
         the distributed write — the only double-executed work is the
         early-exiting probe).  Callers must not attach Observations to
-        ``aligned`` (the probe would consume them)."""
-        if spec.num_buckets and spec.bucket_keys:
+        ``aligned`` (the probe would consume them).
+
+        ``collect`` replaces the probe (the literal path passes a plain
+        collect of its LocalRelation) and returns None past its cap.
+        Every decline happens before any seq is reserved."""
+        if not _local_write_ok(spec):
             return None
-        if spec.partition_keys:
-            return None
-        fields = list(aligned.schema.fields)
-        data_fields = [f for f in fields if f.name != deleted_col]
-        pa_types = {}
-        for f in data_fields:
-            t = _pa_type(f.dataType)
-            if t is None:
-                return None
-            pa_types[f.name] = t
-        rows = aligned.limit(_RMW_LOCAL_CAP + 1).collect()
-        if len(rows) > _RMW_LOCAL_CAP:
+        if collect is None:
+            rows = aligned.limit(_RMW_LOCAL_CAP + 1).collect()
+            rows = rows if len(rows) <= _RMW_LOCAL_CAP else None
+        else:
+            rows = collect()
+        if rows is None:
             return None
         del_flags = None
         if deleted_col is not None:
@@ -3860,11 +3859,9 @@ class FlussCatalog:
                 None if r[deleted_col] is None else bool(r[deleted_col])
                 for r in rows
             ]
-        columns = {f.name: [r[f.name] for r in rows] for f in data_fields}
         return self._local_write_rows(
             spec,
-            columns,
-            {f.name: pa_types[f.name] for f in data_fields},
+            {c.name: [r[c.name] for r in rows] for c in spec.columns},
             deleted=deleted,
             del_flags=del_flags,
             reserved_seq=reserved_seq,
@@ -3876,25 +3873,42 @@ class FlussCatalog:
         self,
         spec: TableSpec,
         columns: Dict[str, list],
-        pa_types: Dict,
         deleted: bool,
         del_flags: Optional[list],
         reserved_seq: Optional[int],
         expect_base: Optional[int],
         branch: Optional[str],
     ):
-        """Write driver-resident column values as ONE parquet file with
-        the full _append_log bookkeeping (seq space, write marker, stats
+        """Write driver-resident column values as one parquet file per
+        touched bucket (one file for an unbucketed table), then run the
+        _append_log bookkeeping once (seq space, write marker, stats
         harvest, commit record, auto-compaction).  ``columns`` is keyed
         by LOGICAL column name in table-schema order; physical renames
         are applied here.  ``del_flags`` carries per-row tombstone flags
-        (None = null = live, matching the __del__ read semantics)."""
-        import uuid
-
+        (None = null = live, matching the __del__ read semantics).
+        Callers have checked _local_write_ok.  Bucketed rows land in
+        ``__bkt__=<bucket_id>/`` with no __bkt__ column in the file, as
+        Spark's partitionBy lays them out; __sub__ is the row's index in
+        the whole batch, so within-batch last-write-wins holds across
+        the files of one seq."""
         import pyarrow as pa
-        import pyarrow.parquet as pq
 
         n = len(next(iter(columns.values()))) if columns else 0
+        path = (
+            self._branch_path(spec, branch)
+            if branch is not None
+            else self.table_path(spec)
+        )
+        # An unbucketed table gets its file even for a 0-row delta, and
+        # an empty bucketed delta writes none: each matches what the
+        # distributed writer leaves, and branch/divergence accounting
+        # reads the raw branch dir (tests/test_branch_dml_parity.py).
+        parts = {path: range(n)}
+        if spec.num_buckets and spec.bucket_keys:
+            parts = {}
+            for i in range(n):
+                b = bucket_id(spec, {k: columns[k][i] for k in spec.bucket_keys})
+                parts.setdefault(os.path.join(path, f"{_BKT}={b}"), []).append(i)
         seq = None
         if spec.has_primary_key:
             if reserved_seq is not None:
@@ -3905,36 +3919,34 @@ class FlussCatalog:
                 )
             else:
                 seq = self._next_seq(spec, expect_base=expect_base)
-        path = (
-            self._branch_path(spec, branch)
-            if branch is not None
-            else self.table_path(spec)
-        )
-        # The file is written even for a 0-row delta: the distributed
-        # writer always produces (at least) one part file carrying the
-        # schema, and branch/divergence accounting reads the raw branch
-        # dir — an empty predicate-DELETE must leave the same physical
-        # trace either way (tests/test_branch_dml_parity.py).
         names = list(columns)
         stored = self._stored_names(spec, names)
-        arrays = {
-            sname: pa.array(columns[name], type=pa_types[name])
-            for name, sname in zip(names, stored)
-        }
-        if spec.has_primary_key:
-            arrays[_SEQ] = pa.array([seq] * n, pa.int64())
-            arrays[_SUB] = pa.array(range(n), pa.int64())
-            arrays[_DEL] = pa.array(
-                del_flags
-                if del_flags is not None
-                else [bool(deleted)] * n,
-                pa.bool_(),
-            )
-        os.makedirs(path, exist_ok=True)
-        fname = f"part-{uuid.uuid4().hex}-local.snappy.parquet"
-        fpath = os.path.join(path, fname)
-        pq.write_table(pa.table(arrays), fpath, compression="snappy")
-        new_files = [fpath]
+        types = [_pa_type(spec.column(name).spark_type) for name in names]
+        new_files = []
+        try:
+            for dir_path, idx in sorted(parts.items()):
+                arrays = {
+                    sname: pa.array([columns[name][i] for i in idx], type=t)
+                    for name, sname, t in zip(names, stored, types)
+                }
+                if spec.has_primary_key:
+                    arrays[_SEQ] = pa.array([seq] * len(idx), pa.int64())
+                    arrays[_SUB] = pa.array(idx, pa.int64())
+                    arrays[_DEL] = pa.array(
+                        [bool(deleted)] * len(idx)
+                        if del_flags is None
+                        else [del_flags[i] for i in idx],
+                        pa.bool_(),
+                    )
+                os.makedirs(dir_path, exist_ok=True)
+                new_files.append(
+                    _write_parquet_atomic(pa.table(arrays), dir_path)
+                )
+        except BaseException:
+            # a failed statement leaves none of its bucket files behind
+            for f in new_files:
+                os.remove(f)
+            raise
         if branch is None:
             self._register_view(spec)
             self._touch_write_marker(spec)
@@ -5186,6 +5198,32 @@ def _parquet_files(path: str) -> set:
             if f.endswith(".parquet") and not hidden(f)
         )
     return files
+
+
+def _write_parquet_atomic(table, dir_path: str) -> str:
+    """Write ``table`` as a new snappy part file in ``dir_path`` and
+    return its path.  The bytes go to a dot-prefixed temp name first,
+    hidden from every listing (_parquet_files and Spark's own), and
+    ``os.replace`` moves the complete file into place: a failure or a
+    crash mid-write never leaves a footer-less part file that would
+    break later reads.  On an exception the temp file is removed."""
+    import uuid
+
+    import pyarrow.parquet as pq
+
+    name = f"part-{uuid.uuid4().hex}-local.snappy.parquet"
+    final = os.path.join(dir_path, name)
+    tmp = os.path.join(dir_path, f".{name}.tmp")
+    try:
+        pq.write_table(table, tmp, compression="snappy")
+        os.replace(tmp, final)
+    except BaseException:
+        try:
+            os.remove(tmp)
+        except OSError:
+            pass
+        raise
+    return final
 
 
 class _CountedFiles(list):

@@ -1050,20 +1050,12 @@ def _try_local_refresh_write(catalog, spec, mv, local_rows, view_base):
     outside the local writer's support."""
     from fluss_datafusion_spark.catalog.catalog import (
         ConcurrentWriteConflict,
-        _pa_type,
+        _local_write_ok,
     )
 
-    if spec.num_buckets and spec.bucket_keys:
-        return None
-    if spec.partition_keys:
+    if not _local_write_ok(spec):
         return None
     target = spec.spark_schema()
-    pa_types = {}
-    for f in target.fields:
-        t = _pa_type(f.dataType)
-        if t is None:
-            return None
-        pa_types[f.name] = t
     n_rescan = n_up = n_dead = 0
     for r in local_rows:
         if r[_STAR] > 0:
@@ -1101,7 +1093,6 @@ def _try_local_refresh_write(catalog, spec, mv, local_rows, view_base):
     catalog._local_write_rows(
         spec,
         cols,
-        pa_types,
         deleted=False,
         del_flags=flags,
         reserved_seq=seq_ref,

@@ -881,19 +881,19 @@ def _local_append_hamming(
     or when collecting, building or writing fails (e.g. a null hash) —
     never raises; a file written before a failure is removed, so the
     fallback does not append it twice."""
-    import uuid
-
     import pyarrow as pa
     import pyarrow.parquet as pq
 
+    from fluss_datafusion_spark.catalog.catalog import (
+        _parquet_files,
+        _write_parquet_atomic,
+    )
     from fluss_datafusion_spark.operators.dedup import hamming_band_keys
 
     bpath = os.path.join(path, "buckets")
     hpath = os.path.join(path, "hashes")
     written = []
     try:
-        from fluss_datafusion_spark.catalog.catalog import _parquet_files
-
         bfiles = _parquet_files(bpath)
         hfiles = _parquet_files(hpath)
         # pin the collected values to the stores' existing physical
@@ -947,11 +947,7 @@ def _local_append_hamming(
             }
         ).select(hschema.names).cast(hschema)
         for store, tab in ((bpath, btab), (hpath, htab)):
-            fpath = os.path.join(
-                store, f"part-{uuid.uuid4().hex}-local.snappy.parquet"
-            )
-            written.append(fpath)
-            pq.write_table(tab, fpath, compression="snappy")
+            written.append(_write_parquet_atomic(tab, store))
     except Exception:
         for fpath in written:
             try:

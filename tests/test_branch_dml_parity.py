@@ -188,3 +188,57 @@ def test_branch_point_delete_quoted_table_name(spark, tmp_path):
     e.sql("INSERT INTO qt VALUES (7, 1)")
     with pytest.raises(ConcurrentWriteConflict):
         e.sql("ALTER TABLE qt CHERRY PICK BRANCH b")
+
+
+@pytest.mark.parametrize("stmt", [
+    "DELETE FROM {t} WHERE v > 1000",
+    "UPDATE {t} SET v = 0 WHERE k > 1000",
+])
+def test_bucketed_empty_delta_same_physical_trace(spark, tmp_path,
+                                                  monkeypatch, stmt):
+    """A 0-row RMW delta on a bucketed table, on main and on a branch:
+    the driver-local writer leaves what the distributed writer leaves.
+    An empty ``partitionBy(__bkt__)`` write produces no part file at
+    all, so neither writer adds a file, and both record the statement."""
+    from fluss_datafusion_spark.catalog.catalog import (
+        FlussCatalog,
+        _parquet_files,
+    )
+
+    traces = []
+    for local in (True, False):
+        with monkeypatch.context() as m:
+            local_writes = []
+            real = FlussCatalog._local_write_rows
+            m.setattr(
+                FlussCatalog, "_local_write_rows",
+                lambda self, *a, **k: local_writes.append(1)
+                or real(self, *a, **k),
+            )
+            if not local:
+                for seam in ("_try_local_append", "_try_collect_local_append"):
+                    m.setattr(FlussCatalog, seam, lambda self, *a, **k: None)
+            e = EngineSession(spark=spark,
+                              warehouse=str(tmp_path / f"wh_{local}"))
+            e.sql("CREATE TABLE bz (k BIGINT NOT NULL, v BIGINT,"
+                  " PRIMARY KEY (k)) DISTRIBUTED BY (k) INTO 4 BUCKETS")
+            e.sql("INSERT INTO bz VALUES (1, 10), (2, 20)")
+            e.sql("ALTER TABLE bz CREATE BRANCH b")
+            spec = e.catalog.get_table("bz")
+            paths = [e.catalog.table_path(spec),
+                     e.catalog._branch_path(spec, "b")]
+            before = [_parquet_files(p) for p in paths]
+            heads = (e.catalog._committed_seq(spec),
+                     e.catalog._branch_head(spec, "b"))
+            del local_writes[:]
+            e.sql(stmt.format(t="bz"))
+            e.sql(stmt.format(t="bz$branch('b')"))
+            assert len(local_writes) == (2 if local else 0)
+            traces.append((
+                [_parquet_files(p) - b for p, b in zip(paths, before)],
+                e.catalog._committed_seq(spec) - heads[0],
+                e.catalog._branch_head(spec, "b") - heads[1],
+                _state(e, "SELECT k, v FROM bz$branch('b')"),
+            ))
+    assert traces[0] == traces[1] == (
+        [set(), set()], 1, 1, [(1, 10), (2, 20)])

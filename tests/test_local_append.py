@@ -1,17 +1,23 @@
 """Driver-local append fast path (r12 optimization): literal VALUES
-inserts, point tombstones, and small matview refresh deltas write ONE
-pyarrow parquet file from the driver instead of running a Spark write
-job.  These tests pin (a) that the fast path actually engages (zero
+inserts, point tombstones, and small matview refresh deltas write one
+pyarrow parquet file per touched bucket from the driver instead of
+running a Spark write job.  These tests pin (a) that the fast path actually engages (zero
 write jobs, '-local' file names), and (b) byte-level state equivalence
 with the distributed writer across upserts, deletes, time travel,
 changelog reads, CHECK constraints, and matview refresh outcomes."""
 
 import os
 
+import pyarrow.parquet as pq
 import pytest
+from pyspark.sql import functions as F
 
 from fluss_datafusion_spark import EngineSession
-from fluss_datafusion_spark.catalog.catalog import FlussCatalog
+from fluss_datafusion_spark.catalog.catalog import (
+    FlussCatalog,
+    bucket_id,
+    bucket_id_expr,
+)
 
 
 @pytest.fixture()
@@ -21,10 +27,13 @@ def engine(spark, tmp_path):
 
 
 def _local_files(e, name):
+    """Driver-written part files of ``name``, relative to the table dir
+    (``__bkt__=<b>/`` sub-dirs included)."""
     tp = e.catalog.table_path(e.catalog.get_table(name))
     return [
-        f
-        for f in os.listdir(tp)
+        os.path.relpath(os.path.join(root, f), tp)
+        for root, _dirs, files in os.walk(tp)
+        for f in files
         if f.endswith(".parquet") and "-local" in f
     ]
 
@@ -135,19 +144,105 @@ def test_branch_values_insert_local(engine):
         (1, "main")]
 
 
-def test_bucketed_and_partitioned_fall_back(engine):
+def test_bucketed_values_insert_lands_in_its_bucket(engine, spark):
+    """A bucketed table takes the driver-local path: one file per
+    touched bucket, each under the ``__bkt__`` dir that bucket_id_expr
+    assigns to its rows, with no __bkt__ column inside the file."""
     e = engine
     e.sql("CREATE TABLE lf (k BIGINT NOT NULL, v STRING, PRIMARY KEY (k))"
           " DISTRIBUTED BY (k) INTO 4 BUCKETS")
-    e.sql("INSERT INTO lf VALUES (1, 'a'), (2, 'b')")
-    assert _local_files(e, "lf") == []  # bucket layout keeps Spark writer
-    assert e.catalog.lookup("lf", 2).collect()[0]["v"] == "b"
+    e.sql("INSERT INTO lf VALUES " + ", ".join(
+        f"({k}, 'v{k}')" for k in range(12)))
+    spec = e.catalog.get_table("lf")
+    tp = e.catalog.table_path(spec)
+    files = _local_files(e, "lf")
+    assert files and all(f.startswith("__bkt__=") for f in files)
+    assert len(files) == len({os.path.dirname(f) for f in files})
+    placed = {}
+    for f in files:
+        table = pq.read_table(os.path.join(tp, f))
+        assert "__bkt__" not in table.column_names
+        for k in table.column("k").to_pylist():
+            placed[k] = int(os.path.dirname(f).split("=")[1])
+    want = {
+        r["k"]: r["b"]
+        for r in spark.range(12).select(
+            F.col("id").alias("k"), bucket_id_expr(spec, F.col("id")).alias("b")
+        ).collect()
+    }
+    assert placed == want
+    assert e.catalog.lookup("lf", 2).collect()[0]["v"] == "v2"
+
+
+def test_partitioned_falls_back(engine):
+    e = engine
     e.sql("CREATE TABLE lp (k BIGINT NOT NULL, p STRING, PRIMARY KEY (k))"
           " PARTITIONED BY (p)")
     e.sql("INSERT INTO lp VALUES (1, 'x')")
-    assert _local_files(e, "lp") == []
+    assert _local_files(e, "lp") == []  # Hive dir naming stays with Spark
     assert [tuple(r) for r in e.sql("SELECT * FROM lp").collect()] == [
         (1, "x")]
+
+
+def test_failed_rename_leaves_table_and_store_readable(
+    engine, spark, tmp_path, monkeypatch
+):
+    """A failure between a driver-local parquet write and its rename
+    leaves no visible part file and no temp file, also when another
+    file of the same write was already renamed into place: the table
+    and both Hamming stores read exactly as before."""
+    from fluss_datafusion_spark.catalog.catalog import _parquet_files
+    from fluss_datafusion_spark.operators import incremental as inc
+
+    e = engine
+    e.sql("CREATE TABLE lr (k BIGINT NOT NULL, v STRING, PRIMARY KEY (k))"
+          " DISTRIBUTED BY (k) INTO 4 BUCKETS")
+    e.sql("INSERT INTO lr VALUES (1, 'a'), (2, 'b')")
+    idx = str(tmp_path / "hidx")
+    inc.write_hamming_index(
+        spark.createDataFrame([(i, i * 7919) for i in range(20)],
+                              "media_id long, dhash long"),
+        "media_id", "dhash", idx,
+    )
+    tp = e.catalog.table_path(e.catalog.get_table("lr"))
+    stores = [os.path.join(idx, s) for s in ("buckets", "hashes")]
+    before = {p: _parquet_files(p) for p in [tp] + stores}
+    rows_before = {p: spark.read.parquet(p).count() for p in stores}
+
+    spec = e.catalog.get_table("lr")
+    assert len({bucket_id(spec, {"k": k}) for k in (3, 4, 5)}) > 1
+    real_replace = os.replace
+    renames = []
+
+    def failing_replace(src, dst, *a, **k):
+        # every second part-file rename fails: the first file of each
+        # write is already in place and must be taken back
+        if str(dst).endswith(".parquet"):
+            renames.append(dst)
+            if len(renames) % 2 == 0:
+                raise OSError("injected failure before rename")
+        return real_replace(src, dst, *a, **k)
+
+    monkeypatch.setattr(os, "replace", failing_replace)
+    with pytest.raises(OSError, match="injected"):
+        e.sql("INSERT INTO lr VALUES (3, 'c'), (4, 'd'), (5, 'e')")
+    batch = spark.createDataFrame([(100, 5), (101, 6)],
+                                  "media_id long, dhash long")
+    assert inc._local_append_hamming(
+        batch, "media_id", "dhash", idx, 4, 1) is False
+    monkeypatch.setattr(os, "replace", real_replace)
+    assert len(renames) == 4
+
+    for p in [tp] + stores:
+        assert _parquet_files(p) == before[p], p
+        leftovers = [
+            f for _r, _d, fs in os.walk(p) for f in fs if f.endswith(".tmp")
+        ]
+        assert leftovers == [], p
+    assert [tuple(r) for r in e.sql(
+        "SELECT * FROM lr ORDER BY k").collect()] == [(1, "a"), (2, "b")]
+    for p in stores:
+        assert spark.read.parquet(p).count() == rows_before[p], p
 
 
 def test_matview_local_refresh_parity(engine, monkeypatch, spark, tmp_path):
