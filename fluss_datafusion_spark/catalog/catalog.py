@@ -27,6 +27,7 @@ Spark-first design, 100 TB posture:
 
 from __future__ import annotations
 
+import contextlib
 import os
 import re
 import shutil
@@ -276,23 +277,16 @@ class FlussCatalog:
         # lets refresh_views notice OTHER sessions' writes to a shared
         # warehouse (one stat() per bound table per read boundary)
         self._view_bound_stamp: Dict[str, int] = {}
-        # qname -> token for maintenance markers THIS session holds
-        # (two sessions in one process must not mistake each other's
-        # marker for their own, so identity is per-catalog, not per-pid)
-        self._maint_tokens: Dict[str, str] = {}
-        # (table, branch) -> token of a fast_forward publish this
-        # session holds (see the branch publish exclusion section)
-        self._publish_tokens: Dict[tuple, str] = {}
+        # marker path -> (token, thread ident) for every marker lock
+        # THIS session holds (_marker_lock).  Two sessions in one
+        # process must not mistake each other's marker for their own,
+        # so identity is per-catalog, not per-pid
+        self._held_markers: Dict[str, tuple] = {}
         # qname -> mtime_ns of the spec file as loaded: the cheap gate
         # for cross-session spec reloads (_reload_spec_if_moved)
         self._spec_stamp: Dict[str, int] = {}
         # db -> db-directory mtime_ns at the last new-table discovery
         self._db_dir_stamp: Dict[str, int] = {}
-        # qname -> re-entrancy depth of the spec-mutation lock THIS
-        # session holds (_spec_mutation): nested DDL helpers (e.g.
-        # _refork_branch under cherry_pick) re-enter instead of
-        # deadlocking on their own marker
-        self._spec_lock_depth: Dict[str, int] = {}
         self._attach_existing()
 
     # -- persistence --------------------------------------------------------
@@ -359,19 +353,18 @@ class FlussCatalog:
         self._stale_views.add(qname)
         return fresh
 
+    @contextlib.contextmanager
     def _spec_mutation(self, spec: TableSpec):
         """CAS window for a spec read-modify-write (ADVICE r9, medium):
         ``_save_spec`` alone is last-writer-wins, so two sessions doing
         concurrent ref DDL (CREATE TAG in A while B runs CREATE BRANCH)
         would silently drop one side's committed metadata.  This
-        serializes the window through the locking seam — acquire the
-        table's ``_spec.lock`` (put-if-absent; mtime-staleness reap for
-        crashed owners, same scheme as the maintenance marker), then
-        RELOAD the spec if another session moved it, and yield the
-        fresh object for the caller to mutate and save.
+        serializes the window through the table's ``_spec.lock`` marker
+        (_marker_lock), then RELOADS the spec if another session moved
+        it, and yields the fresh object for the caller to mutate and
+        save.
 
-        Re-entrant per THREAD+table (``_spec_lock_depth`` keys by
-        ``(thread ident, qname)`` — ADVICE r10: qname-only keying made
+        Re-entrant per THREAD+table (ADVICE r10: qname-only keying made
         the lock non-exclusive across threads of one session, so a
         catalog mutation on a ``_parallel_writes`` worker thread could
         silently "re-enter" the main thread's window): nested helpers
@@ -381,94 +374,22 @@ class FlussCatalog:
         that also hold the branch publish lock always take publish ->
         spec, and no path takes spec -> publish, so the pair cannot
         deadlock."""
-        import contextlib
-        import json
-        import threading
-        import time
-
-        @contextlib.contextmanager
-        def _locked():
-            qname = spec.qualified_name
-            depth_key = (threading.get_ident(), qname)
-            depth = self._spec_lock_depth.get(depth_key, 0)
-            if depth:
-                self._spec_lock_depth[depth_key] = depth + 1
-                try:
-                    yield self.databases[spec.database][spec.name]
-                finally:
-                    self._spec_lock_depth[depth_key] -= 1
-                return
-            # SIBLING of the table directory (like the maintenance
-            # marker): maintenance dir-swaps replace the table dir
-            # while HOLDING this lock — a lock stored inside would be
-            # destroyed mid-hold, silently unblocking other sessions
-            path = self.table_path(spec)
-            marker = os.path.join(
-                os.path.dirname(path),
-                f".{os.path.basename(path)}.spec.lock",
+        # SIBLING of the table directory (like the maintenance marker):
+        # maintenance dir-swaps replace the table dir while HOLDING this
+        # lock — a lock stored inside would be destroyed mid-hold,
+        # silently unblocking other sessions
+        path = self.table_path(spec)
+        marker = os.path.join(
+            os.path.dirname(path), f".{os.path.basename(path)}.spec.lock"
+        )
+        with self._marker_lock(
+            marker, f"DDL on {spec.qualified_name}", reentrant=True
+        ) as outermost:
+            yield (
+                self._reload_spec_if_moved(spec)
+                if outermost
+                else self.databases[spec.database][spec.name]
             )
-            payload = json.dumps(
-                {"pid": os.getpid(), "ts": time.time()}
-            ).encode()
-            deadline = time.time() + self.MAINT_WAIT_SECS
-            while not self.locking.put_if_absent(marker, payload):
-                # deadline first, before ANY per-branch handling: a
-                # marker repeatedly created/deleted (or reaped and
-                # re-taken) by other sessions would otherwise keep this
-                # waiter spinning through the `continue` branches
-                # forever (ADVICE r10)
-                if time.time() > deadline:
-                    raise ConcurrentWriteConflict(
-                        f"another session holds the spec lock on "
-                        f"{qname}; retry the DDL statement"
-                    )
-                mtime = self.locking.stat_mtime(marker)
-                if mtime is None:
-                    continue  # released between our put and stat: retry
-                if time.time() - mtime > self.MAINT_STALE_SECS and (
-                    self._owner_alive(marker) is not True
-                ):
-                    self.locking.delete(marker)  # crashed owner: reap
-                    continue
-                time.sleep(0.01)
-            self._spec_lock_depth[depth_key] = 1
-            # Heartbeat the marker for the whole window (r12, VERDICT
-            # r11 item 6 — the publish-marker treatment): most windows
-            # are millisecond DDL saves, but maintenance dir-swaps ride
-            # this lock too, and on a liveness-unknown backend (owner
-            # pid unresolvable) a swap outliving MAINT_STALE_SECS would
-            # have its LIVE marker reaped, letting a concurrent DDL be
-            # clobbered by our re-save.  touch() keeps the mtime fresh;
-            # the thread parks on the Event and fires only for holds
-            # that actually run long.
-            stop_beat = threading.Event()
-            beater = None
-            touch = getattr(self.locking, "touch", None)
-            if touch is not None:
-
-                def _beat():
-                    while not stop_beat.wait(self.PUBLISH_HEARTBEAT_SECS):
-                        try:
-                            touch(marker)
-                        except Exception:
-                            pass  # transient storage error: next beat
-
-                beater = threading.Thread(
-                    target=_beat,
-                    daemon=True,
-                    name=f"spec-heartbeat-{qname}",
-                )
-                beater.start()
-            try:
-                yield self._reload_spec_if_moved(spec)
-            finally:
-                self._spec_lock_depth.pop(depth_key, None)
-                stop_beat.set()
-                if beater is not None:
-                    beater.join(timeout=1.0)
-                self.locking.delete(marker)
-
-        return _locked()
 
     def _attach_existing(self) -> None:
         """Re-attach every table persisted under the warehouse: a new
@@ -839,8 +760,9 @@ class FlussCatalog:
         protocol)."""
         fork = int(self._branch_info(spec, branch)["fork_seq"])
         d = self._branch_commit_dir(spec, branch)
+        marker = self._branch_publish_marker(spec, branch)
         while True:
-            self._wait_no_branch_publish(spec, branch)
+            self._wait_marker_clear(marker)
             os.makedirs(d, exist_ok=True)
             taken = [fork]
             # through the seam: an in-flight reservation may exist only
@@ -865,10 +787,8 @@ class FlussCatalog:
                 # Dekker re-check: if a publish grabbed its marker
                 # before seeing our reservation, we yield — release and
                 # re-wait (nothing was written yet)
-                if self._branch_publish_inflight(spec, branch):
-                    self.locking.delete(
-                        os.path.join(d, f"{n:010d}.inflight")
-                    )
+                if self._marker_up(marker):
+                    self._release_seqs(spec, [n], branch=branch)
                     continue
                 return n
 
@@ -898,169 +818,14 @@ class FlussCatalog:
             self._branch_root(spec), f".{branch}.publish.inflight"
         )
 
-    def _branch_publish_inflight(self, spec: TableSpec, branch: str) -> bool:
-        """True iff ANOTHER session holds a fresh publish marker on this
-        branch (own markers and provably-dead leftovers don't count)."""
-        import json
-        import time
-
-        marker = self._branch_publish_marker(spec, branch)
-        mtime = self.locking.stat_mtime(marker)
-        if mtime is None:
-            return False
-        token = self._publish_tokens.get(
-            (spec.qualified_name, branch)
-        )
-        if token is not None:
-            try:
-                raw = self.locking.read(marker)
-                if raw is not None and json.loads(raw).get("token") == token:
-                    return False
-            except Exception:
-                pass
-        if time.time() - mtime > self.MAINT_STALE_SECS:
-            if self._owner_alive(marker) is True:
-                return True
-            self.locking.delete(marker)
-            return False
-        return True
-
-    def _wait_no_branch_publish(self, spec: TableSpec, branch: str) -> None:
-        import time
-
-        deadline = time.time() + self.MAINT_WAIT_SECS
-        while self._branch_publish_inflight(spec, branch):
-            if time.time() > deadline:
-                raise ConcurrentWriteConflict(
-                    f"FAST FORWARD of branch {branch!r} on "
-                    f"{spec.qualified_name} has held its marker for over "
-                    f"{self.MAINT_WAIT_SECS:.0f}s; nothing was written — "
-                    f"re-run the statement"
-                )
-            time.sleep(0.02)
-
     def _branch_publish_lock(self, spec: TableSpec, branch: str):
         """Exclusive publish window on one branch: acquire the marker,
         then wait for in-flight branch seq reservations to drain."""
-        import contextlib
-        import json
-        import time
-        import uuid
-
-        @contextlib.contextmanager
-        def _lock():
-            d = self._branch_commit_dir(spec, branch)
-            os.makedirs(d, exist_ok=True)
-            marker = self._branch_publish_marker(spec, branch)
-            token = uuid.uuid4().hex
-            lock_key = (spec.qualified_name, branch)
-            deadline = time.time() + self.MAINT_WAIT_SECS
-            while True:
-                if self.locking.put_if_absent(
-                    marker,
-                    json.dumps(
-                        {"token": token, "pid": os.getpid(),
-                         "ts": time.time()}
-                    ).encode(),
-                ):
-                    break
-                if not self._branch_publish_inflight(spec, branch):
-                    if self._publish_tokens.get(lock_key) is not None:
-                        raise ConcurrentWriteConflict(
-                            f"FAST FORWARD already in progress on "
-                            f"branch {branch!r} of "
-                            f"{spec.qualified_name} in this session"
-                        )
-                    continue  # stale marker reaped: retry the create
-                if time.time() > deadline:
-                    raise ConcurrentWriteConflict(
-                        f"another session is publishing branch "
-                        f"{branch!r} of {spec.qualified_name}; retry "
-                        f"later"
-                    )
-                time.sleep(0.02)
-            self._publish_tokens[lock_key] = token
-            # Heartbeat the marker for the whole publish window (ADVICE
-            # r9): a cherry-pick whose Spark rewrite outruns
-            # MAINT_STALE_SECS on a liveness-unknown backend would
-            # otherwise have its LIVE marker reaped mid-re-fork, letting
-            # a branch writer land rows that the rmtree then destroys.
-            import threading
-
-            stop_beat = threading.Event()
-            touch = getattr(self.locking, "touch", None)
-
-            def _heartbeat():
-                while not stop_beat.wait(self.PUBLISH_HEARTBEAT_SECS):
-                    try:
-                        touch(marker)
-                    except Exception:
-                        pass  # transient storage error: next beat retries
-
-            beater = None
-            if touch is not None:
-                beater = threading.Thread(
-                    target=_heartbeat,
-                    daemon=True,
-                    name=f"publish-heartbeat-{branch}",
-                )
-                beater.start()
-            try:
-                drain_deadline = time.time() + self.MAINT_WAIT_SECS
-                while True:
-                    pending = []
-                    now = time.time()
-                    for f in self.locking.list_names(d):
-                        if not f.endswith(".inflight"):
-                            continue
-                        mt = self.locking.stat_mtime(os.path.join(d, f))
-                        if mt is None:
-                            continue
-                        if now - mt <= self.MAINT_STALE_SECS:
-                            pending.append(f)
-                        elif self._owner_alive(os.path.join(d, f)) is True:
-                            pending.append(f)
-                    if not pending:
-                        break
-                    if time.time() > drain_deadline:
-                        raise ConcurrentWriteConflict(
-                            f"branch writer reservations "
-                            f"{sorted(pending)} on {branch!r} of "
-                            f"{spec.qualified_name} did not finalize; "
-                            f"FAST FORWARD aborted cleanly"
-                        )
-                    time.sleep(0.02)
-                yield
-            finally:
-                stop_beat.set()
-                if beater is not None:
-                    beater.join(timeout=1.0)
-                self._publish_tokens.pop(lock_key, None)
-                self.locking.delete(marker)
-
-        return _lock()
-
-    def _record_branch_commit(
-        self, spec: TableSpec, branch: str, seq: int
-    ) -> None:
-        import json
-        import time
-
-        try:
-            d = self._branch_commit_dir(spec, branch)
-            os.makedirs(d, exist_ok=True)
-            final = os.path.join(d, f"{int(seq):010d}.json")
-            tmp = f"{final}.{os.getpid()}.tmp"
-            with open(tmp, "w") as fh:
-                json.dump({"ts": time.time()}, fh)
-            os.replace(tmp, final)
-            # through the seam: the reservation may live only in the
-            # locking backend's namespace
-            self.locking.delete(
-                os.path.join(d, f"{int(seq):010d}.inflight")
-            )
-        except Exception:
-            pass
+        return self._marker_lock(
+            self._branch_publish_marker(spec, branch),
+            f"the publish of branch {branch!r} of {spec.qualified_name}",
+            drain_dir=self._branch_commit_dir(spec, branch),
+        )
 
     def create_branch(
         self, name: str, branch: str, seq: Optional[int] = None
@@ -1915,14 +1680,13 @@ class FlussCatalog:
         contract), then future writes enforce it.
 
         The validation scan runs BEFORE the spec lock is taken (ADVICE
-        r10): the spec marker has no heartbeat, so a table-sized scan
-        held inside the window could outlive MAINT_STALE_SECS on a
-        liveness-unknown backend, get reaped, and let a concurrent DDL
-        be clobbered by our _save_spec.  Only the name re-check and the
-        save sit inside the window — spec-vs-spec races stay excluded,
-        and the scan-vs-concurrent-insert race is unchanged (data
-        writes never held the spec lock; enforcement starts when the
-        saved spec is visible, exactly as before)."""
+        r10): a table-sized scan inside the window would hold off every
+        other session's DDL on the table for its whole length.  Only
+        the name re-check and the save sit inside the window —
+        spec-vs-spec races stay excluded, and the
+        scan-vs-concurrent-insert race is unchanged (data writes never
+        held the spec lock; enforcement starts when the saved spec is
+        visible, exactly as before)."""
         spec0 = self.get_table(name)
         if cname in spec0.check_constraints:
             raise ValueError(f"constraint already exists: {cname}")
@@ -2359,13 +2123,14 @@ class FlussCatalog:
         # check below could recreate the table root mid-_swap_dir (the
         # swap's second rename then fails ENOTEMPTY and the table is
         # stranded at path+'.old').  The in-loop makedirs — which runs
-        # only after _wait_no_maintenance — covers recreation.
+        # only after _wait_marker_clear — covers recreation.
         base = self._current_seq(spec)
         legacy = max(self._legacy_commits(spec), default=0)
+        marker = self._maint_marker_path(spec)
         while True:
             # OPTIMIZE/COMPACT exclusion (see the maintenance section):
             # don't allocate while a foreign maintenance marker is up
-            self._wait_no_maintenance(spec)
+            self._wait_marker_clear(marker)
             # a completed swap leaves the fresh table dir without
             # _commits/ — recreate it only AFTER the marker check (a
             # makedirs during the swap's brief dir-absent window would
@@ -2409,24 +2174,28 @@ class FlussCatalog:
                 # created them will now see them and wait for us; if the
                 # marker landed FIRST, we must be the one to yield —
                 # release and re-wait (nothing was written yet).
-                if self._maintenance_inflight(spec):
-                    for n in got:
-                        self.locking.delete(
-                            os.path.join(d, f"{n:010d}.inflight")
-                        )
+                if self._marker_up(marker):
+                    self._release_seqs(spec, got)
                     base = self._current_seq(spec)
                     continue
                 self._seq[key] = got[-1]
                 return got
-            for n in got:  # lost the race mid-range: release and retry
-                self.locking.delete(os.path.join(d, f"{n:010d}.inflight"))
+            self._release_seqs(spec, got)  # lost the race mid-range: retry
             base = start + len(got)
 
-    def _release_seqs(self, spec: TableSpec, seqs: List[int]) -> None:
+    def _release_seqs(
+        self, spec: TableSpec, seqs: List[int], branch: Optional[str] = None
+    ) -> None:
         """Drop unused reservations (a statement aborted between reserve
-        and append) — the seqs become gaps another writer may not reuse
-        this instant but the history stays monotone either way."""
-        d = self._commit_dir(spec)
+        and append) from the main or the branch commit dir — the seqs
+        become gaps another writer may not reuse this instant but the
+        history stays monotone either way.  A seq already recorded has
+        no reservation left, so releasing it again deletes nothing."""
+        d = (
+            self._branch_commit_dir(spec, branch)
+            if branch is not None
+            else self._commit_dir(spec)
+        )
         for n in seqs:
             self.locking.delete(os.path.join(d, f"{int(n):010d}.inflight"))
 
@@ -2458,14 +2227,19 @@ class FlussCatalog:
     # what a local-fs warehouse has).  A compaction or append job that
     # legitimately runs past the stale window therefore keeps its
     # marker/reservation — age alone never reaps a live owner's file.
+    #
+    # The maintenance marker, the branch publish marker and the spec
+    # lock are one primitive, _marker_lock: put-if-absent acquire,
+    # stale reap, a heartbeat for the whole hold, and (maintenance,
+    # publish) the drain of the reservations the marker excludes.
 
     MAINT_MARKER = "maintenance.inflight"
     MAINT_STALE_SECS = 600.0
     MAINT_WAIT_SECS = 60.0
-    # Heartbeat period for long-held publish markers: on backends where
-    # owner liveness is unknowable (object stores), staleness alone
-    # reaps — so the holder must keep its marker's mtime fresh.  5x
-    # headroom inside the stale window tolerates several missed beats.
+    # Heartbeat period for every held marker: on backends where owner
+    # liveness is unknowable (object stores), staleness alone reaps —
+    # so the holder must keep its marker's mtime fresh.  5x headroom
+    # inside the stale window tolerates several missed beats.
     PUBLISH_HEARTBEAT_SECS = MAINT_STALE_SECS / 5.0
 
     def _maint_marker_path(self, spec: TableSpec) -> str:
@@ -2507,49 +2281,161 @@ class FlussCatalog:
             return None
         return self.locking.owner_alive(pid)
 
-    def _maintenance_inflight(self, spec: TableSpec) -> bool:
-        """True iff ANOTHER session holds a fresh maintenance marker on
-        this table (own markers and stale leftovers don't count)."""
+    def _marker_up(self, marker: str) -> bool:
+        """True iff a marker this session does not hold is up at
+        ``marker``.  A marker older than MAINT_STALE_SECS whose owner is
+        not provably alive is reaped (crashed holder) and does not
+        count; age alone never reaps a live owner's marker."""
         import json
         import time
 
-        marker = self._maint_marker_path(spec)
         mtime = self.locking.stat_mtime(marker)
         if mtime is None:
             return False
-        token = self._maint_tokens.get(spec.qualified_name)
-        if token is not None:
+        held = self._held_markers.get(marker)
+        if held is not None:
             try:
                 raw = self.locking.read(marker)
-                if raw is not None and json.loads(raw).get("token") == token:
+                if raw is not None and json.loads(raw).get("token") == held[0]:
                     return False
             except Exception:
                 pass
         if time.time() - mtime > self.MAINT_STALE_SECS:
             if self._owner_alive(marker) is True:
-                # a long-running but live maintenance (big compaction):
-                # age alone must not unblock writers under its swap
+                # a long-running but live holder (big compaction): age
+                # alone must not unblock writers under its swap
                 return True
-            # crashed maintenance: reap so writers unblock
-            self.locking.delete(marker)
+            self.locking.delete(marker)  # crashed holder: reap
             return False
         return True
 
-    def _wait_no_maintenance(self, spec: TableSpec) -> None:
-        """Writer side: block until no foreign maintenance marker is
-        present (bounded; maintenance windows are seconds)."""
+    def _wait_marker_clear(self, marker: str) -> None:
+        """Writer side: block until no foreign marker is up at
+        ``marker`` (bounded; marker windows are seconds)."""
         import time
 
         deadline = time.time() + self.MAINT_WAIT_SECS
-        while self._maintenance_inflight(spec):
+        while self._marker_up(marker):
             if time.time() > deadline:
                 raise ConcurrentWriteConflict(
-                    f"maintenance (OPTIMIZE/COMPACT) on "
-                    f"{spec.qualified_name} has held its marker for over "
-                    f"{self.MAINT_WAIT_SECS:.0f}s; nothing was written — "
-                    f"re-run the statement"
+                    f"another session's {os.path.basename(marker)} marker "
+                    f"has been up for over {self.MAINT_WAIT_SECS:.0f}s; "
+                    f"nothing was written — re-run the statement"
                 )
             time.sleep(0.02)
+
+    @contextlib.contextmanager
+    def _marker_lock(
+        self,
+        marker: str,
+        what: str,
+        drain_dir: Optional[str] = None,
+        reentrant: bool = False,
+    ):
+        """Hold the marker at ``marker`` exclusively; ``what`` names the
+        guarded operation in conflict errors.
+
+        Acquire by put-if-absent of ``{"token", "pid", "ts"}``, reaping
+        a crashed holder's marker (_marker_up), until MAINT_WAIT_SECS
+        runs out — the deadline is checked first, so a marker that
+        other sessions keep re-taking cannot spin a waiter forever.
+        While held, a heartbeat thread touches the marker every
+        PUBLISH_HEARTBEAT_SECS, so a hold that outlives MAINT_STALE_SECS
+        on a liveness-unknown backend is never reaped.  With
+        ``drain_dir``, wait for the fresh or live-owner ``<seq>.inflight``
+        reservations in it to finalize before yielding (writers that
+        reserve after the marker landed see it and yield).
+
+        A second acquire by this session raises ConcurrentWriteConflict,
+        except with ``reentrant``: the holding thread re-enters (the
+        context yields False instead of True) and another thread of
+        this session contends like any other session."""
+        import json
+        import threading
+        import time
+        import uuid
+
+        me = threading.get_ident()
+        held = self._held_markers.get(marker)
+        if reentrant and held is not None and held[1] == me:
+            yield False  # the outer hold releases
+            return
+        if drain_dir is not None:
+            os.makedirs(drain_dir, exist_ok=True)
+        token = uuid.uuid4().hex
+        payload = json.dumps(
+            {"token": token, "pid": os.getpid(), "ts": time.time()}
+        ).encode()
+        deadline = time.time() + self.MAINT_WAIT_SECS
+        while not self.locking.put_if_absent(marker, payload):
+            if time.time() > deadline:
+                raise ConcurrentWriteConflict(
+                    f"{what} is in progress in another session; retry "
+                    f"the statement"
+                )
+            if self._marker_up(marker):
+                time.sleep(0.02)
+            elif marker in self._held_markers:
+                if not reentrant:
+                    raise ConcurrentWriteConflict(
+                        f"{what} is already in progress in this session"
+                    )
+                time.sleep(0.02)  # another thread of this session holds it
+            # else released or reaped since the put: retry at once
+        self._held_markers[marker] = (token, me)
+        stop_beat = threading.Event()
+        beater = None
+        touch = getattr(self.locking, "touch", None)
+        if touch is not None:
+
+            def _beat():
+                while not stop_beat.wait(self.PUBLISH_HEARTBEAT_SECS):
+                    try:
+                        touch(marker)
+                    except Exception:
+                        pass  # transient storage error: next beat retries
+
+            beater = threading.Thread(
+                target=_beat,
+                daemon=True,
+                name=f"heartbeat-{os.path.basename(marker)}",
+            )
+            beater.start()
+        try:
+            drain_deadline = time.time() + self.MAINT_WAIT_SECS
+            while drain_dir is not None:
+                pending = []
+                now = time.time()
+                for f in self.locking.list_names(drain_dir):
+                    stem, _, ext = f.partition(".")
+                    if not (stem.isdigit() and ext == "inflight"):
+                        continue
+                    res = os.path.join(drain_dir, f)
+                    mt = self.locking.stat_mtime(res)
+                    if mt is None:
+                        continue  # finalized between list and stat
+                    if now - mt <= self.MAINT_STALE_SECS:
+                        pending.append(f)
+                    elif self._owner_alive(res) is True:
+                        # a write legitimately running past the stale
+                        # window: going ahead under it would drop its
+                        # rows — keep waiting on it
+                        pending.append(f)
+                if not pending:
+                    break
+                if time.time() > drain_deadline:
+                    raise ConcurrentWriteConflict(
+                        f"writer reservations {sorted(pending)} did not "
+                        f"finalize; {what} aborted cleanly"
+                    )
+                time.sleep(0.02)
+            yield True
+        finally:
+            self._held_markers.pop(marker, None)
+            stop_beat.set()
+            if beater is not None:
+                beater.join(timeout=1.0)
+            self.locking.delete(marker)
 
     def _maintenance_lock(self, spec: TableSpec):
         """Exclusive maintenance window: acquire the marker, then wait
@@ -2557,91 +2443,25 @@ class FlussCatalog:
         ConcurrentWriteConflict (taking nothing) if another maintenance
         holds the marker past the deadline or a reservation never
         drains."""
-        import contextlib
-        import json
-        import time
-        import uuid
-
-        @contextlib.contextmanager
-        def _lock():
-            d = self._commit_dir(spec)
-            os.makedirs(d, exist_ok=True)
-            marker = self._maint_marker_path(spec)
-            token = uuid.uuid4().hex
-            deadline = time.time() + self.MAINT_WAIT_SECS
-            while True:
-                if self.locking.put_if_absent(
-                    marker,
-                    json.dumps(
-                        {"token": token, "pid": os.getpid(),
-                         "ts": time.time()}
-                    ).encode(),
-                ):
-                    break
-                else:
-                    # stale-reap happens inside _maintenance_inflight
-                    if not self._maintenance_inflight(spec):
-                        held = self._maint_tokens.get(spec.qualified_name)
-                        if held is not None:
-                            raise ConcurrentWriteConflict(
-                                f"maintenance already in progress on "
-                                f"{spec.qualified_name} in this session"
-                            )
-                        continue  # stale marker reaped: retry the create
-                    if time.time() > deadline:
-                        raise ConcurrentWriteConflict(
-                            f"another session is running maintenance on "
-                            f"{spec.qualified_name}; retry later"
-                        )
-                    time.sleep(0.02)
-            self._maint_tokens[spec.qualified_name] = token
-            try:
-                # wait for writer reservations to drain (stale ones —
-                # crashed writers — are ignored past MAINT_STALE_SECS)
-                drain_deadline = time.time() + self.MAINT_WAIT_SECS
-                while True:
-                    pending = []
-                    now = time.time()
-                    for f in self.locking.list_names(d):
-                        if not f.endswith(".inflight"):
-                            continue
-                        if f == self.MAINT_MARKER:
-                            continue
-                        mt = self.locking.stat_mtime(os.path.join(d, f))
-                        if mt is None:
-                            continue  # finalized between list and stat
-                        age = now - mt
-                        if age <= self.MAINT_STALE_SECS:
-                            pending.append(f)
-                        elif self._owner_alive(os.path.join(d, f)) is True:
-                            # an append job legitimately running past the
-                            # stale window: swapping under it would drop
-                            # its rows — keep waiting on it
-                            pending.append(f)
-                    if not pending:
-                        break
-                    if time.time() > drain_deadline:
-                        raise ConcurrentWriteConflict(
-                            f"writer reservations {sorted(pending)} on "
-                            f"{spec.qualified_name} did not finalize; "
-                            f"maintenance aborted cleanly"
-                        )
-                    time.sleep(0.02)
-                yield
-            finally:
-                self._maint_tokens.pop(spec.qualified_name, None)
-                self.locking.delete(marker)
-
-        return _lock()
+        return self._marker_lock(
+            self._maint_marker_path(spec),
+            f"maintenance (OPTIMIZE/COMPACT) on {spec.qualified_name}",
+            drain_dir=self._commit_dir(spec),
+        )
 
     def _record_commit(
-        self, spec: TableSpec, seq: int, ts: Optional[float] = None
+        self,
+        spec: TableSpec,
+        seq: int,
+        ts: Optional[float] = None,
+        branch: Optional[str] = None,
     ) -> None:
-        """Finalize a reserved seq: write the per-seq commit file with
-        the wall-clock commit time (epoch seconds) and drop the
-        reservation.  Best effort like the stats harvest: a failure must
-        not fail the write — an unfinalized reservation still counts as
-        a taken seq, it just has no timestamp anchor.
+        """Finalize a reserved seq in the main (or ``branch``'s) commit
+        dir: write the per-seq commit file with the wall-clock commit
+        time (epoch seconds) and drop the reservation.  Best effort like
+        the stats harvest: a failure must not fail the write — an
+        unfinalized reservation still counts as a taken seq, it just has
+        no timestamp anchor.  Only the main dir is folded.
 
         ``ts``: carry an earlier commit time instead of now — fast_forward
         publishes branch statements under their ORIGINAL commit stamps so
@@ -2650,7 +2470,11 @@ class FlussCatalog:
         import time
 
         try:
-            d = self._commit_dir(spec)
+            d = (
+                self._branch_commit_dir(spec, branch)
+                if branch is not None
+                else self._commit_dir(spec)
+            )
             os.makedirs(d, exist_ok=True)
             final = os.path.join(d, f"{int(seq):010d}.json")
             tmp = f"{final}.{os.getpid()}.tmp"
@@ -2662,7 +2486,8 @@ class FlussCatalog:
             self.locking.delete(
                 os.path.join(d, f"{int(seq):010d}.inflight")
             )
-            self._maybe_fold_commits(spec)
+            if branch is None:
+                self._maybe_fold_commits(spec)
         except Exception:
             pass
 
@@ -3276,7 +3101,7 @@ class FlussCatalog:
                 spec = known[table]
                 if os.path.isdir(self.table_path(spec) + ".old"):
                     continue
-                if self._maintenance_inflight(spec):
+                if self._marker_up(self._maint_marker_path(spec)):
                     continue
                 known.pop(table)
                 qname = spec.qualified_name
@@ -3620,20 +3445,8 @@ class FlussCatalog:
                         f"rows written to {spec.qualified_name}"
                     )
         writer_df = aligned
-        seq = None
-        if spec.has_primary_key:
-            if reserved_seq is not None:
-                seq = reserved_seq
-            elif branch is not None:
-                # branch-local seq space: writers on the same branch
-                # contend among themselves via the branch commit dir;
-                # main-table maintenance never swaps the branch dir, so
-                # no marker wait is needed here
-                seq = self._branch_next_seq(
-                    spec, branch, expect_base=expect_base
-                )
-            else:
-                seq = self._next_seq(spec, expect_base=expect_base)
+        seq = self._stamp_seq(spec, reserved_seq, expect_base, branch)
+        if seq is not None:
             del_expr = (
                 F.col(deleted_col).cast("boolean")
                 if deleted_col is not None
@@ -3686,34 +3499,113 @@ class FlussCatalog:
         writer = writer_df.write.mode("append")
         if partition_cols:
             writer = writer.partitionBy(*partition_cols)
-        writer.parquet(path)
+        try:
+            writer.parquet(path)
+        except BaseException:
+            self._unwind_seq(
+                spec, seq, branch, bool(_parquet_files(path) - before)
+            )
+            raise
+        return self._finish_write(
+            spec, seq, branch, path, sorted(_parquet_files(path) - before)
+        )
+
+    @contextlib.contextmanager
+    def _releasing(
+        self, spec: TableSpec, seqs: List[int], branch: Optional[str] = None
+    ):
+        """Release a statement's own reservations if it raises before
+        using them.  A seq whose write already landed was recorded by
+        the writer (_unwind_seq, _finish_write), so releasing it again
+        deletes nothing."""
+        try:
+            yield
+        except BaseException:
+            self._release_seqs(spec, seqs, branch=branch)
+            raise
+
+    def _stamp_seq(
+        self,
+        spec: TableSpec,
+        reserved_seq: Optional[int],
+        expect_base: Optional[int],
+        branch: Optional[str],
+    ) -> Optional[int]:
+        """The ``__seq__`` a write stamps: the caller's reservation,
+        else a fresh one; None for a log table.  A branch write draws
+        from the branch-local seq space: writers on the same branch
+        contend among themselves via the branch commit dir, and
+        main-table maintenance never swaps the branch dir."""
+        if not spec.has_primary_key:
+            return None
+        if reserved_seq is not None:
+            return reserved_seq
+        if branch is not None:
+            return self._branch_next_seq(spec, branch, expect_base=expect_base)
+        return self._next_seq(spec, expect_base=expect_base)
+
+    def _unwind_seq(
+        self,
+        spec: TableSpec,
+        seq: Optional[int],
+        branch: Optional[str],
+        landed: bool,
+    ) -> None:
+        """The data write stamped with ``seq`` raised.  If some of its
+        files are visible (``landed``), readers already see the seq's
+        rows, so it is recorded and never handed out again; otherwise
+        the reservation is released — left behind, a live owner's
+        reservation would stall every later maintenance drain."""
+        if seq is None:
+            return
+        if landed:
+            self._record_commit(spec, seq, branch=branch)
+        else:
+            self._release_seqs(spec, [seq], branch=branch)
+
+    def _finish_write(
+        self,
+        spec: TableSpec,
+        seq: Optional[int],
+        branch: Optional[str],
+        path: str,
+        new_files: list,
+        rows: Optional[int] = None,
+        tombstones: int = 0,
+    ):
+        """Bookkeeping after a write landed ``new_files`` under
+        ``path``: view re-bind and write marker (main only), stats
+        harvest, then for a stamped write the commit record and the
+        auto-compaction policy.  Returns the write's file list — for a
+        stamped write a _CountedFiles carrying ``rows`` (default: the
+        footers' row count) and ``tombstones``."""
         if branch is None:
             # branch writes don't change the main view or its staleness
             self._register_view(spec)
             self._touch_write_marker(spec)
-        new_files = sorted(_parquet_files(path) - before)
         # incremental footer-stats (+ opt-in column bloom) harvest for
         # the skipping scan (never fails the write — see skipping.add_files)
         bloom_cols, bloom_fpp = self._bloom_config(spec)
         skipping.add_files(
             path, new_files, bloom_columns=bloom_cols, bloom_fpp=bloom_fpp
         )
-        if seq is not None:
-            # Maintenance (another session's OPTIMIZE/COMPACT) may swap
-            # these files away the instant the reservation finalizes,
-            # and auto-compaction may replace them; capture the write's
-            # row count from their footers FIRST — while the inflight
-            # reservation still excludes any dir swap — so callers'
-            # _footer_row_count still answers for the statement.
-            counted = _CountedFiles(new_files)
-            counted.precomputed_rows = _footer_row_count(list(new_files))
-            if branch is not None:
-                self._record_branch_commit(spec, branch, seq)
-            else:
-                self._record_commit(spec, seq)
-                self._maybe_auto_compact(spec, seq)
-            return counted
-        return new_files
+        if seq is None:
+            return new_files
+        # Maintenance (another session's OPTIMIZE/COMPACT) may swap
+        # these files away the instant the reservation finalizes, and
+        # auto-compaction may replace them; capture the write's row
+        # count FIRST — while the inflight reservation still excludes
+        # any dir swap — so callers' _footer_row_count still answers
+        # for the statement.
+        counted = _CountedFiles(new_files)
+        counted.precomputed_rows = (
+            _footer_row_count(list(new_files)) if rows is None else rows
+        )
+        counted.tombstone_rows = tombstones
+        self._record_commit(spec, seq, branch=branch)
+        if branch is None:
+            self._maybe_auto_compact(spec, seq)
+        return counted
 
     def _try_local_append(
         self,
@@ -3909,19 +3801,10 @@ class FlussCatalog:
             for i in range(n):
                 b = bucket_id(spec, {k: columns[k][i] for k in spec.bucket_keys})
                 parts.setdefault(os.path.join(path, f"{_BKT}={b}"), []).append(i)
-        seq = None
-        if spec.has_primary_key:
-            if reserved_seq is not None:
-                seq = reserved_seq
-            elif branch is not None:
-                seq = self._branch_next_seq(
-                    spec, branch, expect_base=expect_base
-                )
-            else:
-                seq = self._next_seq(spec, expect_base=expect_base)
         names = list(columns)
         stored = self._stored_names(spec, names)
         types = [_pa_type(spec.column(name).spark_type) for name in names]
+        seq = self._stamp_seq(spec, reserved_seq, expect_base, branch)
         new_files = []
         try:
             for dir_path, idx in sorted(parts.items()):
@@ -3929,7 +3812,7 @@ class FlussCatalog:
                     sname: pa.array([columns[name][i] for i in idx], type=t)
                     for name, sname, t in zip(names, stored, types)
                 }
-                if spec.has_primary_key:
+                if seq is not None:
                     arrays[_SEQ] = pa.array([seq] * len(idx), pa.int64())
                     arrays[_SUB] = pa.array(idx, pa.int64())
                     arrays[_DEL] = pa.array(
@@ -3945,29 +3828,19 @@ class FlussCatalog:
         except BaseException:
             # a failed statement leaves none of its bucket files behind
             for f in new_files:
-                os.remove(f)
+                with contextlib.suppress(OSError):
+                    os.remove(f)
+            self._unwind_seq(
+                spec, seq, branch, any(map(os.path.exists, new_files))
+            )
             raise
-        if branch is None:
-            self._register_view(spec)
-            self._touch_write_marker(spec)
-        bloom_cols, bloom_fpp = self._bloom_config(spec)
-        skipping.add_files(
-            path, new_files, bloom_columns=bloom_cols, bloom_fpp=bloom_fpp
-        )
-        if seq is not None:
-            counted = _CountedFiles(new_files)
-            counted.precomputed_rows = n
-            counted.tombstone_rows = (
+        return self._finish_write(
+            spec, seq, branch, path, new_files, rows=n,
+            tombstones=(
                 n if (deleted and del_flags is None)
                 else sum(1 for f in (del_flags or []) if f)
-            )
-            if branch is not None:
-                self._record_branch_commit(spec, branch, seq)
-            else:
-                self._record_commit(spec, seq)
-                self._maybe_auto_compact(spec, seq)
-            return counted
-        return new_files
+            ),
+        )
 
     def defer_auto_compact(self):
         """Context manager suspending policy compaction until exit.
@@ -4153,7 +4026,9 @@ class FlussCatalog:
         seq_restore, seq_delete = self._reserve_seqs(
             spec, 2, expect_base=base
         )
-        with self.defer_auto_compact():
+        with self._releasing(
+            spec, [seq_restore, seq_delete]
+        ), self.defer_auto_compact():
             restored = _footer_row_count(
                 self._append_log(
                     spec, old, deleted=False, reserved_seq=seq_restore,
@@ -4709,7 +4584,9 @@ class FlussCatalog:
             # path, but the direct local call bypasses it; reapplication
             # on fallback is idempotent (recomputed from source values).
             fused = self._apply_generated(spec, fused, flag)
-            with self.defer_auto_compact():
+            with self._releasing(
+                spec, [seq], branch
+            ), self.defer_auto_compact():
                 local = self._try_collect_local_append(
                     spec, fused, False, seq, None, flag, branch
                 ) if (

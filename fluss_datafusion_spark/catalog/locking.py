@@ -1,10 +1,11 @@
 """Put-if-absent locking primitives behind the commit protocol.
 
 The optimistic-concurrency machinery in ``catalog.py`` (per-seq writer
-reservations in ``<table>/_commits/``, the sibling maintenance marker,
-crash-reap by owner liveness) needs exactly four storage operations,
-all of which exist on every real object store — this seam is where a
-cloud backend slots in without touching the protocol:
+reservations in ``<table>/_commits/`` and the marker locks of
+``FlussCatalog._marker_lock``: maintenance, branch publish and spec
+markers, crash-reaped by owner liveness or age) needs seven storage
+operations, all of which exist on every real object store — this seam
+is where a cloud backend slots in without touching the protocol:
 
 ===================  =======================  ==========================
 operation            local fs (default)       object-store mapping
@@ -25,18 +26,21 @@ put_if_absent        ``os.open(O_CREAT |      S3: conditional PUT with
 delete               ``os.unlink``            DELETE object
 read                 ``open().read()``        GET object
 stat_mtime           ``os.stat().st_mtime``   HEAD → Last-Modified
+list_names           ``os.listdir``           LIST with the dir prefix
+touch                ``os.utime``             re-PUT the object (or a
+                                              metadata-only
+                                              copy-in-place)
+owner_alive          ``os.kill(pid, 0)``      None (unknown)
 ===================  =======================  ==========================
 
-The protocol additionally lists a directory's entries (``os.listdir``
-on ``_commits/``), which maps to LIST with the dir prefix — exposed
-here as ``list_names`` for completeness.
-
-Liveness note: the default owner-liveness check (``os.kill(pid, 0)``)
-is same-host by nature.  An object-store deployment replaces it with a
-heartbeat — the owner re-PUTs (or touches metadata on) its marker
-periodically and ``stat_mtime`` staleness alone reaps — by overriding
-``owner_alive`` to return ``None`` (unknown), which makes the caller
-fall back to pure mtime staleness.
+Heartbeat contract: the holder of a marker calls ``touch`` on it every
+``PUBLISH_HEARTBEAT_SECS`` for as long as it holds it, so the marker's
+``stat_mtime`` never ages past ``MAINT_STALE_SECS`` while its owner
+lives.  A marker (or reservation) is reaped only when it is older than
+that window and ``owner_alive`` does not return True for the pid it
+records.  The default check is same-host by nature; an object-store
+backend returns None (unknown) from ``owner_alive``, and then mtime
+staleness alone — which the heartbeat keeps young — decides.
 """
 
 from __future__ import annotations

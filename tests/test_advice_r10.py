@@ -107,7 +107,6 @@ def test_publish_marker_heartbeat_outlives_stale_window(spark, tmp_path):
     e2 = EngineSession(spark=spark, warehouse=wh)
     e2.catalog.locking = shared
     spec1 = e1.catalog.get_table("hb")
-    spec2 = e2.catalog.get_table("hb")
     with e1.catalog._branch_publish_lock(spec1, "dev"):
         marker = e1.catalog._branch_publish_marker(spec1, "dev")
         # simulate the rewrite outrunning the stale window
@@ -115,8 +114,8 @@ def test_publish_marker_heartbeat_outlives_stale_window(spark, tmp_path):
         time.sleep(0.25)  # several heartbeat periods
         # the marker is FRESH again: another session still sees the
         # publish in flight instead of reaping a live owner's marker
-        assert e2.catalog._branch_publish_inflight(spec2, "dev") is True
-    assert e2.catalog._branch_publish_inflight(spec2, "dev") is False
+        assert e2.catalog._marker_up(marker) is True
+    assert e2.catalog._marker_up(marker) is False
 
 
 def test_retention_slots_never_consumed_by_stranded_refs(spark, tmp_path):

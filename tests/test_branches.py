@@ -449,7 +449,7 @@ def test_fast_forward_excludes_concurrent_branch_writers(branched):
     time.sleep(0.3)
     assert "t1" not in done, "publish must wait for the reservation"
     # finalize the writer's statement, then the publish proceeds
-    cat._record_branch_commit(spec, "dev", n)
+    cat._record_commit(spec, n, branch="dev")
     th.join(timeout=30)
     assert "t1" in done and done["t1"] - done["t0"] >= 0.25
 

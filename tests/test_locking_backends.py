@@ -137,12 +137,11 @@ def test_heartbeat_staleness_reaps_without_liveness(spark, tmp_path):
     the heartbeat contract — while a FRESH marker still blocks."""
     e1, e2, shared = _pair(spark, tmp_path, InMemoryLocking)
     cat1, cat2 = e1.catalog, e2.catalog
-    spec2 = cat2.get_table("t")
     marker = cat1._maint_marker_path(cat1.get_table("t"))
     assert shared.put_if_absent(marker, b'{"pid": 999999, "ts": 0}')
-    assert cat2._maintenance_inflight(spec2) is True  # fresh: blocks
+    assert cat2._marker_up(marker) is True  # fresh: blocks
     shared.backdate(marker, cat2.MAINT_STALE_SECS + 5)
-    assert cat2._maintenance_inflight(spec2) is False  # stale: reaped
+    assert cat2._marker_up(marker) is False  # stale: reaped
     assert shared.stat_mtime(marker) is None  # physically gone
 
 
@@ -193,3 +192,125 @@ def test_branch_protocol_through_backend(spark, tmp_path, backend_cls):
             p for p in shared._entries if p.endswith(".inflight")
         ]
         assert stray == []
+
+
+def _marker_of(kind, cat, spec):
+    if kind == "publish":
+        return cat._branch_publish_marker(spec, "dev")
+    if kind == "maintenance":
+        return cat._maint_marker_path(spec)
+    path = cat.table_path(spec)
+    return os.path.join(
+        os.path.dirname(path), f".{os.path.basename(path)}.spec.lock"
+    )
+
+
+def _hold(kind, cat, spec):
+    if kind == "publish":
+        return cat._branch_publish_lock(spec, "dev")
+    if kind == "maintenance":
+        return cat._maintenance_lock(spec)
+    return cat._spec_mutation(spec)
+
+
+def _contend(kind, cat, spec):
+    """The other session's move against the marker: raises
+    ConcurrentWriteConflict while the marker blocks it, and leaves no
+    reservation behind when it gets through."""
+    if kind == "publish":
+        n = cat._branch_next_seq(spec, "dev")
+        cat.locking.delete(
+            os.path.join(cat._branch_commit_dir(spec, "dev"), f"{n:010d}.inflight")
+        )
+    elif kind == "maintenance":
+        cat._release_seqs(spec, cat._reserve_seqs(spec, 1))
+    else:
+        with cat._spec_mutation(spec):
+            pass
+
+
+@pytest.mark.parametrize("backend_cls", BACKENDS)
+@pytest.mark.parametrize("kind", ["spec", "publish", "maintenance"])
+def test_held_marker_heartbeats_past_stale_window(
+    spark, tmp_path, backend_cls, kind
+):
+    """Every marker lock heartbeats while held.  Held past
+    MAINT_STALE_SECS, the marker stays fresh and keeps blocking the
+    other session — whose stale-reap must never take a live holder's
+    marker.  On InMemoryLocking owner liveness is unknown, so without
+    the heartbeat age alone would reap it mid-hold."""
+    e1, e2, shared = _pair(spark, tmp_path, backend_cls)
+    e1.sql("INSERT INTO t VALUES (1, 'a')")
+    e1.sql("ALTER TABLE t CREATE BRANCH dev")
+    cat1, cat2 = e1.catalog, e2.catalog
+    for cat in (cat1, cat2):  # instance shadows: a sub-second window
+        cat.MAINT_STALE_SECS = 0.3
+        cat.PUBLISH_HEARTBEAT_SECS = 0.05
+        cat.MAINT_WAIT_SECS = 0.2
+    spec1, spec2 = cat1.get_table("t"), cat2.get_table("t")
+    marker = _marker_of(kind, cat1, spec1)
+    with _hold(kind, cat1, spec1):
+        time.sleep(0.5)  # outlive the stale window
+        with pytest.raises(ConcurrentWriteConflict):
+            _contend(kind, cat2, spec2)
+        age = time.time() - shared.stat_mtime(marker)
+        assert age < cat2.MAINT_STALE_SECS, "heartbeat must refresh mtime"
+    assert shared.stat_mtime(marker) is None
+    _contend(kind, cat2, spec2)  # released: the other session proceeds
+
+
+@pytest.mark.parametrize("backend_cls", BACKENDS)
+@pytest.mark.parametrize("writer", ["local", "distributed", "landed"])
+def test_failed_write_leaves_no_reservation(
+    spark, tmp_path, monkeypatch, backend_cls, writer
+):
+    """A data write that raises after its seq reservation must not
+    leave ``<seq>.inflight`` behind: its live owner would stall every
+    later maintenance drain until MAINT_WAIT_SECS and fail it, and
+    auto-compaction swallows that failure.  With no file of the write
+    visible the seq is released; with files visible ("landed": the
+    distributed write completes, then raises) it is recorded, so the
+    seq on disk is never handed out again."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from fluss_datafusion_spark.catalog import catalog as catalog_mod
+
+    e1, _e2, shared = _pair(spark, tmp_path, backend_cls)
+    e1.sql("INSERT INTO t VALUES (1, 'a')")
+    cat = e1.catalog
+    cat.MAINT_WAIT_SECS = 1.0
+    real_parquet = DataFrameWriter.parquet
+
+    def boom(*a, **k):
+        if writer == "landed":
+            real_parquet(*a, **k)
+        raise OSError("injected data-write failure")
+
+    with monkeypatch.context() as m:
+        if writer == "local":
+            m.setattr(catalog_mod, "_write_parquet_atomic", boom)
+        else:
+            m.setattr(
+                catalog_mod.FlussCatalog, "_try_local_append",
+                lambda self, *a, **k: None,
+            )
+            m.setattr(DataFrameWriter, "parquet", boom)
+        with pytest.raises(OSError, match="injected"):
+            e1.sql("INSERT INTO t VALUES (2, 'b')")
+    spec = cat.get_table("t")
+    assert [
+        f for f in shared.list_names(cat._commit_dir(spec))
+        if f.endswith(".inflight")
+    ] == []
+    e1.sql("INSERT INTO t VALUES (3, 'c')")
+    seqs = sorted(
+        r["__seq__"]
+        for r in e1.sql("SELECT DISTINCT __seq__ FROM t$history").collect()
+    )
+    assert seqs == ([1, 2, 3] if writer == "landed" else [1, 3])
+    cat.compact("t")
+    want = [(1, "a"), (2, "b"), (3, "c")] if writer == "landed" else [
+        (1, "a"), (3, "c")]
+    assert sorted(
+        tuple(r) for r in e1.sql("SELECT id, v FROM t").collect()
+    ) == want
