@@ -3,10 +3,14 @@
 placeholders (src/catalog/schema.rs:652-699); this is the column-level
 statistics surface plus the planner cash-in."""
 
+import math
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
 from fluss_datafusion_spark.catalog import stats as S
+from fluss_datafusion_spark.catalog.catalog import _parquet_files
 
 
 @pytest.fixture()
@@ -72,25 +76,49 @@ def test_merge_on_read_broadcast_cash_in(adb, spark):
     whose live snapshot is far under it gets the explicit hint: a join
     against it plans BroadcastHashJoin with no manual hint."""
     adb.sql("CREATE TABLE adb.dim (id BIGINT NOT NULL, tag STRING, PRIMARY KEY (id))")
-    # churn: 40 upsert rounds over the same 50 keys -> raw log ~2000
+    # churn: 8 upsert rounds over the same 50 keys -> raw log 400
     # rows, live 50
-    for r in range(8):
-        spark.range(50).selectExpr(
+    rounds, keys = 8, 50
+    for r in range(rounds):
+        spark.range(keys).selectExpr(
             "id", f"concat('tag-{r}-', id) as tag"
         ).createOrReplaceTempView("dim_batch")
         adb.sql("INSERT INTO adb.dim SELECT * FROM dim_batch")
+    # Each INSERT writes one file per partition of spark.range, i.e.
+    # per core of local[N], so both sizes scale with the core count:
+    # the threshold is derived from them, never a fixed byte count.
+    # Catalyst's own estimate follows the raw file bytes ...
+    catalyst_estimate = int(
+        adb.catalog.read("adb.dim")
+        ._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    )
+    # ... the stats-based live estimate is ~50 rows' worth of them
+    spec = adb.catalog.get_table("adb.dim")
+    file_bytes = sum(
+        os.path.getsize(f) for f in _parquet_files(adb.catalog.table_path(spec))
+    )
+    live_estimate = file_bytes * keys / (rounds * keys)
+    # a threshold between the two: Catalyst's file-size estimate stays
+    # over it, the live estimate under it
+    threshold = int(math.sqrt(live_estimate * catalyst_estimate))
+    assert live_estimate < threshold < catalyst_estimate, (
+        f"no broadcast threshold separates the live estimate "
+        f"({live_estimate:.0f} B) from Catalyst's estimate "
+        f"({catalyst_estimate} B)"
+    )
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
-        # a threshold between the live estimate (~50 rows' worth of the
-        # raw bytes) and the raw file bytes: Catalyst's own file-size
-        # estimate stays over it, the stats-based live estimate under
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "65536")
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(threshold))
         fact = spark.range(10000).selectExpr("id % 50 as id", "id as v")
         # without stats: no hint -> sort-merge join
         plan_before = fact.join(
             adb.catalog.read("adb.dim"), "id"
         )._jdf.queryExecution().executedPlan().toString()
         adb.sql("ANALYZE TABLE adb.dim COMPUTE STATISTICS")
+        # the persisted stats are the numbers the live estimate assumed
+        st = S.load_stats(adb.catalog, spec)
+        assert st["row_count"] == keys and st["raw_rows"] == rounds * keys
+        assert st["file_bytes"] == file_bytes
         plan_after = fact.join(
             adb.catalog.read("adb.dim"), "id"
         )._jdf.queryExecution().executedPlan().toString()
