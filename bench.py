@@ -73,8 +73,8 @@ def probe_stmt_floor(spark, samples: int = 5) -> float:
     statement on this host right now — a single-row INSERT through the
     full engine path (plan, one write job, footer harvest, commit
     protocol, view rebind).  This is the unit the DML-lifecycle bench
-    entries are floor-dominated by; q66's decomposition below prices
-    its statement count against it."""
+    entries are floor-dominated by; the q66/q57 lifecycle
+    decompositions price their statement counts against it."""
     import shutil
     import tempfile
 
@@ -98,105 +98,53 @@ def probe_stmt_floor(spark, samples: int = 5) -> float:
         shutil.rmtree(root, ignore_errors=True)
 
 
-def q66_decomposition(spark, sf_dir, stmt_floor_ms: float) -> dict:
-    """One instrumented q66 run: wall per statement GROUP (the exact
-    Q66_GROUPS the corpus entry executes), plus the floor arithmetic
-    the target re-baseline rests on (VERDICT r9 item 1): the lifecycle
-    is 17 user statements, 15 of which are bare DDL/DML priced at the
-    host's per-statement floor — so the entry's floor is
-    15 x stmt_floor + 2 x refresh work, not a number any plan change
-    can push below 15 x stmt_floor."""
-    from fluss_datafusion_spark.corpus.relational import (
-        Q66_FINAL,
-        Q66_GROUPS,
-        q66_setup,
-    )
-
-    e = q66_setup(spark, sf_dir)
-    groups = {}
+def matview_lifecycle_decomposition(
+    spark,
+    sf_dir,
+    stmt_floor_ms: float,
+    setup,
+    groups,
+    final_sql: str,
+    refresh_budget_sec: float,
+    setup_work_budget_sec: float,
+) -> dict:
+    """One instrumented run of a 2-refresh matview DML lifecycle (q66,
+    q57): wall per statement GROUP (the exact groups the corpus entry
+    executes, ``w1_refresh`` and ``w2_refresh`` among them), plus the
+    floor arithmetic the target re-baseline rests on (VERDICT r9 item
+    1): every statement but the two refreshes is bare DDL/DML priced at
+    the host's per-statement floor, so the entry's floor is
+    non_refresh x stmt_floor + refresh work + setup work, not a number
+    any plan change can push below non_refresh x stmt_floor.  The two
+    budgets are committed per entry (see the call sites)."""
+    e = setup(spark, sf_dir)
+    timed = {}
     n_stmts = 0
-    for label, stmts in Q66_GROUPS:
+    for label, stmts in groups:
         t0 = time.time()
         for s in stmts:
             e.sql(s)
-        groups[label] = round(time.time() - t0, 3)
+        timed[label] = round(time.time() - t0, 3)
         n_stmts += len(stmts)
     t0 = time.time()
-    run_query(e.sql(Q66_FINAL))
-    groups["final_select"] = round(time.time() - t0, 3)
+    run_query(e.sql(final_sql))
+    timed["final_select"] = round(time.time() - t0, 3)
     n_stmts += 1
-    refresh_sec = groups["w1_refresh"] + groups["w2_refresh"]
+    refresh_sec = timed["w1_refresh"] + timed["w2_refresh"]
     non_refresh = n_stmts - 2
     floor_sec = round(non_refresh * stmt_floor_ms / 1000.0, 2)
     return {
         "statements": n_stmts,
-        "groups": groups,
+        "groups": timed,
         "stmt_floor_ms": stmt_floor_ms,
         "non_refresh_statements": non_refresh,
         "statement_floor_sec": floor_sec,
         "refresh_sec": round(refresh_sec, 2),
-        # The re-baselined target (committed arithmetic): the lifecycle
-        # is NOT floor-only — beyond the per-statement floor it carries
-        # real input-sized work: both refreshes (CDC windows over three
-        # sources + inline fold + pinned delta + fused append; measured
-        # 1.36 + 1.77 s on a clean r10 host) budgeted at 3.2 s, and the
-        # setup's scans/builds (two parquet seed scans, the initial
-        # three-way full build, the final read) budgeted at 1.3 s over
-        # their floors.  target = non_refresh x stmt_floor + 3.2 + 1.3
-        # — floor-scaled for degraded hosts, achievable on clean ones
-        # (clean r10: floor 133 ms -> target 6.5, measured 7.0 at
-        # contention 1.26 / ~6.2 normalized).
-        "refresh_budget_sec": 3.2,
-        "setup_work_budget_sec": 1.3,
-        "derived_target_sec": round(floor_sec + 3.2 + 1.3, 2),
-    }
-
-
-def q57_decomposition(spark, sf_dir, stmt_floor_ms: float) -> dict:
-    """One instrumented q57 run (r11 — the q66 treatment applied to the
-    2-refresh single-table matview lifecycle): wall per statement group
-    plus the floor arithmetic.  The lifecycle is 11 statements: 9 bare
-    DDL/DML priced at the host's per-statement floor, plus real
-    input-sized work — the CREATE MV's initial full build, the seed
-    insert's 2000-row scan, the final read, and the RMW excess of the
-    five UPDATE/DELETE statements over the bare-insert floor (warm r11
-    measurements ~0.7 + 0.27 + 0.2 + ~0.35, budgeted together at
-    1.0 s) and both CDC-window refreshes (warm ~1.1 + 1.15 s; budgeted
-    2.3 s).  target = 9 x stmt_floor + 1.0 + 2.3 — floor-scaled
-    for degraded hosts (a warm in-session decomposition sums ~4.9 s
-    at a 205 ms floor, exactly the formula's value)."""
-    from fluss_datafusion_spark.corpus.relational import (
-        Q57_FINAL,
-        Q57_GROUPS,
-        q57_setup,
-    )
-
-    e = q57_setup(spark, sf_dir)
-    groups = {}
-    n_stmts = 0
-    for label, stmts in Q57_GROUPS:
-        t0 = time.time()
-        for s in stmts:
-            e.sql(s)
-        groups[label] = round(time.time() - t0, 3)
-        n_stmts += len(stmts)
-    t0 = time.time()
-    run_query(e.sql(Q57_FINAL))
-    groups["final_select"] = round(time.time() - t0, 3)
-    n_stmts += 1
-    refresh_sec = groups["w1_refresh"] + groups["w2_refresh"]
-    non_refresh = n_stmts - 2
-    floor_sec = round(non_refresh * stmt_floor_ms / 1000.0, 2)
-    return {
-        "statements": n_stmts,
-        "groups": groups,
-        "stmt_floor_ms": stmt_floor_ms,
-        "non_refresh_statements": non_refresh,
-        "statement_floor_sec": floor_sec,
-        "refresh_sec": round(refresh_sec, 2),
-        "refresh_budget_sec": 2.3,
-        "setup_work_budget_sec": 1.0,
-        "derived_target_sec": round(floor_sec + 2.3 + 1.0, 2),
+        "refresh_budget_sec": refresh_budget_sec,
+        "setup_work_budget_sec": setup_work_budget_sec,
+        "derived_target_sec": round(
+            floor_sec + refresh_budget_sec + setup_work_budget_sec, 2
+        ),
     }
 
 
@@ -612,25 +560,47 @@ def main() -> None:
     floor_after_ms = probe_job_floor(spark)
     contention_after = probe_cpu_contention()
 
-    # q66's in-artifact floor decomposition (VERDICT r9 item 1): one
-    # extra instrumented run priced against the live statement floor,
-    # so the artifact itself shows how much of the entry is statement
-    # count x host floor vs real refresh work.
-    try:
-        stmt_floor = probe_stmt_floor(spark)
-        q66_decomp = q66_decomposition(spark, sf_dir, stmt_floor)
-    except Exception as exc:  # never fail the artifact over the probe
-        print(f"bench error in q66 decomposition: {exc}", file=sys.stderr)
-        q66_decomp = None
-    try:
-        stmt_floor57 = (
-            q66_decomp["stmt_floor_ms"] if q66_decomp
-            else probe_stmt_floor(spark)
-        )
-        q57_decomp = q57_decomposition(spark, sf_dir, stmt_floor57)
-    except Exception as exc:
-        print(f"bench error in q57 decomposition: {exc}", file=sys.stderr)
-        q57_decomp = None
+    # q66's and q57's in-artifact floor decompositions (VERDICT r9 item
+    # 1): one extra instrumented run each, priced against the live
+    # statement floor, so the artifact itself shows how much of the
+    # entry is statement count x host floor vs real refresh work.
+    from fluss_datafusion_spark.corpus import relational as rel
+
+    lifecycles = {
+        # q66: 17 statements, 15 of them bare DDL/DML.  Beyond the
+        # per-statement floor it carries real input-sized work: both
+        # refreshes (CDC windows over three sources + inline fold +
+        # pinned delta + fused append; measured 1.36 + 1.77 s on a
+        # clean r10 host) budgeted at 3.2 s, and the setup's
+        # scans/builds (two parquet seed scans, the initial three-way
+        # full build, the final read) budgeted at 1.3 s over their
+        # floors — floor-scaled for degraded hosts, achievable on clean
+        # ones (clean r10: floor 133 ms -> target 6.5, measured 7.0 at
+        # contention 1.26 / ~6.2 normalized).
+        "q66": (rel.q66_setup, rel.Q66_GROUPS, rel.Q66_FINAL, 3.2, 1.3),
+        # q57 (r11): 11 statements, 9 bare DDL/DML, plus the CREATE
+        # MV's initial full build, the seed insert's 2000-row scan, the
+        # final read, and the RMW excess of the five UPDATE/DELETE
+        # statements over the bare-insert floor (warm r11 ~0.7 + 0.27
+        # + 0.2 + ~0.35, budgeted together at 1.0 s) and both
+        # CDC-window refreshes (warm ~1.1 + 1.15 s; budgeted 2.3 s).
+        # A warm in-session decomposition sums ~4.9 s at a 205 ms
+        # floor, exactly the formula's value.
+        "q57": (rel.q57_setup, rel.Q57_GROUPS, rel.Q57_FINAL, 2.3, 1.0),
+    }
+    lifecycle_decomp = {}
+    stmt_floor = None
+    for entry, args in lifecycles.items():
+        try:
+            if stmt_floor is None:
+                stmt_floor = probe_stmt_floor(spark)
+            lifecycle_decomp[entry] = matview_lifecycle_decomposition(
+                spark, sf_dir, stmt_floor, *args
+            )
+        except Exception as exc:  # never fail the artifact over the probe
+            print(f"bench error in {entry} decomposition: {exc}",
+                  file=sys.stderr)
+            lifecycle_decomp[entry] = None
     try:
         nsdi_decomp = ns_dedup_incremental_decomposition(
             spark, sf_dir, floor_after_ms
@@ -649,8 +619,8 @@ def main() -> None:
     # summary line mid-JSON (VERDICT r12 item 2).  The one stdout line
     # stays minimal and parses under a 4 KB tail capture.
     decomp = {
-        "q66_decomposition": q66_decomp,
-        "q57_decomposition": q57_decomp,
+        "q66_decomposition": lifecycle_decomp["q66"],
+        "q57_decomposition": lifecycle_decomp["q57"],
         "ns_dedup_incremental_decomposition": nsdi_decomp,
     }
     try:

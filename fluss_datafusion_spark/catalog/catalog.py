@@ -46,28 +46,33 @@ _BKT = "__bkt__"
 _DEL = "__del__"
 _COMMIT_DIR = "_commits"
 
-#: cap on the driver-local append fast path (rows already driver-resident
-#: as plan literals; the cap only bounds the pyarrow table build)
-_LOCAL_WRITE_MAX_ROWS = 100_000
+#: the one row cap of every driver-local write and pin (literal VALUES,
+#: point tombstones, RMW deltas, ingest-sink batches, hamming-index
+#: appends, matview pins): at or under it the rows land as driver-written
+#: files; past it the capped collect early-exits and the distributed
+#: path runs (at 100 TB the probe cost is one bounded CollectLimit pass,
+#: the win is the per-statement committer round-trip on the small-delta
+#: common case)
+_LOCAL_ROW_CAP = 10_000
+# The capped collect partially executes a non-literal delta plan; past
+# the cap that work is re-done by the distributed write.  The RMW probe
+# is therefore GATED (r13, VERDICT r12 item 5) on a cheap pre-signal
+# that bounds the wasted pass: either the statement shape proves the
+# delta small (full-PK equality / literal IN cover), or the table
+# snapshot has at most this many data files (re-scanning that much is
+# cheaper than one distributed write job even when the probe loses).
+# At 100 TB an unbounded UPDATE's delta plan never runs twice.  The
+# driver-local point-lookup read (plans/pk_lookup.py) shares the cap.
+_LOCAL_FILE_CAP = 256
 
-#: cap on the RMW collect-probe variant: an UPDATE/DELETE delta at or
-#: under this lands as one driver-written file; past it the probe
-#: early-exits and the distributed write runs (at 100 TB the probe cost
-#: is one bounded CollectLimit pass, the win is the per-statement
-#: committer round-trip on the small-delta common case)
-_RMW_LOCAL_CAP = 10_000
-# The collect-local probe partially executes the delta plan; past the
-# cap that work is re-done by the distributed write.  The probe is
-# therefore GATED (r13, VERDICT r12 item 5) on a cheap pre-signal that
-# bounds the wasted pass: either the statement shape proves the delta
-# small (full-PK equality / literal IN cover), or the table snapshot
-# has at most this many data files (re-scanning that much is cheaper
-# than one distributed write job even when the probe loses).  At 100 TB
-# an unbounded UPDATE's delta plan never runs twice.  Parameterized for
-# clusters; the default keeps local tables on the fast path.
-_RMW_PROBE_MAX_FILES = int(
-    os.environ.get("SPARK_GRAFT_RMW_PROBE_MAX_FILES", "256")
-)
+
+def _collect_capped(df: DataFrame) -> Optional[list]:
+    """``df``'s rows when it has at most _LOCAL_ROW_CAP of them, else
+    None: one early-exiting ``limit(cap + 1)`` collect, which runs no
+    job on a LocalRelation.  A plain collect, not Arrow: ``toPandas``
+    runs a job even on a literal plan."""
+    rows = df.limit(_LOCAL_ROW_CAP + 1).collect()
+    return rows if len(rows) <= _LOCAL_ROW_CAP else None
 
 
 def _pa_type(dt):
@@ -1119,15 +1124,19 @@ class FlussCatalog:
                 )
                 bpath = self._branch_path(spec, branch)
                 path = self.table_path(spec)
-                files = sorted(_parquet_files(bpath))
                 landed = []
-                for f in files:
-                    rel = os.path.relpath(f, bpath)
-                    dst = os.path.join(path, rel)
-                    os.makedirs(os.path.dirname(dst), exist_ok=True)
-                    os.rename(f, dst)
-                    landed.append(dst)
-                    moved += 1
+                try:
+                    for f in sorted(_parquet_files(bpath)):
+                        rel = os.path.relpath(f, bpath)
+                        dst = os.path.join(path, rel)
+                        os.makedirs(os.path.dirname(dst), exist_ok=True)
+                        os.rename(f, dst)
+                        landed.append(dst)
+                        moved += 1
+                except BaseException:
+                    for s in got:  # the _unwind_seq rule, per seq
+                        self._unwind_seq(spec, s, None, bool(landed))
+                    raise
                 # footer-stats harvest so the published files keep
                 # skipping coverage (branch-side manifests stay behind
                 # and die with the branch dir)
@@ -1259,6 +1268,7 @@ class FlussCatalog:
             offset = main_head - fork
             got = self._reserve_seqs(spec, count=n, expect_base=main_head)
             path = self.table_path(spec)
+            before = _parquet_files(path)
             restamped = bdf.withColumn(
                 _SEQ, (F.col(_SEQ) + F.lit(offset)).cast("long")
             )
@@ -1275,14 +1285,20 @@ class FlussCatalog:
             # report files_published=1 (VERDICT r10 item 3).  The seq /
             # commit bookkeeping below still runs so main history carries
             # the branch statements.
-            if _footer_row_count(sorted(_parquet_files(bpath))) == 0:
-                moved = 0
-            else:
-                before = _parquet_files(path)
-                writer = restamped.write.mode("append")
-                if partition_cols:
-                    writer = writer.partitionBy(*partition_cols)
-                writer.parquet(path)
+            try:
+                empty = _footer_row_count(sorted(_parquet_files(bpath))) == 0
+                if not empty:
+                    writer = restamped.write.mode("append")
+                    if partition_cols:
+                        writer = writer.partitionBy(*partition_cols)
+                    writer.parquet(path)
+            except BaseException:
+                landed = bool(_parquet_files(path) - before)
+                for s in got:  # the _unwind_seq rule, per seq
+                    self._unwind_seq(spec, s, None, landed)
+                raise
+            moved = 0
+            if not empty:
                 new_files = sorted(_parquet_files(path) - before)
                 bloom_cols, bloom_fpp = self._bloom_config(spec)
                 skipping.add_files(
@@ -3263,8 +3279,7 @@ class FlussCatalog:
         df: DataFrame,
         reserved_seq: Optional[int] = None,
         branch: Optional[str] = None,
-        maybe_local: bool = False,
-        collect_local: bool = False,
+        local: bool = False,
     ) -> int:
         """INSERT a DataFrame.  PK tables: upsert semantics — within the
         batch, later rows win on PK collisions (src/provider.rs:430-437:
@@ -3280,10 +3295,10 @@ class FlussCatalog:
         ``_reserve_seqs`` (multi-append statements and concurrency-
         validated refreshes).
 
-        ``collect_local``: opt into the capped-collect driver-local
-        write (see _append_log).  For callers whose input is a CACHED
-        frame with a known small row count (micro-batch ingest sinks),
-        the probe is a cache read — no double execution is possible —
+        ``local``: opt into the driver-local write (see _append_log).
+        For a literal VALUES body the capped collect runs no job; for a
+        CACHED frame with a known small row count (micro-batch ingest
+        sinks) it is a cache read — no double execution is possible —
         and the write skips the distributed committer.  Callers must
         not attach Observations to ``df``."""
         spec = self.get_table(name)
@@ -3335,8 +3350,7 @@ class FlussCatalog:
             self._branch_info(spec, branch)  # validate before writing
         new_files = self._append_log(
             spec, aligned, deleted=False, reserved_seq=reserved_seq,
-            branch=branch, maybe_local=maybe_local,
-            collect_local=collect_local,
+            branch=branch, local=local,
         )
         return _footer_row_count(new_files)
 
@@ -3350,8 +3364,7 @@ class FlussCatalog:
         deleted_col: Optional[str] = None,
         distribute: bool = False,
         branch: Optional[str] = None,
-        maybe_local: bool = False,
-        collect_local: bool = False,
+        local: bool = False,
     ):
         """Append schema-aligned rows to the table's log with the internal
         stamps (__seq__/__sub__/__del__ for PK tables, __bkt__ layout).
@@ -3375,7 +3388,9 @@ class FlussCatalog:
         merge-on-read pays for every one of them.  Plain INSERTs stay
         out: a bulk load's upstream partitioning is already sized, a
         full-data shuffle at 100 TB is not (and INSERT's single-job
-        contract is pinned by test)."""
+        contract is pinned by test).
+        ``local=True``: the caller expects a small input — try the
+        driver-local write first (_try_local_write)."""
         if deleted_col is not None and not spec.has_primary_key:
             raise ValueError(
                 "per-row tombstone flags require a primary-key table"
@@ -3390,36 +3405,26 @@ class FlussCatalog:
             # GENERATED ALWAYS AS columns are (re)computed on every live
             # write — BEFORE constraints, which may reference them
             aligned = self._apply_generated(spec, aligned, deleted_col)
-        if maybe_local:
+        if local:
             # Driver-local fast path (guide §1.2 first-principles): a
             # literal VALUES insert / point tombstone folds to a
-            # LocalRelation — its rows are already driver-resident, so
-            # the write is one pyarrow file per touched bucket + the same
-            # commit protocol, not a Spark job through the Hadoop
-            # committer (measured ~107 -> ~35 ms per statement on a quiet
-            # host).  Returns None whenever anything disqualifies
-            # (non-local plan, _local_write_ok) and the distributed path
-            # below runs as before.
-            local = self._try_local_append(
+            # LocalRelation — its rows are already driver-resident — and
+            # the delta of an UPDATE / predicate-DELETE or an ingest
+            # micro-batch is usually tiny.  ONE early-exiting capped
+            # collect; at or under the cap the collected rows ARE the
+            # complete input (a pinned snapshot) and the write is one
+            # pyarrow file per touched bucket + the same commit
+            # protocol, not a Spark job through the Hadoop committer
+            # (measured ~107 -> ~35 ms per literal statement on a quiet
+            # host).  Past the cap the probe cost is bounded
+            # (CollectLimit reads partitions incrementally); on any
+            # decline the distributed path below runs as before.
+            written = self._try_local_write(
                 spec, aligned, deleted, reserved_seq, expect_base,
                 deleted_col, branch,
             )
-            if local is not None:
-                return local
-        if collect_local and not spec.check_constraints:
-            # RMW variant of the same idea: the delta of an UPDATE /
-            # predicate-DELETE is usually tiny — probe it with ONE
-            # early-exiting limit collect; at or under the cap the
-            # collected rows ARE the complete delta (a pinned snapshot)
-            # and the write is driver-local.  Past the cap the probe
-            # cost is bounded (CollectLimit reads partitions
-            # incrementally) and the distributed write runs as before.
-            local = self._try_collect_local_append(
-                spec, aligned, deleted, reserved_seq, expect_base,
-                deleted_col, branch,
-            )
-            if local is not None:
-                return local
+            if written is not None:
+                return written
         if not deleted and spec.check_constraints:
             # CHECK semantics: a row violates only when the expression is
             # FALSE (NULL passes).  The input is pinned first so a
@@ -3607,70 +3612,13 @@ class FlussCatalog:
             self._maybe_auto_compact(spec, seq)
         return counted
 
-    def _try_local_append(
-        self,
-        spec: TableSpec,
-        aligned: DataFrame,
-        deleted: bool,
-        reserved_seq: Optional[int],
-        expect_base: Optional[int],
-        deleted_col: Optional[str],
-        branch: Optional[str],
-    ):
-        """Attempt the driver-local append (see _append_log's seam).
-        Applies the SAME semantics as the distributed path — CHECK
-        evaluation (over the already-pinned literal plan, so no
-        checkpoint), seq reservation, physical column renames, __seq__/
-        __sub__/__del__ stamps with within-batch order preserved, stats
-        harvest, commit record, auto-compaction policy.  Returns the
-        written file list (or _CountedFiles) like _append_log, or None
-        when the fast path does not apply."""
-        try:
-            plan = aligned._jdf.queryExecution().optimizedPlan()
-            if plan.getClass().getSimpleName() != "LocalRelation":
-                return None
-        except Exception:
-            return None
-
-        def collect():
-            rows = aligned.collect()  # LocalRelation: no job — plan literals
-            if len(rows) > _LOCAL_WRITE_MAX_ROWS:
-                return None
-            if not deleted and spec.check_constraints:
-                # identical CHECK semantics (violation only on FALSE); the
-                # input is a literal plan, so no pinning checkpoint is needed
-                check_src = (
-                    aligned
-                    if deleted_col is None
-                    else aligned.filter(~F.col(deleted_col).cast("boolean"))
-                )
-                for cname, expr in spec.check_constraints.items():
-                    bad = (
-                        check_src.filter(
-                            ~F.coalesce(F.expr(expr), F.lit(True))
-                        )
-                        .limit(1)
-                        .collect()
-                    )
-                    if bad:
-                        raise ValueError(
-                            f"CHECK constraint {cname} ({expr}) violated by "
-                            f"rows written to {spec.qualified_name}"
-                        )
-            return rows
-
-        return self._try_collect_local_append(
-            spec, aligned, deleted, reserved_seq, expect_base, deleted_col,
-            branch, collect=collect,
-        )
-
     def _pk_bounded_predicate(self, spec: TableSpec, predicate: str) -> bool:
         """True when ``predicate`` provably matches at most
-        _RMW_LOCAL_CAP primary-key rows: every PK column is pinned by a
+        _LOCAL_ROW_CAP primary-key rows: every PK column is pinned by a
         literal equality (bound 1) or IN list (bound = list length) in
         a top-level conjunction.  Anything the conjunct parser cannot
         prove bounds (ranges, ORs, subqueries, expressions) returns
-        False — the caller then skips the collect-local probe."""
+        False — the caller then skips the capped-collect probe."""
         if not predicate or not spec.has_primary_key:
             return False
         bound_by_col: Dict[str, int] = {}
@@ -3685,7 +3633,7 @@ class FlussCatalog:
             if b is None:
                 return False
             bound *= b
-            if bound > _RMW_LOCAL_CAP:
+            if bound > _LOCAL_ROW_CAP:
                 return False
         return True
 
@@ -3695,11 +3643,12 @@ class FlussCatalog:
         branch: Optional[str],
         predicate: Optional[str] = None,
     ) -> bool:
-        """Pre-signal gate for the collect-local RMW probe (see
-        _RMW_PROBE_MAX_FILES).  Layouts the local writer declines
-        anyway (_local_write_ok) short-circuit to False so the
-        listing isn't paid for nothing."""
-        if not _local_write_ok(spec):
+        """Pre-signal gate for the RMW capped-collect probe (see
+        _LOCAL_FILE_CAP).  Layouts the local writer declines anyway
+        (_local_write_ok) and CHECK-constrained tables (an RMW delta is
+        never the literal plan the seam requires of them) short-circuit
+        to False so the listing isn't paid for nothing."""
+        if not _local_write_ok(spec) or spec.check_constraints:
             return False
         if predicate is not None and self._pk_bounded_predicate(
             spec, predicate
@@ -3711,11 +3660,11 @@ class FlussCatalog:
             else self.table_path(spec)
         )
         try:
-            return len(_parquet_files(path)) <= _RMW_PROBE_MAX_FILES
+            return len(_parquet_files(path)) <= _LOCAL_FILE_CAP
         except OSError:
             return False
 
-    def _try_collect_local_append(
+    def _try_local_write(
         self,
         spec: TableSpec,
         aligned: DataFrame,
@@ -3724,27 +3673,52 @@ class FlussCatalog:
         expect_base: Optional[int],
         deleted_col: Optional[str],
         branch: Optional[str],
-        collect=None,
     ):
-        """RMW driver-local append (see _append_log's collect_local
-        seam): one limit-capped collect of the delta plan; at or under
-        the cap the rows are written locally, else None (the caller runs
-        the distributed write — the only double-executed work is the
-        early-exiting probe).  Callers must not attach Observations to
-        ``aligned`` (the probe would consume them).
-
-        ``collect`` replaces the probe (the literal path passes a plain
-        collect of its LocalRelation) and returns None past its cap.
-        Every decline happens before any seq is reserved."""
+        """The driver-local append (see _append_log's ``local`` seam):
+        one capped collect of ``aligned`` (_collect_capped); at or under
+        the cap the rows are written locally with the SAME semantics as
+        the distributed path — CHECK evaluation, seq reservation,
+        physical column renames, __seq__/__sub__/__del__ stamps with
+        within-batch order preserved, stats harvest, commit record,
+        auto-compaction policy.  Returns the written file list (or
+        _CountedFiles) like _append_log, or None when the fast path does
+        not apply; the caller then runs the distributed write — the only
+        double-executed work is the early-exiting probe.  Every decline
+        happens before any seq is reserved.  Callers must not attach
+        Observations to ``aligned`` (the probe would consume them)."""
         if not _local_write_ok(spec):
             return None
-        if collect is None:
-            rows = aligned.limit(_RMW_LOCAL_CAP + 1).collect()
-            rows = rows if len(rows) <= _RMW_LOCAL_CAP else None
-        else:
-            rows = collect()
+        if spec.check_constraints:
+            # CHECKs are evaluated below over ``aligned`` itself, with no
+            # pinning checkpoint: sound only for a literal plan, whose
+            # rows cannot change between the check and the write
+            try:
+                plan = aligned._jdf.queryExecution().optimizedPlan()
+                if plan.getClass().getSimpleName() != "LocalRelation":
+                    return None
+            except Exception:
+                return None
+        rows = _collect_capped(aligned)
         if rows is None:
             return None
+        if not deleted and spec.check_constraints:
+            # identical CHECK semantics (violation only on FALSE)
+            check_src = (
+                aligned
+                if deleted_col is None
+                else aligned.filter(~F.col(deleted_col).cast("boolean"))
+            )
+            for cname, expr in spec.check_constraints.items():
+                bad = (
+                    check_src.filter(~F.coalesce(F.expr(expr), F.lit(True)))
+                    .limit(1)
+                    .collect()
+                )
+                if bad:
+                    raise ValueError(
+                        f"CHECK constraint {cname} ({expr}) violated by "
+                        f"rows written to {spec.qualified_name}"
+                    )
         del_flags = None
         if deleted_col is not None:
             del_flags = [
@@ -3976,7 +3950,7 @@ class FlussCatalog:
             ]
         )
         self._append_log(
-            spec, tombstone, deleted=True, branch=branch, maybe_local=True
+            spec, tombstone, deleted=True, branch=branch, local=True
         )
         return 1
 
@@ -4082,9 +4056,7 @@ class FlussCatalog:
             self._append_log(
                 spec, victims, deleted=True, expect_base=base,
                 distribute=True, branch=branch,
-                collect_local=self._rmw_probe_allowed(
-                    spec, branch, predicate
-                ),
+                local=self._rmw_probe_allowed(spec, branch, predicate),
             )
         )
 
@@ -4199,13 +4171,13 @@ class FlussCatalog:
             input_df = input_df.localCheckpoint(eager=True)
             self.truncate_table(target)
         # a literal VALUES body folds to a LocalRelation — opt in to the
-        # driver-local write (the seam re-verifies the plan shape; the
-        # hint just keeps big INSERT..SELECT plans from paying an extra
-        # Catalyst optimization pass for the detection)
+        # driver-local write, whose capped collect of it runs no job;
+        # INSERT..SELECT stays out, so a big source plan never pays a
+        # probe the distributed write then repeats
         values_body = bool(re.match(r"^\s*VALUES\b", body, re.IGNORECASE))
         count = self.insert(
             target, input_df, branch=branch,
-            maybe_local=values_body and not overwrite,
+            local=values_body and not overwrite,
         )
         # LocalRelation scalar frame (see EngineSession._scalar_df):
         # collecting it runs no Spark job
@@ -4283,7 +4255,7 @@ class FlussCatalog:
             self._append_log(
                 spec, updated, deleted=False, expect_base=base,
                 distribute=True, branch=branch,
-                collect_local=self._rmw_probe_allowed(spec, branch, where),
+                local=self._rmw_probe_allowed(spec, branch, where),
             )
         )
 
@@ -4575,7 +4547,7 @@ class FlussCatalog:
                 if branch is not None
                 else self._reserve_seqs(spec, 1, expect_base=base)[0]
             )
-            # r12 RMW driver-local attempt (the collect_local seam, but
+            # r12 RMW driver-local attempt (the ``local`` seam, but
             # at the call site: the upsert/delete split is counted from
             # the collected flags in Python, where the Spark path needs
             # an Observation — which a limit probe would consume).
@@ -4587,20 +4559,17 @@ class FlussCatalog:
             with self._releasing(
                 spec, [seq], branch
             ), self.defer_auto_compact():
-                local = self._try_collect_local_append(
+                # MERGE has no predicate to shape-bound the delta — the
+                # probe is allowed only on small-snapshot targets
+                # (file-count gate)
+                local = self._try_local_write(
                     spec, fused, False, seq, None, flag, branch
-                ) if (
-                    not spec.check_constraints
-                    # MERGE has no predicate to shape-bound the delta —
-                    # the probe is allowed only on small-snapshot
-                    # targets (file-count gate)
-                    and self._rmw_probe_allowed(spec, branch)
-                ) else None
+                ) if self._rmw_probe_allowed(spec, branch) else None
                 if local is not None:
                     rows_n = local.precomputed_rows
                     # the local writer preserved the flags it was given;
                     # recount from the fused probe result is not needed —
-                    # _try_collect_local_append stashes them:
+                    # _try_local_write stashes them:
                     deleted = local.tombstone_rows
                     upserted = rows_n - deleted
                     return {"upserted": upserted, "deleted": deleted}

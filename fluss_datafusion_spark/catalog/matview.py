@@ -880,20 +880,18 @@ def _full_state(catalog, mv: Dict, anchors: Dict) -> DataFrame:
     return _with_kahan_state(state, mv)
 
 
-# driver-local pinning cap shared by the refresh delta and the full
-# build: a result this small re-enters as a ONE-slice local frame (one
-# job, no toRdd checkpoint planning); anything larger checkpoints
-_LOCAL_PIN_CAP = 10_001
-
-
 def _pinned_state(catalog, mv: Dict, anchors: Dict):
     """Full build state, materialized exactly once and pinned: returns
-    (DataFrame, collected_rows_or_None).  ≤ _LOCAL_PIN_CAP groups come
-    back as a driver-local one-slice frame (callers can then answer
-    row-level probes in plain python); larger states eager-checkpoint."""
+    (DataFrame, collected_rows_or_None).  A state within the catalog's
+    driver-local row cap (_collect_capped, shared with the refresh
+    delta) comes back as a ONE-slice local frame — one job, no toRdd
+    checkpoint planning, and callers can answer row-level probes in
+    plain python; larger states eager-checkpoint."""
+    from fluss_datafusion_spark.catalog.catalog import _collect_capped
+
     state_df = _full_state(catalog, mv, anchors)
-    rows = state_df.limit(_LOCAL_PIN_CAP).collect()
-    if len(rows) < _LOCAL_PIN_CAP:
+    rows = _collect_capped(state_df)
+    if rows is not None:
         local = catalog.spark.createDataFrame(
             catalog.spark.sparkContext.parallelize(rows, 1),
             state_df.schema,
@@ -1038,6 +1036,22 @@ def refresh_matview(catalog, name: str) -> Dict[str, int]:
         return _refresh_matview_impl(catalog, name)
 
 
+def _count_delta_groups(local_rows) -> Tuple[int, int, int]:
+    """(n_rescan, n_up, n_dead) of a collected merged delta: alive
+    groups needing a bounded rescan, alive groups upserted as they
+    are, and dead groups that existed before the window."""
+    n_rescan = n_up = n_dead = 0
+    for r in local_rows:
+        if r[_STAR] > 0:
+            if r["__mv_rescan__"]:
+                n_rescan += 1
+            else:
+                n_up += 1
+        elif r["__mv_existed__"]:
+            n_dead += 1
+    return n_rescan, n_up, n_dead
+
+
 def _try_local_refresh_write(catalog, spec, mv, local_rows, view_base):
     """Driver-local refresh write (see the call site): derive the fused
     upsert/tombstone rows from the collected merged delta with the SAME
@@ -1056,15 +1070,7 @@ def _try_local_refresh_write(catalog, spec, mv, local_rows, view_base):
     if not _local_write_ok(spec):
         return None
     target = spec.spark_schema()
-    n_rescan = n_up = n_dead = 0
-    for r in local_rows:
-        if r[_STAR] > 0:
-            if r["__mv_rescan__"]:
-                n_rescan += 1
-            else:
-                n_up += 1
-        elif r["__mv_existed__"]:
-            n_dead += 1
+    n_rescan, n_up, n_dead = _count_delta_groups(local_rows)
     if n_rescan > 0:
         return None
     pk = set(spec.primary_key)
@@ -1246,9 +1252,11 @@ def _refresh_matview_impl(catalog, name: str) -> Dict[str, int]:
     #   job that materializes it.  The probe's limit-collect is one
     #   extra early-exiting job on this path; large refreshes are
     #   compute-dominated, so it's noise there.
-    local_rows = merged.limit(_LOCAL_PIN_CAP).collect()
+    from fluss_datafusion_spark.catalog.catalog import _collect_capped
+
+    local_rows = _collect_capped(merged)
     schema_order = [c.name for c in spec.columns]
-    if len(local_rows) < _LOCAL_PIN_CAP:
+    if local_rows is not None:
         # r12 driver-local write: the fused upsert/tombstone rows are a
         # pure row-wise function of the ALREADY-COLLECTED delta — when
         # no group needs a rescan, compute them here and write one
@@ -1275,15 +1283,7 @@ def _refresh_matview_impl(catalog, name: str) -> Dict[str, int]:
             catalog.spark.sparkContext.parallelize(local_rows, 1),
             merged.schema,
         )
-        n_rescan = n_up = n_dead = 0
-        for r in local_rows:
-            if r[_STAR] > 0:
-                if r["__mv_rescan__"]:
-                    n_rescan += 1
-                else:
-                    n_up += 1
-            elif r["__mv_existed__"]:
-                n_dead += 1
+        n_rescan, n_up, n_dead = _count_delta_groups(local_rows)
         n_up += n_rescan
     else:
         merged = _lazy_checkpoint(merged)

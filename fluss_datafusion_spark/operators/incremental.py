@@ -493,7 +493,7 @@ def dedup_ingest_sink(
     """
     from pyspark.sql import functions as F  # noqa: F811 (local clarity)
 
-    from fluss_datafusion_spark.catalog.catalog import _RMW_LOCAL_CAP
+    from fluss_datafusion_spark.catalog.catalog import _LOCAL_ROW_CAP
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         import contextlib
@@ -557,9 +557,7 @@ def dedup_ingest_sink(
                 # collect is a cache read, never a second execution
                 _parallel_writes(
                     lambda: catalog.insert(
-                        table,
-                        survivors,
-                        collect_local=n_kept <= _RMW_LOCAL_CAP,
+                        table, survivors, local=n_kept <= _LOCAL_ROW_CAP
                     ),
                     lambda: append_to_index(
                         survivors, id_col, text_col, index_path
@@ -853,15 +851,6 @@ def write_hamming_index(
         fh.write(token)
 
 
-# Batches at or under this many fingerprint rows append to the hamming
-# index DRIVER-SIDE: one collect of the (id, hash, band-keys) frame, two
-# pyarrow part files — instead of two distributed write jobs through the
-# committer.  Same small-delta rationale (and the same cap) as the
-# catalog's collect-local seam; past the cap the distributed appends run
-# unchanged, so 100 TB-scale batches never collect.
-_HAMMING_LOCAL_APPEND_CAP = 10_000
-
-
 def _local_append_hamming(
     df: DataFrame,
     id_col: str,
@@ -876,15 +865,18 @@ def _local_append_hamming(
     construction, no Python twin of the bit arithmetic), each store
     gets one pyarrow part file written under the store's EXISTING
     parquet schema, and the skipping manifest is extended for the new
-    files only.  Returns False (caller falls back to the distributed
-    appends) when either store is missing or its schema can't be read,
-    or when collecting, building or writing fails (e.g. a null hash) —
-    never raises; a file written before a failure is removed, so the
-    fallback does not append it twice."""
+    files only.  Same small-delta rationale and the same row cap as the
+    catalog's driver-local seam (_collect_capped).  Returns False (the
+    caller runs the distributed appends) past the cap, when either
+    store is missing or its schema can't be read, or when collecting,
+    building or writing fails (e.g. a null hash) — never raises; a file
+    written before a failure is removed, so the fallback does not
+    append it twice."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     from fluss_datafusion_spark.catalog.catalog import (
+        _collect_capped,
         _parquet_files,
         _write_parquet_atomic,
     )
@@ -904,21 +896,18 @@ def _local_append_hamming(
         # two selects: the band keys read __h__ from the projection
         # below, never from an input column that happens to share the
         # name (a lateral alias would resolve to the input's)
-        rows = (
+        rows = _collect_capped(
             df.select(
                 F.col(id_col).alias("__id__"), F.col(hash_col).alias("__h__")
-            )
-            .select(
+            ).select(
                 "__id__",
                 "__h__",
                 F.array(*hamming_band_keys(n_bands, key_blocks)).alias(
                     "__keys__"
                 ),
             )
-            .limit(_HAMMING_LOCAL_APPEND_CAP + 1)
-            .collect()
         )
-        if len(rows) > _HAMMING_LOCAL_APPEND_CAP:
+        if rows is None:
             return False
         ids = [r["__id__"] for r in rows]
         hs = [r["__h__"] for r in rows]
@@ -967,25 +956,21 @@ def append_to_hamming_index(
     path: str,
     n_bands: int = 4,
     key_blocks: int = 1,
-    known_count: Optional[int] = None,
+    local: bool = False,
 ) -> None:
     """Pure parquet appends to both stores — no read-modify-write, so
     appended == rebuilt exactly (the BM25/ANN index discipline).
     ``key_blocks`` must match the index build (the marker token pins
     it).
 
-    ``known_count``: callers that already counted the batch (ingest
-    sinks materialize their survivors cache with a count) pass it so a
-    small batch appends DRIVER-SIDE — one collect of the cached frame
-    and two pyarrow part files instead of two write jobs (see
+    ``local=True``: callers that already counted a non-empty batch at
+    or under the row cap (ingest sinks materialize their survivors cache
+    with a count) append it DRIVER-SIDE — one collect of the cached
+    frame and two pyarrow part files instead of two write jobs (see
     _local_append_hamming); large/unknown batches keep the distributed
     appends."""
-    if (
-        known_count is not None
-        and 0 < known_count <= _HAMMING_LOCAL_APPEND_CAP
-        and _local_append_hamming(
-            df, id_col, hash_col, path, n_bands, key_blocks
-        )
+    if local and _local_append_hamming(
+        df, id_col, hash_col, path, n_bands, key_blocks
     ):
         return
     hashes = df.select(
@@ -1213,6 +1198,7 @@ def media_ingest_sink(
     hooks, and NEGATIVE for row-expanding hooks (a scene hook emits
     several rows per video); n_dropped/n_kept are at fingerprint-row
     grain."""
+    from fluss_datafusion_spark.catalog.catalog import _LOCAL_ROW_CAP
     from fluss_datafusion_spark.functions.multimodal import image_dhash_stats
 
     fp_fn = fingerprint if fingerprint is not None else image_dhash_stats
@@ -1292,15 +1278,12 @@ def media_ingest_sink(
                 # batch takes both driver-local write paths — the
                 # "probe" collects are cache reads, never a second
                 # execution (r13).
+                local = n_kept <= _LOCAL_ROW_CAP
                 _parallel_writes(
-                    lambda: catalog.insert(
-                        table, survivors,
-                        collect_local=n_kept <= _HAMMING_LOCAL_APPEND_CAP,
-                    ),
+                    lambda: catalog.insert(table, survivors, local=local),
                     lambda: append_to_hamming_index(
                         survivors, id_col, hash_col, index_path,
-                        n_bands=n_bands, key_blocks=key_blocks,
-                        known_count=n_kept,
+                        n_bands=n_bands, key_blocks=key_blocks, local=local,
                     ),
                 )
             release_candidate_cache(pairs)

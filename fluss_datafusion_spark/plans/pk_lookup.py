@@ -20,7 +20,7 @@ unless it is a tombstone.  The answer comes back as a LocalRelation
 frame (an inline VALUES table), so collecting it runs no Spark job.
 
 Caps — the read stays driver-local only when the listed directory
-holds at most ``_RMW_PROBE_MAX_FILES`` data files totalling at most
+holds at most ``_LOCAL_FILE_CAP`` data files totalling at most
 ``spark.sql.autoBroadcastJoinThreshold`` bytes and every column type
 has a pyarrow mapping (``_pa_type``).  A statement of the shape that
 fails a cap, sits on a partitioned table, or hits any read error falls
@@ -158,7 +158,7 @@ def _local_read(session, spec, key: Dict[str, object], cols) -> Optional[list]:
     from fluss_datafusion_spark.catalog.catalog import (
         _BKT,
         _DEL,
-        _RMW_PROBE_MAX_FILES,
+        _LOCAL_FILE_CAP,
         _SEQ,
         _SUB,
         _has_data,
@@ -194,8 +194,8 @@ def _local_read(session, spec, key: Dict[str, object], cols) -> Optional[list]:
     # — a listing that overlapped one may have seen a partial tree.
     before = os.stat(table_dir).st_ino
     files = sorted(_parquet_files(read_dir))
-    if len(files) > _RMW_PROBE_MAX_FILES:
-        raise _Decline(f"{len(files)} files > {_RMW_PROBE_MAX_FILES}")
+    if len(files) > _LOCAL_FILE_CAP:
+        raise _Decline(f"{len(files)} files > {_LOCAL_FILE_CAP}")
     size = sum(os.path.getsize(f) for f in files)
     cap = _broadcast_threshold(session.spark)
     if files and size > cap:

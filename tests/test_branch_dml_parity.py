@@ -216,8 +216,8 @@ def test_bucketed_empty_delta_same_physical_trace(spark, tmp_path,
                 or real(self, *a, **k),
             )
             if not local:
-                for seam in ("_try_local_append", "_try_collect_local_append"):
-                    m.setattr(FlussCatalog, seam, lambda self, *a, **k: None)
+                m.setattr(FlussCatalog, "_try_local_write",
+                          lambda self, *a, **k: None)
             e = EngineSession(spark=spark,
                               warehouse=str(tmp_path / f"wh_{local}"))
             e.sql("CREATE TABLE bz (k BIGINT NOT NULL, v BIGINT,"

@@ -49,8 +49,7 @@ def _engines(spark):
 
 
 def _disable_local(m):
-    for seam in ("_try_local_append", "_try_collect_local_append"):
-        m.setattr(FlussCatalog, seam, lambda self, *a, **k: None)
+    m.setattr(FlussCatalog, "_try_local_write", lambda self, *a, **k: None)
 
 
 def _jobs_during(spark, fn):

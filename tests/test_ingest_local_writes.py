@@ -1,9 +1,9 @@
 """Driver-local small-batch write seams used by the ingest sinks (r13):
 
-- ``Catalog.insert(..., collect_local=True)`` — the RMW collect-local
-  path opened to DataFrame inserts whose caller already knows the row
+- ``Catalog.insert(..., local=True)`` — the driver-local write seam
+  opened to DataFrame inserts whose caller already knows the row
   count (micro-batch survivors caches);
-- ``append_to_hamming_index(..., known_count=n)`` — one collect + two
+- ``append_to_hamming_index(..., local=True)`` — one collect + two
   pyarrow part files instead of two distributed append jobs;
 - the metrics-off sink shape (count jobs skipped) writes the same table.
 """
@@ -30,7 +30,7 @@ def _canon(df):
 
 
 def test_insert_collect_local_state_parity(engine, spark, tmp_path):
-    """A DataFrame insert through collect_local=True lands identical
+    """A DataFrame insert through local=True lands identical
     state, versions, and changelog as the distributed writer, and the
     local path really was taken (a -local part file exists)."""
     e1 = engine
@@ -46,14 +46,14 @@ def test_insert_collect_local_state_parity(engine, spark, tmp_path):
         "k long, v string, x double",
     ).persist()
     batch.count()
-    e1.catalog.insert("st", batch, collect_local=True)
-    e2.catalog.insert("st", batch, collect_local=False)
+    e1.catalog.insert("st", batch, local=True)
+    e2.catalog.insert("st", batch, local=False)
     batch.unpersist()
 
     t1 = e1.catalog.table_path(e1.catalog.get_table("st"))
     t2 = e2.catalog.table_path(e2.catalog.get_table("st"))
     # the seed literal INSERT lands one -local file in each warehouse;
-    # the DataFrame batch adds a second only on the collect_local side
+    # the DataFrame batch adds a second only on the local side
     def n_local(t):
         return sum(
             1 for f in os.listdir(t)
@@ -80,13 +80,13 @@ def test_insert_collect_local_falls_back_past_cap(engine, spark, monkeypatch):
     runs — rows land exactly once either way."""
     from fluss_datafusion_spark.catalog import catalog as cat
 
-    monkeypatch.setattr(cat, "_RMW_LOCAL_CAP", 4)
+    monkeypatch.setattr(cat, "_LOCAL_ROW_CAP", 4)
     e = engine
     e.sql("CREATE TABLE big (k BIGINT NOT NULL, v BIGINT, PRIMARY KEY (k))")
     batch = spark.range(10).select(
         F.col("id").alias("k"), (F.col("id") * 2).alias("v")
     )
-    n = e.catalog.insert("big", batch, collect_local=True)
+    n = e.catalog.insert("big", batch, local=True)
     assert n == 10
     t = e.catalog.table_path(e.catalog.get_table("big"))
     assert not any(
@@ -96,7 +96,7 @@ def test_insert_collect_local_falls_back_past_cap(engine, spark, monkeypatch):
 
 
 def test_hamming_local_append_matches_distributed(spark, tmp_path):
-    """known_count-gated driver-local append produces stores equal (rows
+    """local=True driver-local append produces stores equal (rows
     AND physical schema) to the distributed append, and the skipping
     manifest covers the new files."""
     media_all = image_dhash_stats(
@@ -116,7 +116,7 @@ def test_hamming_local_append_matches_distributed(spark, tmp_path):
     for p in (local_idx, dist_idx):
         inc.write_hamming_index(corpus, "media_id", "dhash", p)
     inc.append_to_hamming_index(
-        batch, "media_id", "dhash", local_idx, known_count=n
+        batch, "media_id", "dhash", local_idx, local=True
     )
     inc.append_to_hamming_index(batch, "media_id", "dhash", dist_idx)
     batch.unpersist()
@@ -161,7 +161,7 @@ def test_hamming_local_append_probe_equivalence(spark, tmp_path):
     for p in (local_idx, dist_idx):
         inc.write_hamming_index(corpus, "media_id", "dhash", p)
     inc.append_to_hamming_index(
-        first, "media_id", "dhash", local_idx, known_count=n
+        first, "media_id", "dhash", local_idx, local=True
     )
     inc.append_to_hamming_index(first, "media_id", "dhash", dist_idx)
     first.unpersist()
@@ -261,7 +261,7 @@ def test_hamming_local_append_null_hash_falls_back(spark, tmp_path):
         [(100, 5), (101, None)], "media_id long, dhash long"
     )
     assert inc._local_append_hamming(batch, "media_id", "dhash", idx, 4, 1) is False
-    inc.append_to_hamming_index(batch, "media_id", "dhash", idx, known_count=2)
+    inc.append_to_hamming_index(batch, "media_id", "dhash", idx, local=True)
     for store in ("hashes", "buckets"):
         assert not any("-local" in f for f in os.listdir(os.path.join(idx, store)))
     ids = {r[0] for r in spark.read.parquet(os.path.join(idx, "hashes")).collect()}
@@ -280,7 +280,7 @@ def test_hamming_local_append_ignores_an_input_h_column(spark, tmp_path):
     for p in (local_idx, dist_idx):
         inc.write_hamming_index(corpus, "media_id", "dhash", p)
     inc.append_to_hamming_index(
-        batch, "media_id", "dhash", local_idx, known_count=8
+        batch, "media_id", "dhash", local_idx, local=True
     )
     inc.append_to_hamming_index(batch, "media_id", "dhash", dist_idx)
     lp = os.path.join(local_idx, "buckets")

@@ -40,7 +40,7 @@ def _local_files(e, name):
 
 def _disable_local(monkeypatch):
     monkeypatch.setattr(
-        FlussCatalog, "_try_local_append", lambda self, *a, **k: None
+        FlussCatalog, "_try_local_write", lambda self, *a, **k: None
     )
 
 

@@ -291,7 +291,7 @@ def test_failed_write_leaves_no_reservation(
             m.setattr(catalog_mod, "_write_parquet_atomic", boom)
         else:
             m.setattr(
-                catalog_mod.FlussCatalog, "_try_local_append",
+                catalog_mod.FlussCatalog, "_try_local_write",
                 lambda self, *a, **k: None,
             )
             m.setattr(DataFrameWriter, "parquet", boom)
@@ -314,3 +314,70 @@ def test_failed_write_leaves_no_reservation(
     assert sorted(
         tuple(r) for r in e1.sql("SELECT id, v FROM t").collect()
     ) == want
+
+
+@pytest.mark.parametrize("backend_cls", BACKENDS)
+@pytest.mark.parametrize("publish", ["fast_forward", "cherry_pick"])
+@pytest.mark.parametrize("landed", [False, True])
+def test_failed_branch_publish_leaves_no_reservation(
+    spark, tmp_path, monkeypatch, backend_cls, publish, landed
+):
+    """A branch publish that raises after reserving its main-space seqs
+    (fast-forward's file move, cherry-pick's restamp write) must not
+    leave ``<seq>.inflight`` behind, or every later COMPACT stalls for
+    MAINT_WAIT_SECS and fails.  With no file published the seqs are
+    released and another session can publish the branch; with some
+    published ("landed") they are recorded and never handed out
+    again."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    e1, e2, shared = _pair(spark, tmp_path, backend_cls)
+    e1.sql("INSERT INTO t VALUES (1, 'a')")
+    e1.sql("ALTER TABLE t CREATE BRANCH dev")
+    e1.sql("INSERT INTO t$branch('dev') VALUES (2, 'b')")
+    e1.sql("INSERT INTO t$branch('dev') VALUES (3, 'c')")
+    cat = e1.catalog
+    cat.MAINT_WAIT_SECS = 1.0
+    with monkeypatch.context() as m:
+        if publish == "fast_forward":
+            real_rename, moved = os.rename, []
+
+            def boom(src, dst, *a, **k):
+                if landed and not moved:  # the first move lands
+                    moved.append(dst)
+                    return real_rename(src, dst, *a, **k)
+                raise OSError("injected publish failure")
+
+            m.setattr(os, "rename", boom)
+        else:
+            real_parquet = DataFrameWriter.parquet
+
+            def boom(*a, **k):
+                if landed:
+                    real_parquet(*a, **k)
+                raise OSError("injected publish failure")
+
+            m.setattr(DataFrameWriter, "parquet", boom)
+        with pytest.raises(OSError, match="injected"):
+            getattr(cat, publish)("t", "dev")
+    spec = cat.get_table("t")
+    assert [
+        f for f in shared.list_names(cat._commit_dir(spec))
+        if f.endswith(".inflight")
+    ] == []
+    cat.compact("t")
+    if landed:
+        e1.sql("INSERT INTO t VALUES (9, 'z')")
+        seqs = {
+            r["__seq__"]
+            for r in e1.sql("SELECT DISTINCT __seq__ FROM t$history").collect()
+        }
+        assert max(seqs) == 4  # seqs 2 and 3 stay taken
+    else:
+        assert _rows(e1) == [(1, "a")]
+        assert getattr(e2.catalog, publish)("t", "dev")["advanced_to"] == 3
+        assert _rows(e2) == [(1, "a"), (2, "b"), (3, "c")]
+
+
+def _rows(e):
+    return sorted(tuple(r) for r in e.sql("SELECT id, v FROM t").collect())

@@ -239,7 +239,7 @@ def test_explain_shows_the_lookup_path(kv, monkeypatch):
     plan = kv.sql("EXPLAIN SELECT * FROM kv WHERE k = 1").collect()[0][0]
     assert "primary-key point lookup, driver-local read" in plan
     assert "LocalTableScan" in plan and "FileScan" not in plan
-    monkeypatch.setattr(cat_mod, "_RMW_PROBE_MAX_FILES", 0)
+    monkeypatch.setattr(cat_mod, "_LOCAL_FILE_CAP", 0)
     plan = kv.sql("EXPLAIN SELECT * FROM kv WHERE k = 1").collect()[0][0]
     assert "primary-key point lookup, catalog.lookup" in plan
     assert "FileScan" in plan
@@ -268,7 +268,7 @@ def _rows(df):
 
 
 def test_over_the_file_cap_falls_back(kv, monkeypatch):
-    monkeypatch.setattr(cat_mod, "_RMW_PROBE_MAX_FILES", 0)
+    monkeypatch.setattr(cat_mod, "_LOCAL_FILE_CAP", 0)
     df, path = pk_lookup.try_pk_lookup(kv, "SELECT * FROM kv WHERE k = 3")
     assert path.startswith("catalog.lookup (") and "files" in path
     assert _rows(df) == [(3, "c")]

@@ -1,5 +1,5 @@
 """RMW driver-local append fast path (r12 fd7409e, tested r13):
-UPDATE / predicate-DELETE / MERGE deltas at or under _RMW_LOCAL_CAP are
+UPDATE / predicate-DELETE / MERGE deltas at or under _LOCAL_ROW_CAP are
 collected once and written as ONE driver-side pyarrow file.  These
 tests pin (a) state parity with the distributed writer, (b) the cap
 boundary and fallback past it, (c) branch variants, (d) the
@@ -8,6 +8,7 @@ computed on the MERGE fused local path (ADVICE r12 high: the direct
 call site bypassed _apply_generated and persisted stale values)."""
 
 import os
+import random
 
 import pytest
 
@@ -34,13 +35,10 @@ def _local_files(e, name):
 
 
 def _disable_rmw_local(monkeypatch):
-    # disable BOTH driver-local seams so the comparison engine is pure
-    # distributed writes (literal INSERTs would otherwise still go local)
+    # disable the driver-local seam so the comparison engine is pure
+    # distributed writes (literal INSERTs included)
     monkeypatch.setattr(
-        FlussCatalog, "_try_collect_local_append", lambda self, *a, **k: None
-    )
-    monkeypatch.setattr(
-        FlussCatalog, "_try_local_append", lambda self, *a, **k: None
+        FlussCatalog, "_try_local_write", lambda self, *a, **k: None
     )
 
 
@@ -151,23 +149,140 @@ def test_merge_local_applies_generated_columns(engine):
         == {(1, 50, 100), (3, 6, 12)}
 
 
-def test_rmw_cap_boundary_and_fallback(engine, monkeypatch):
-    """At the cap the delta still writes locally; one row past it the
-    probe declines and the distributed writer runs — same results."""
-    e = engine
+# Cap-boundary paths: each sets up its target and returns (write(n) for
+# an n-row input, local file count, state, expected final state, local
+# files per local write).
+def _cap_path_values(e, spark, tmp_path):
+    e.sql("CREATE TABLE ct (k BIGINT NOT NULL, v BIGINT, PRIMARY KEY (k))")
+
+    def write(n):
+        e.sql("INSERT INTO ct VALUES " + ", ".join(
+            f"({k}, {k * 10})" for k in range(10 * n, 11 * n)))
+
+    want = sorted((k, k * 10) for n in (3, 4) for k in range(10 * n, 11 * n))
+    return (write, lambda: len(_local_files(e, "ct")),
+            lambda: _canon(e.sql("SELECT k, v FROM ct")), want, 1)
+
+
+def _cap_path_update(e, spark, tmp_path):
     e.sql("CREATE TABLE ct (k BIGINT NOT NULL, v BIGINT, PRIMARY KEY (k))")
     e.sql("INSERT INTO ct VALUES " + ", ".join(
         f"({i}, {i * 10})" for i in range(1, 8)))
-    monkeypatch.setattr(cat_mod, "_RMW_LOCAL_CAP", 3)
-    before = len(_local_files(e, "ct"))
-    e.sql("UPDATE ct SET v = v + 1 WHERE k <= 3")  # delta == cap -> local
-    assert len(_local_files(e, "ct")) == before + 1
-    e.sql("UPDATE ct SET v = v + 1 WHERE k <= 4")  # delta == cap+1 -> spark
-    assert len(_local_files(e, "ct")) == before + 1
-    assert _canon(e.sql("SELECT k, v FROM ct")) == sorted(
+
+    def write(n):
+        e.sql(f"UPDATE ct SET v = v + 1 WHERE k <= {n}")
+
+    want = sorted(
         (i, i * 10 + (2 if i <= 3 else 1 if i == 4 else 0))
         for i in range(1, 8)
     )
+    return (write, lambda: len(_local_files(e, "ct")),
+            lambda: _canon(e.sql("SELECT k, v FROM ct")), want, 1)
+
+
+def _cap_path_cached_insert(e, spark, tmp_path):
+    e.sql("CREATE TABLE ct (k BIGINT NOT NULL, v BIGINT, PRIMARY KEY (k))")
+
+    def write(n):
+        batch = spark.createDataFrame(
+            [(k, k * 10) for k in range(10 * n, 11 * n)], "k long, v long"
+        ).persist()
+        batch.count()
+        e.catalog.insert("ct", batch, local=True)
+        batch.unpersist()
+
+    want = sorted((k, k * 10) for n in (3, 4) for k in range(10 * n, 11 * n))
+    return (write, lambda: len(_local_files(e, "ct")),
+            lambda: _canon(e.sql("SELECT k, v FROM ct")), want, 1)
+
+
+def _cap_path_hamming(e, spark, tmp_path):
+    from fluss_datafusion_spark.operators import incremental as inc
+
+    rng = random.Random(7)
+    idx = str(tmp_path / "idx")
+    corpus = [(i, rng.getrandbits(63)) for i in range(20)]
+    inc.write_hamming_index(
+        spark.createDataFrame(corpus, "media_id long, dhash long"),
+        "media_id", "dhash", idx,
+    )
+    batches = {
+        n: [(k, rng.getrandbits(63)) for k in range(10 * n, 11 * n)]
+        for n in (3, 4)
+    }
+
+    def write(n):
+        inc.append_to_hamming_index(
+            spark.createDataFrame(batches[n], "media_id long, dhash long"),
+            "media_id", "dhash", idx, local=True,
+        )
+
+    def n_local():
+        return sum(
+            "-local" in f
+            for store in ("hashes", "buckets")
+            for f in os.listdir(os.path.join(idx, store))
+        )
+
+    def state():
+        hashes = _canon(spark.read.parquet(os.path.join(idx, "hashes")))
+        bucket_ids = sorted({
+            r[0] for r in spark.read.parquet(
+                os.path.join(idx, "buckets")).select("__id__").collect()
+        })
+        return hashes, bucket_ids
+
+    rows = corpus + batches[3] + batches[4]
+    # one part file per store
+    return (write, n_local, state,
+            (sorted(rows), sorted(k for k, _ in rows)), 2)
+
+
+def _cap_path_matview(e, spark, tmp_path):
+    e.sql("CREATE TABLE ms (k BIGINT NOT NULL, g STRING, x BIGINT,"
+          " PRIMARY KEY (k))")
+    e.sql("INSERT INTO ms VALUES (1, 'a', 10), (2, 'b', 20)")
+    e.sql("CREATE MATERIALIZED VIEW msv AS SELECT g, count(*) AS n,"
+          " sum(x) AS sx FROM ms GROUP BY g")
+
+    def write(n):
+        # n new groups -> an n-group refresh delta
+        e.sql("INSERT INTO ms VALUES " + ", ".join(
+            f"({k}, 'g{k}', {k})" for k in range(10 * n, 11 * n)))
+        e.sql("REFRESH MATERIALIZED VIEW msv")
+
+    want = sorted(
+        [("a", 1, 10), ("b", 1, 20)]
+        + [(f"g{k}", 1, k) for n in (3, 4) for k in range(10 * n, 11 * n)]
+    )
+    return (write, lambda: len(_local_files(e, "msv")),
+            lambda: _canon(e.sql("SELECT g, n, sx FROM msv")), want, 1)
+
+
+_CAP_PATHS = {
+    "values": _cap_path_values,
+    "update": _cap_path_update,
+    "cached_insert": _cap_path_cached_insert,
+    "hamming": _cap_path_hamming,
+    "matview": _cap_path_matview,
+}
+
+
+@pytest.mark.parametrize("path", list(_CAP_PATHS))
+def test_rmw_cap_boundary_and_fallback(engine, spark, tmp_path, monkeypatch,
+                                       path):
+    """Every driver-local write path obeys the one row cap: at the cap
+    the rows still write locally; one row past it the capped collect
+    declines and the distributed writer runs — same results."""
+    write, n_local, state, want, files_per_write = _CAP_PATHS[path](
+        engine, spark, tmp_path)
+    monkeypatch.setattr(cat_mod, "_LOCAL_ROW_CAP", 3)
+    before = n_local()
+    write(3)  # rows == cap -> local
+    assert n_local() == before + files_per_write
+    write(4)  # rows == cap+1 -> distributed
+    assert n_local() == before + files_per_write
+    assert state() == want
 
 
 def test_rmw_branch_variants_local(engine):
@@ -211,7 +326,7 @@ def test_probe_gate_pk_bounded_vs_unbounded(engine, monkeypatch):
     e = engine
     e.sql("CREATE TABLE gp (k BIGINT NOT NULL, v BIGINT, PRIMARY KEY (k))")
     e.sql("INSERT INTO gp VALUES (1, 10), (2, 20), (3, 30)")
-    monkeypatch.setattr(cat_mod, "_RMW_PROBE_MAX_FILES", 0)
+    monkeypatch.setattr(cat_mod, "_LOCAL_FILE_CAP", 0)
     n0 = len(_local_files(e, "gp"))
     e.sql("UPDATE gp SET v = v + 1 WHERE v >= 10")  # unbounded shape
     assert len(_local_files(e, "gp")) == n0, "unbounded UPDATE must not probe"
