@@ -1136,6 +1136,8 @@ class FlussCatalog:
                 except BaseException:
                     for s in got:  # the _unwind_seq rule, per seq
                         self._unwind_seq(spec, s, None, bool(landed))
+                    if not landed:
+                        self._rewind_seq(spec, got)
                     raise
                 # footer-stats harvest so the published files keep
                 # skipping coverage (branch-side manifests stay behind
@@ -1296,6 +1298,8 @@ class FlussCatalog:
                 landed = bool(_parquet_files(path) - before)
                 for s in got:  # the _unwind_seq rule, per seq
                     self._unwind_seq(spec, s, None, landed)
+                if not landed:
+                    self._rewind_seq(spec, got)
                 raise
             moved = 0
             if not empty:
@@ -2214,6 +2218,19 @@ class FlussCatalog:
         )
         for n in seqs:
             self.locking.delete(os.path.join(d, f"{int(n):010d}.inflight"))
+
+    def _rewind_seq(self, spec: TableSpec, released: List[int]) -> None:
+        """Roll the session counter back below ``released`` — seqs a
+        branch publish reserved from its fork and released unused —
+        when they include its top.  _reserve_seqs advanced the counter
+        before the publish wrote anything; left there, this session's
+        retry would read a commit that never happened (fast_forward: a
+        spurious ConcurrentWriteConflict; cherry_pick: a publish past a
+        gap).  Plain writes keep released seqs as gaps (_release_seqs):
+        only a publish needs main to sit exactly at its fork."""
+        key = spec.qualified_name
+        if self._seq.get(key) in released:
+            self._seq[key] = min(released) - 1
 
     # -- maintenance exclusion (r7) ---------------------------------------
     #

@@ -407,22 +407,23 @@ def _shingle_hash_sets(
     return toks.mapInPandas(sets_fn, "__id__ long, __sh__ array<long>")
 
 
-def _band_buckets_from_token_hashes(
-    toks: DataFrame, k: int, num_perm: int, rows_per_band: int
-) -> DataFrame:
-    """(id, band, bucket) from per-token xxhash64 arrays ``__th__``:
+def _band_values(th_list, k: int, num_perm: int, rows_per_band: int):
+    """Packed band values, an (n_docs, num_perm / rows_per_band) int64
+    array, from per-doc token xxhash64 arrays (each of >= k tokens):
     shingle hashes are the rolling polynomial
     ``sum_j C^(k-j) * th[i+j]  (mod 2^64, then mod 2^31-1)`` —
     order-sensitive, computed on the flat batch array with cross-doc
-    windows masked out — then the shared OPH pack.  Every consumer of
-    LSH buckets (batch pairs, incremental index build AND probes,
-    ingest sinks) derives them through this one kernel, so bucket
-    values always agree between an index and its probes."""
+    windows masked out — then the shared OPH pack.  The one numpy body
+    behind every LSH bucket: the mapInPandas kernel below and the
+    dedup index's driver-local append both call it, so bucket values
+    always agree between an index and its probes."""
     import numpy as np
-    import pandas as pd
 
     if rows_per_band != 2:
         raise ValueError("injective band packing requires rows_per_band=2")
+    n_docs = len(th_list)
+    if n_docs == 0:
+        return np.empty((0, num_perm // rows_per_band), dtype=np.int64)
     # rolling-polynomial coefficients: powers of an odd 64-bit constant,
     # wrapped mod 2^64 in Python ints (numpy scalar uint64 multiply
     # warns on overflow; array ops wrap silently — keep both silent)
@@ -432,27 +433,36 @@ def _band_buckets_from_token_hashes(
         acc = (acc * 0x9E3779B97F4A7C15) % (1 << 64)
         coeffs.append(np.uint64(acc))
     m31 = np.uint64((1 << 31) - 1)
+    arrs = [np.asarray(h, dtype=np.int64) for h in th_list]
+    counts = np.fromiter((a.size for a in arrs), dtype=np.int64, count=n_docs)
+    flat = np.concatenate(arrs).astype(np.uint64)
+    doc_idx = np.repeat(np.arange(n_docs), counts)
+    m = flat.size - (k - 1)
+    sh = np.zeros(m, dtype=np.uint64)
+    for j, c in enumerate(coeffs):
+        sh += c * flat[j : j + m]  # wraps mod 2^64 (hash mixing)
+    valid = doc_idx[:m] == doc_idx[k - 1 :]
+    hashes = (sh[valid] % m31).astype(np.int64)
+    return _oph_pack(np, doc_idx[:m][valid], hashes, n_docs, num_perm)
+
+
+def _band_buckets_from_token_hashes(
+    toks: DataFrame, k: int, num_perm: int, rows_per_band: int
+) -> DataFrame:
+    """(id, band, bucket) from per-token xxhash64 arrays ``__th__``
+    through the _band_values kernel.  Every consumer of LSH buckets
+    (batch pairs, incremental index build AND probes, ingest sinks)
+    derives them through this one kernel, so bucket values always agree
+    between an index and its probes."""
+    import pandas as pd
+
+    if rows_per_band != 2:
+        # fail at plan construction, not inside the first Python worker
+        raise ValueError("injective band packing requires rows_per_band=2")
 
     def buckets_fn(it):
         for pdf in it:
-            th_list = pdf["__th__"]
-            n_docs = len(th_list)
-            if n_docs == 0:
-                yield pd.DataFrame({"__id__": pdf["__id__"], "__bks__": []})
-                continue
-            arrs = [np.asarray(h, dtype=np.int64) for h in th_list]
-            counts = np.fromiter(
-                (a.size for a in arrs), dtype=np.int64, count=n_docs
-            )
-            flat = np.concatenate(arrs).astype(np.uint64)
-            doc_idx = np.repeat(np.arange(n_docs), counts)
-            m = flat.size - (k - 1)
-            sh = np.zeros(m, dtype=np.uint64)
-            for j, c in enumerate(coeffs):
-                sh += c * flat[j : j + m]  # wraps mod 2^64 (hash mixing)
-            valid = doc_idx[:m] == doc_idx[k - 1 :]
-            hashes = (sh[valid] % m31).astype(np.int64)
-            packed = _oph_pack(np, doc_idx[:m][valid], hashes, n_docs, num_perm)
+            packed = _band_values(pdf["__th__"], k, num_perm, rows_per_band)
             yield pd.DataFrame(
                 {"__id__": pdf["__id__"], "__bks__": list(packed)}
             )

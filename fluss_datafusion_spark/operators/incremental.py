@@ -341,6 +341,96 @@ def incremental_dedup_pairs(
     return _attach_cached_deps(verified, raw_candidates, new_buckets, sh)
 
 
+def _bump_index_marker(path: str, n_rows: int) -> None:
+    """Add ``n_rows`` to the ``_BUILT`` marker's corpus count so a later
+    ensure_dedup_index doesn't see a stale token and rebuild over the
+    appended index."""
+    marker = _index_marker_path(path)
+    try:
+        with open(marker, "r", encoding="utf-8") as fh:
+            head, _, n = fh.read().rpartition("|n=")
+        if head and n.isdigit():
+            with open(marker, "w", encoding="utf-8") as fh:
+                fh.write(f"{head}|n={int(n) + n_rows}")
+    except OSError:
+        pass
+
+
+def _local_append_dedup(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    path: str,
+    k: int,
+    num_perm: int,
+    rows_per_band: int,
+) -> bool:
+    """Driver-local small-batch append to both dedup stores: one capped
+    collect of the SAME JVM expressions the distributed path evaluates
+    (word_shingles for the shingle store, the per-token xxhash64 array
+    minhash_band_buckets feeds its kernel), the bucket rows from the
+    kernel's own numpy body (dedup._band_values), then one part file
+    per store through _append_store_files.  Same filters and sort keys
+    as the distributed writer, and the marker count grows by the
+    collected row count (the distributed path's df.count()).  Returns
+    False — the caller runs the distributed appends — past the row
+    cap, when a store is missing or empty, or when collecting,
+    building or writing fails; never raises."""
+    import numpy as np
+
+    from fluss_datafusion_spark.catalog.catalog import _collect_capped
+    from fluss_datafusion_spark.functions.text import tokens
+    from fluss_datafusion_spark.operators.dedup import _band_values
+
+    try:
+        rows = _collect_capped(
+            df.select(
+                F.col(id_col).alias("__id__"),
+                word_shingles(F.col(text_col), k).alias("__sh__"),
+                F.transform(
+                    tokens(F.lower(F.col(text_col))), lambda t: F.xxhash64(t)
+                ).alias("__th__"),
+            )
+        )
+        if rows is None:
+            return False
+        # shingle rows: size(__sh__) > 0, sorted by id
+        sh = sorted(
+            (r for r in rows if r["__sh__"]), key=lambda r: r["__id__"]
+        )
+        # bucket rows: size(__th__) >= k, band values from the kernel,
+        # sorted by bucket so the file's footer bounds stay tight
+        th = [r for r in rows if len(r["__th__"] or ()) >= k]
+        packed = _band_values(
+            [r["__th__"] for r in th], k, num_perm, rows_per_band
+        )
+        n_bands = packed.shape[1]
+        order = np.argsort(packed.ravel(), kind="stable")
+        stores = [
+            (
+                os.path.join(path, "shingles"),
+                {
+                    "__id__": [r["__id__"] for r in sh],
+                    "__sh__": [r["__sh__"] for r in sh],
+                },
+            ),
+            (
+                os.path.join(path, "buckets"),
+                {
+                    "__id__": [th[i]["__id__"] for i in order // n_bands],
+                    "__band__": order % n_bands,
+                    "__bucket__": packed.ravel()[order],
+                },
+            ),
+        ]
+    except Exception:
+        return False
+    if not _append_store_files(stores):
+        return False
+    _bump_index_marker(path, len(rows))
+    return True
+
+
 def append_to_index(
     df: DataFrame,
     id_col: str,
@@ -349,13 +439,25 @@ def append_to_index(
     k: int = 3,
     num_perm: int = 128,
     rows_per_band: int = 2,
+    local: bool = False,
 ) -> None:
     """Extend an existing dedup index with new (already-deduplicated)
     documents — parquet append, no rewrite of existing files.  The batch
     is shingled once into a (bounded, batch-sized) cache feeding both
     the shingle append and the bucket derivation — append mode can't use
     the write-then-read-back trick (reading the store back would rescan
-    every earlier batch's files)."""
+    every earlier batch's files).
+
+    ``local=True``: callers that already counted a non-empty batch at
+    or under the row cap (ingest sinks materialize their survivors cache
+    with a count) append it DRIVER-SIDE — one collect of the cached
+    frame and one pyarrow part file per store instead of two write jobs
+    and a count (see _local_append_dedup); large/unknown batches, and a
+    local append that declines, keep the distributed appends."""
+    if local and _local_append_dedup(
+        df, id_col, text_col, path, k, num_perm, rows_per_band
+    ):
+        return
     sh = (
         # no spread (r13): the shingle pass lands in a persist consumed
         # by two branches — round-robin widening a batch-sized input
@@ -406,18 +508,7 @@ def append_to_index(
             _harvest_store_manifest(spath, before=before)
 
         _parallel_writes(_append_shingles, _append_buckets)
-        # Keep the build marker's corpus count current so a later
-        # ensure_dedup_index doesn't see a stale token and rebuild over
-        # the appended index.
-        marker = _index_marker_path(path)
-        try:
-            with open(marker, "r", encoding="utf-8") as fh:
-                head, _, n = fh.read().rpartition("|n=")
-            if head and n.isdigit():
-                with open(marker, "w", encoding="utf-8") as fh:
-                    fh.write(f"{head}|n={int(n) + df.count()}")
-        except OSError:
-            pass
+        _bump_index_marker(path, df.count())
     finally:
         sh.unpersist()
 
@@ -553,14 +644,14 @@ def dedup_ingest_sink(
                 # of the SAME cached frame: overlap them (r10 — see
                 # _parallel_writes for the replay-safety argument).
                 # n_kept is exact (the cache was just materialized), so
-                # a small batch's upsert goes driver-local — the capped
-                # collect is a cache read, never a second execution
+                # a small batch takes both driver-local write paths —
+                # the capped collects are cache reads, never a second
+                # execution
+                local = n_kept <= _LOCAL_ROW_CAP
                 _parallel_writes(
-                    lambda: catalog.insert(
-                        table, survivors, local=n_kept <= _LOCAL_ROW_CAP
-                    ),
+                    lambda: catalog.insert(table, survivors, local=local),
                     lambda: append_to_index(
-                        survivors, id_col, text_col, index_path
+                        survivors, id_col, text_col, index_path, local=local
                     ),
                 )
             release_candidate_cache(pairs)
@@ -681,6 +772,47 @@ def _harvest_store_manifest(store_path: str, before=None) -> None:
                 skipping.add_files(store_path, new)
     except Exception:
         pass
+
+
+def _append_store_files(stores) -> bool:
+    """The write half of every driver-local index append: ``stores`` is
+    a list of (store path, {column: values}) pairs.  Each table is cast
+    to its store's EXISTING parquet schema (so appended files stay
+    byte-compatible with the distributed writer's output), written as
+    one part file through _write_parquet_atomic, and the skipping
+    manifest is extended for the new files only.  A store with no new
+    rows gets no file.  Returns False when a store is missing or empty,
+    or when casting or writing fails; a file written before the failure
+    is removed first, so the caller's distributed fallback does not
+    append its rows twice."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from fluss_datafusion_spark.catalog.catalog import (
+        _parquet_files,
+        _write_parquet_atomic,
+    )
+
+    planned, written = [], []
+    try:
+        for store, cols in stores:
+            before = _parquet_files(store)
+            schema = pq.read_schema(min(before))  # empty store: raises
+            tab = pa.table(cols).select(schema.names).cast(schema)
+            planned.append((store, before, tab))
+        for store, _, tab in planned:
+            if tab.num_rows:
+                written.append(_write_parquet_atomic(tab, store))
+    except Exception:
+        for fpath in written:
+            try:
+                os.remove(fpath)
+            except OSError:
+                pass
+        return False
+    for store, before, _ in planned:
+        _harvest_store_manifest(store, before=before)
+    return True
 
 
 def _pruned_store_read(
@@ -862,37 +994,17 @@ def _local_append_hamming(
     """Driver-local small-batch append to both hamming stores: the band
     keys are evaluated by the SAME hamming_band_keys expressions the
     distributed path posexplodes (one collect — exactness by
-    construction, no Python twin of the bit arithmetic), each store
-    gets one pyarrow part file written under the store's EXISTING
-    parquet schema, and the skipping manifest is extended for the new
-    files only.  Same small-delta rationale and the same row cap as the
-    catalog's driver-local seam (_collect_capped).  Returns False (the
-    caller runs the distributed appends) past the cap, when either
-    store is missing or its schema can't be read, or when collecting,
-    building or writing fails (e.g. a null hash) — never raises; a file
-    written before a failure is removed, so the fallback does not
-    append it twice."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from fluss_datafusion_spark.catalog.catalog import (
-        _collect_capped,
-        _parquet_files,
-        _write_parquet_atomic,
-    )
+    construction, no Python twin of the bit arithmetic), then one part
+    file per store through _append_store_files.  Same small-delta
+    rationale and the same row cap as the catalog's driver-local seam
+    (_collect_capped).  Returns False (the caller runs the distributed
+    appends) past the cap, when either store is missing or empty, or
+    when collecting, building or writing fails (e.g. a null hash) —
+    never raises."""
+    from fluss_datafusion_spark.catalog.catalog import _collect_capped
     from fluss_datafusion_spark.operators.dedup import hamming_band_keys
 
-    bpath = os.path.join(path, "buckets")
-    hpath = os.path.join(path, "hashes")
-    written = []
     try:
-        bfiles = _parquet_files(bpath)
-        hfiles = _parquet_files(hpath)
-        # pin the collected values to the stores' existing physical
-        # schemas so appended files stay byte-compatible with the
-        # distributed writer's output
-        bschema = pq.read_schema(next(iter(sorted(bfiles))))
-        hschema = pq.read_schema(next(iter(sorted(hfiles))))
         # two selects: the band keys read __h__ from the projection
         # below, never from an input column that happens to share the
         # name (a lateral alias would resolve to the input's)
@@ -921,32 +1033,27 @@ def _local_append_hamming(
         # bounds stay tight for probe pruning (mirrors the distributed
         # path's sortWithinPartitions("__slice__"))
         order = sorted(range(len(b_slices)), key=lambda i: (b_slices[i],))
-        btab = pa.table(
-            {
-                "__id__": [b_ids[i] for i in order],
-                "__band__": [b_bands[i] for i in order],
-                "__slice__": [b_slices[i] for i in order],
-            }
-        ).select(bschema.names).cast(bschema)
         horder = sorted(range(len(ids)), key=lambda i: (ids[i],))
-        htab = pa.table(
-            {
-                "__id__": [ids[i] for i in horder],
-                "__h__": [hs[i] for i in horder],
-            }
-        ).select(hschema.names).cast(hschema)
-        for store, tab in ((bpath, btab), (hpath, htab)):
-            written.append(_write_parquet_atomic(tab, store))
+        stores = [
+            (
+                os.path.join(path, "buckets"),
+                {
+                    "__id__": [b_ids[i] for i in order],
+                    "__band__": [b_bands[i] for i in order],
+                    "__slice__": [b_slices[i] for i in order],
+                },
+            ),
+            (
+                os.path.join(path, "hashes"),
+                {
+                    "__id__": [ids[i] for i in horder],
+                    "__h__": [hs[i] for i in horder],
+                },
+            ),
+        ]
     except Exception:
-        for fpath in written:
-            try:
-                os.remove(fpath)
-            except OSError:
-                pass
         return False
-    _harvest_store_manifest(bpath, before=bfiles)
-    _harvest_store_manifest(hpath, before=hfiles)
-    return True
+    return _append_store_files(stores)
 
 
 def append_to_hamming_index(

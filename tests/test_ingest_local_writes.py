@@ -3,8 +3,9 @@
 - ``Catalog.insert(..., local=True)`` — the driver-local write seam
   opened to DataFrame inserts whose caller already knows the row
   count (micro-batch survivors caches);
-- ``append_to_hamming_index(..., local=True)`` — one collect + two
-  pyarrow part files instead of two distributed append jobs;
+- ``append_to_hamming_index(..., local=True)`` and
+  ``append_to_index(..., local=True)`` — one collect + one pyarrow part
+  file per store instead of two distributed append jobs;
 - the metrics-off sink shape (count jobs skipped) writes the same table.
 """
 
@@ -288,3 +289,131 @@ def test_hamming_local_append_ignores_an_input_h_column(spark, tmp_path):
     a = spark.read.parquet(lp)
     b = spark.read.parquet(os.path.join(dist_idx, "buckets"))
     assert a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty()
+
+
+_WORDS = (
+    "spark fluss table scan merge join window batch stream order key"
+    " value filter index probe shingle bucket band query row column"
+).split()
+
+
+def _text_frames(spark):
+    """A 30-doc corpus and a 12-doc batch over one small vocabulary.
+    The batch holds near copies of corpus docs, a two-word document
+    (fewer than k = 3 words: no shingles, no buckets) and a null text."""
+    import random
+
+    rng = random.Random(11)
+
+    def doc(n):
+        return " ".join(rng.choice(_WORDS) for _ in range(n))
+
+    corpus = [(i, doc(rng.randint(8, 30))) for i in range(30)]
+    batch = [(100 + i, corpus[i][1] + " " + doc(2)) for i in range(5)]
+    batch += [(110 + i, doc(rng.randint(5, 25))) for i in range(5)]
+    batch += [(120, "two words"), (121, None)]
+    schema = "doc_id long, text string"
+    return (
+        spark.createDataFrame(corpus, schema),
+        spark.createDataFrame(batch, schema),
+    )
+
+
+def _store_files(idx, store):
+    return os.listdir(os.path.join(idx, store))
+
+
+def _marker(idx):
+    with open(os.path.join(idx, "_BUILT"), encoding="utf-8") as fh:
+        return fh.read()
+
+
+def test_dedup_local_append_matches_distributed(spark, tmp_path):
+    """local=True appends the same rows under the same Spark schema to
+    both stores as the distributed append (the short document and the
+    null text exercise both store filters), as exactly one manifest-
+    covered -local file per store, and grows the marker count equally."""
+    from fluss_datafusion_spark.catalog import skipping
+
+    corpus, batch = _text_frames(spark)
+    batch = batch.persist()
+    batch.count()
+    local_idx, dist_idx = str(tmp_path / "local"), str(tmp_path / "dist")
+    for p in (local_idx, dist_idx):
+        inc.write_dedup_index(corpus, "doc_id", "text", p)
+    inc.append_to_index(batch, "doc_id", "text", local_idx, local=True)
+    inc.append_to_index(batch, "doc_id", "text", dist_idx)
+    batch.unpersist()
+
+    for store in ("shingles", "buckets"):
+        lp, dp = os.path.join(local_idx, store), os.path.join(dist_idx, store)
+        a, b = spark.read.parquet(lp), spark.read.parquet(dp)
+        assert a.schema == b.schema, store
+        assert a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty(), store
+        new = [f for f in os.listdir(lp) if "-local" in f]
+        assert len(new) == 1, store
+        assert not any("-local" in f for f in os.listdir(dp)), store
+        assert new[0] in skipping.load(lp), store
+    ids = lambda p, store: {  # noqa: E731
+        r[0] for r in spark.read.parquet(os.path.join(p, store))
+        .select("__id__").collect()
+    }
+    # the two filters really dropped the short and the null document
+    assert not {120, 121} & (ids(local_idx, "shingles") | ids(
+        local_idx, "buckets"))
+    assert _marker(local_idx) == _marker(dist_idx)
+    assert _marker(local_idx).endswith("|n=42")
+
+
+def test_dedup_local_append_declines_missing_store(spark, tmp_path):
+    """A missing store makes the driver-local append return False
+    without writing anything to the store that does exist."""
+    import shutil
+
+    corpus, batch = _text_frames(spark)
+    idx = str(tmp_path / "idx")
+    inc.write_dedup_index(corpus, "doc_id", "text", idx)
+    before = _marker(idx)
+    shutil.rmtree(os.path.join(idx, "shingles"))
+    assert inc._local_append_dedup(
+        batch, "doc_id", "text", idx, 3, 128, 2
+    ) is False
+    assert not any(
+        "-local" in f or f.endswith(".tmp") for f in _store_files(idx, "buckets")
+    )
+    assert _marker(idx) == before
+
+
+def test_dedup_local_append_write_failure_leaves_nothing(
+    spark, tmp_path, monkeypatch
+):
+    """A write failure on the second store returns False and removes
+    the first store's file and the second's temp file, so the
+    distributed fallback appends every row exactly once."""
+    corpus, batch = _text_frames(spark)
+    idx = str(tmp_path / "idx")
+    inc.write_dedup_index(corpus, "doc_id", "text", idx)
+    before = _marker(idx)
+    real, calls = pq.write_table, []
+
+    def flaky(table, where, *a, **k):
+        calls.append(where)
+        real(table, where, *a, **k)
+        if len(calls) == 2:
+            raise OSError("injected store-write failure")
+
+    with monkeypatch.context() as m:
+        m.setattr(pq, "write_table", flaky)
+        assert inc._local_append_dedup(
+            batch, "doc_id", "text", idx, 3, 128, 2
+        ) is False
+    assert len(calls) == 2
+    for store in ("shingles", "buckets"):
+        assert not any(
+            "-local" in f or f.endswith(".tmp")
+            for f in _store_files(idx, store)
+        ), store
+    assert _marker(idx) == before
+    inc.append_to_index(batch, "doc_id", "text", idx, local=True)
+    sh = spark.read.parquet(os.path.join(idx, "shingles"))
+    assert sh.count() == sh.select("__id__").distinct().count() == 40

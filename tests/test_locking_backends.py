@@ -328,7 +328,9 @@ def test_failed_branch_publish_leaves_no_reservation(
     MAINT_WAIT_SECS and fails.  With no file published the seqs are
     released and another session can publish the branch; with some
     published ("landed") they are recorded and never handed out
-    again."""
+    again.  The released seqs also roll the session's own counter
+    back, so the same session's retry publishes at the fork's next seq
+    instead of reading a phantom commit."""
     from pyspark.sql.readwriter import DataFrameWriter
 
     e1, e2, shared = _pair(spark, tmp_path, backend_cls)
@@ -375,7 +377,7 @@ def test_failed_branch_publish_leaves_no_reservation(
         assert max(seqs) == 4  # seqs 2 and 3 stay taken
     else:
         assert _rows(e1) == [(1, "a")]
-        assert getattr(e2.catalog, publish)("t", "dev")["advanced_to"] == 3
+        assert getattr(cat, publish)("t", "dev")["advanced_to"] == 3
         assert _rows(e2) == [(1, "a"), (2, "b"), (3, "c")]
 
 

@@ -238,6 +238,49 @@ def _cap_path_hamming(e, spark, tmp_path):
             (sorted(rows), sorted(k for k, _ in rows)), 2)
 
 
+def _cap_path_dedup_index(e, spark, tmp_path):
+    from fluss_datafusion_spark.operators import incremental as inc
+
+    rng = random.Random(7)
+    words = "spark fluss table scan merge join window batch key value".split()
+
+    def docs(ids):
+        return spark.createDataFrame(
+            [(i, " ".join(rng.choice(words) for _ in range(12))) for i in ids],
+            "doc_id long, text string",
+        )
+
+    corpus = docs(range(20))
+    batches = {n: docs(range(10 * n, 11 * n)) for n in (3, 4)}
+    idx, ref = str(tmp_path / "idx"), str(tmp_path / "ref")
+    inc.write_dedup_index(corpus, "doc_id", "text", idx)
+
+    def write(n):
+        inc.append_to_index(batches[n], "doc_id", "text", idx, local=True)
+
+    def n_local():
+        return sum(
+            "-local" in f
+            for store in ("shingles", "buckets")
+            for f in os.listdir(os.path.join(idx, store))
+        )
+
+    def state(path=idx):
+        return tuple(
+            _canon(spark.read.parquet(os.path.join(path, store)))
+            for store in ("shingles", "buckets")
+        )
+
+    # appends (local, then distributed) land what one build of the
+    # whole corpus writes
+    inc.write_dedup_index(
+        corpus.unionByName(batches[3]).unionByName(batches[4]),
+        "doc_id", "text", ref,
+    )
+    # one part file per store
+    return write, n_local, state, state(ref), 2
+
+
 def _cap_path_matview(e, spark, tmp_path):
     e.sql("CREATE TABLE ms (k BIGINT NOT NULL, g STRING, x BIGINT,"
           " PRIMARY KEY (k))")
@@ -264,6 +307,7 @@ _CAP_PATHS = {
     "update": _cap_path_update,
     "cached_insert": _cap_path_cached_insert,
     "hamming": _cap_path_hamming,
+    "dedup_index": _cap_path_dedup_index,
     "matview": _cap_path_matview,
 }
 

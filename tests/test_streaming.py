@@ -610,6 +610,84 @@ def test_dedup_ingest_sink_end_to_end(spark, tmp_path):
     assert again.filter(F.col("id_a") != F.col("id_b")).count() == 0
 
 
+def test_dedup_ingest_sink_local_index_append_matches_distributed(
+    spark, tmp_path, monkeypatch
+):
+    """Two micro-batches through ``dedup_ingest_sink`` land the same
+    table rows, the same index rows and the same probe pairs for a
+    held-out batch whether the survivors' writes run driver-local or,
+    with the row cap patched to 0, through the distributed writers."""
+    import time
+
+    from fluss_datafusion_spark import EngineSession
+    from fluss_datafusion_spark.catalog import catalog as cat
+    from fluss_datafusion_spark.operators.incremental import (
+        dedup_ingest_sink,
+        incremental_dedup_pairs,
+        release_candidate_cache,
+        write_dedup_index,
+    )
+    from fluss_datafusion_spark.session import read_table
+
+    docs = read_table(spark, "/root/testdata/sf0.001/documents.parquet").select(
+        "doc_id", "text"
+    )
+    replay = str(tmp_path / "replay")
+    os.makedirs(replay)
+    base = time.time()
+    for i, (lo, hi) in enumerate(((100, 200), (200, 300))):
+        fp = os.path.join(replay, f"b{i:05d}.parquet")
+        docs.filter(F.col("doc_id").between(lo, hi - 1)).toPandas().to_parquet(
+            fp, index=False
+        )
+        os.utime(fp, (base + i, base + i))
+    schema = spark.read.parquet(replay).schema
+    probe = docs.filter(F.col("doc_id") >= 300)
+
+    def canon(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    def run(tag):
+        e = EngineSession(spark=spark, warehouse=str(tmp_path / f"wh_{tag}"))
+        e.sql(
+            "CREATE TABLE docs_clean (doc_id BIGINT NOT NULL, text STRING,"
+            " PRIMARY KEY (doc_id))"
+        )
+        index = str(tmp_path / f"idx_{tag}")
+        write_dedup_index(
+            docs.filter(F.col("doc_id") < 100), "doc_id", "text", index
+        )
+        stream = (
+            spark.readStream.schema(schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(replay)
+        )
+        dedup_ingest_sink(
+            stream, e.catalog, "docs_clean", index, str(tmp_path / f"ck_{tag}"),
+        ).awaitTermination()
+        n_local = sum(
+            "-local" in f
+            for store in ("shingles", "buckets")
+            for f in os.listdir(os.path.join(index, store))
+        )
+        stores = [
+            canon(spark.read.parquet(os.path.join(index, store)))
+            for store in ("shingles", "buckets")
+        ]
+        pairs = incremental_dedup_pairs(probe, index, "doc_id", "text")
+        got = canon(pairs)
+        release_candidate_cache(pairs)
+        return n_local, (canon(e.sql("SELECT * FROM docs_clean")), stores, got)
+
+    n_local, local = run("local")
+    with monkeypatch.context() as m:
+        m.setattr(cat, "_LOCAL_ROW_CAP", 0)
+        n_dist, dist = run("dist")
+    assert (n_local, n_dist) == (4, 0)  # one file per store per batch
+    assert local == dist
+    assert local[2], "the held-out probe should find near-dups"
+
+
 def test_changelog_stream_ttl_late_only_key_survives(spark, tmp_path):
     """A key whose ONLY rows are late (last event + ttl <= current
     watermark) must not kill the query: the TTL timeout is clamped past
