@@ -611,7 +611,7 @@ def test_dedup_ingest_sink_end_to_end(spark, tmp_path):
 
 
 def test_dedup_ingest_sink_local_index_append_matches_distributed(
-    spark, tmp_path, monkeypatch
+    spark, tmp_path, monkeypatch, testdata
 ):
     """Two micro-batches through ``dedup_ingest_sink`` land the same
     table rows, the same index rows and the same probe pairs for a
@@ -629,7 +629,7 @@ def test_dedup_ingest_sink_local_index_append_matches_distributed(
     )
     from fluss_datafusion_spark.session import read_table
 
-    docs = read_table(spark, "/root/testdata/sf0.001/documents.parquet").select(
+    docs = read_table(spark, os.path.join(testdata, "documents.parquet")).select(
         "doc_id", "text"
     )
     replay = str(tmp_path / "replay")
