@@ -3224,13 +3224,6 @@ class FlussCatalog:
             self.spark.catalog.dropTempView(vname)
         self._rebind_logical_views()  # dependents unbind loudly
 
-    def has_view(self, name: str) -> bool:
-        db, vname = self._resolve(name)
-        return vname in self._load_view_defs(db)
-
-    def list_views(self, database: Optional[str] = None) -> List[str]:
-        return sorted(self._load_view_defs(database or self.default_database))
-
     def _bind_logical_view(self, db: str, vname: str, df=None) -> None:
         if df is None:
             df = self.spark.sql(self._load_view_defs(db)[vname])
@@ -4961,6 +4954,10 @@ class FlussCatalog:
         History below the compaction point is gone (overwritten versions
         are discarded — that's what compaction is); ``read(as_of_seq=N)``
         with N below the floor raises instead of returning wrong state.
+
+        A small unpartitioned table compacts on the driver
+        (``_compact_local``); past its caps the same merged state is
+        written by a Spark job (``_compact_distributed``).
         """
         spec = self.get_table(name)
         if not spec.has_primary_key:
@@ -4969,30 +4966,10 @@ class FlussCatalog:
             self._compact_locked(spec)
 
     def _compact_locked(self, spec: TableSpec) -> None:
-        merged = self._to_physical(
-            spec, self._merge_log(spec, self._log_df(spec), keep_internal=True)
-        )
-        # physical frame: layout columns resolve by their stored names
-        partition_cols = self._stored_names(spec, spec.partition_keys or [])
-        if spec.num_buckets and spec.bucket_keys:
-            if _BKT not in merged.columns:
-                merged = merged.withColumn(
-                    _BKT,
-                    bucket_id_expr(
-                        spec,
-                        *[
-                            F.col(k)
-                            for k in self._stored_names(spec, spec.bucket_keys)
-                        ],
-                    ),
-                )
-            partition_cols.append(_BKT)
         path = self.table_path(spec)
         tmp = path + ".compact"
-        writer = merged.write.mode("overwrite")
-        if partition_cols:
-            writer = writer.partitionBy(*partition_cols)
-        writer.parquet(tmp)
+        if not self._compact_local(spec, path, tmp):
+            self._compact_distributed(spec, tmp)
         current = self._current_seq(spec)  # recover BEFORE the log vanishes
         commits = self._load_commits(spec)
         # spec lock across the swap + re-save (see _optimize_locked)
@@ -5014,6 +4991,91 @@ class FlussCatalog:
             )
         except Exception:
             pass
+
+    def _compact_local(self, spec: TableSpec, path: str, tmp: str) -> bool:
+        """Write a small table's merged state into ``tmp`` on the
+        driver, one bucket dir (or the table dir) at a time: read it
+        with pyarrow at the spec's types, keep each key's newest live
+        row (``_newest_live``) with its original stamps, and write one
+        part file per non-empty bucket into the same ``__bkt__=<b>``
+        dir — the key's bucket cannot change, so nothing is re-hashed.
+        Same caps as the point-lookup read: at most _LOCAL_FILE_CAP
+        files and broadcast-threshold bytes.  False, with no ``tmp``
+        left, when a cap or the layout declines or any read, cast or
+        write fails; the distributed compaction then runs."""
+        import pyarrow.dataset as ds
+        from pyspark.sql import types as T
+
+        key_types = (
+            T.LongType, T.IntegerType, T.ShortType, T.ByteType,
+            T.StringType, T.DateType, T.BooleanType,
+        )
+        bucketed = bool(spec.num_buckets and spec.bucket_keys)
+        schema = _arrow_log_schema(spec)
+        if (
+            spec.partition_keys
+            or schema is None
+            or bucketed and not set(spec.bucket_keys) <= set(spec.primary_key)
+            or not all(
+                isinstance(spec.column(k).spark_type, key_types)
+                for k in spec.primary_key
+            )
+        ):
+            return False
+        files = _parquet_files(path)
+        if _over_local_caps(self.spark, files):
+            return False
+        groups: Dict[str, List[str]] = {}
+        for f in files:
+            rel = os.path.relpath(os.path.dirname(f), path)
+            in_layout = (
+                re.fullmatch(rf"{_BKT}=\d+", rel) if bucketed else rel == "."
+            )
+            if not in_layout:
+                return False  # a file outside the layout's data dirs
+            groups.setdefault(rel, []).append(f)
+        keys = self._stored_names(spec, spec.primary_key)
+        try:
+            shutil.rmtree(tmp, ignore_errors=True)
+            os.makedirs(tmp)
+            for rel, group in sorted(groups.items()):
+                log = ds.dataset(sorted(group), schema=schema, format="parquet")
+                merged = _newest_live(log.to_table(), keys)
+                if merged.num_rows:
+                    out = os.path.normpath(os.path.join(tmp, rel))
+                    os.makedirs(out, exist_ok=True)
+                    _write_parquet_atomic(merged, out)
+        except Exception:
+            shutil.rmtree(tmp, ignore_errors=True)
+            return False
+        return True
+
+    def _compact_distributed(self, spec: TableSpec, tmp: str) -> None:
+        """Write the merged state into ``tmp`` with Spark: ``_merge_log``'s
+        window plan, partitioned by the stored partition columns and
+        ``__bkt__``."""
+        merged = self._to_physical(
+            spec, self._merge_log(spec, self._log_df(spec), keep_internal=True)
+        )
+        # physical frame: layout columns resolve by their stored names
+        partition_cols = self._stored_names(spec, spec.partition_keys or [])
+        if spec.num_buckets and spec.bucket_keys:
+            if _BKT not in merged.columns:
+                merged = merged.withColumn(
+                    _BKT,
+                    bucket_id_expr(
+                        spec,
+                        *[
+                            F.col(k)
+                            for k in self._stored_names(spec, spec.bucket_keys)
+                        ],
+                    ),
+                )
+            partition_cols.append(_BKT)
+        writer = merged.write.mode("overwrite")
+        if partition_cols:
+            writer = writer.partitionBy(*partition_cols)
+        writer.parquet(tmp)
 
     def refresh_file_stats(self, name: str) -> int:
         """(Re)harvest the footer-stats manifest (+ opt-in column
@@ -5061,6 +5123,64 @@ def _parquet_files(path: str) -> set:
             if f.endswith(".parquet") and not hidden(f)
         )
     return files
+
+
+def _arrow_log_schema(spec: TableSpec):
+    """The pyarrow schema the driver-local readers read a PK table's log
+    at: every column under its stored name at its spec type (older
+    files are cast to it), then the stamps and the tombstone flag.
+    None when a column has no pyarrow type (``_pa_type``)."""
+    import pyarrow as pa
+
+    types = [_pa_type(c.spark_type) for c in spec.columns]
+    if None in types:
+        return None
+    return pa.schema(
+        [pa.field(c.stored_name, t) for c, t in zip(spec.columns, types)]
+        + [
+            pa.field(_SEQ, pa.int64()),
+            pa.field(_SUB, pa.int64()),
+            pa.field(_DEL, pa.bool_()),
+        ]
+    )
+
+
+def _over_local_caps(spark, files) -> Optional[str]:
+    """Why ``files`` are too many or too large to read on the driver, or
+    None: the driver-local reads take at most _LOCAL_FILE_CAP files of
+    at most the broadcast threshold's bytes (a relation Spark itself
+    would hold on the driver to broadcast it)."""
+    from fluss_datafusion_spark.catalog.stats import _broadcast_threshold
+
+    if len(files) > _LOCAL_FILE_CAP:
+        return f"{len(files)} files > {_LOCAL_FILE_CAP}"
+    size = sum(os.path.getsize(f) for f in files)
+    cap = _broadcast_threshold(spark)
+    return f"{size} bytes > {cap}" if size > cap else None
+
+
+def _newest_live(table, keys: List[str]):
+    """``_merge_log``'s newest-row-wins rule as a pyarrow kernel: for
+    each ``keys`` group the row with the highest ``(__seq__, __sub__)``
+    (Spark's DESC order, nulls last), dropped when it is a tombstone (a
+    null ``__del__`` is live).  The kept rows keep their stamps."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    table = table.take(
+        pc.sort_indices(
+            table,
+            sort_keys=[(_SEQ, "descending"), (_SUB, "descending")],
+            null_placement="at_end",
+        )
+    )
+    first = (
+        table.append_column("__i__", pa.array(range(table.num_rows), pa.int64()))
+        .group_by(keys, use_threads=False)
+        .aggregate([("__i__", "min")])["__i___min"]
+    )
+    table = table.take(first)
+    return table.filter(pc.invert(pc.fill_null(table[_DEL], False)))
 
 
 def _write_parquet_atomic(table, dir_path: str) -> str:

@@ -16,7 +16,8 @@ How it reads: the key's bucket id is computed in Python
 ``__bkt__=<b>`` directory is listed (the table directory when the
 table is unbucketed), the files are read with pyarrow and the pushed
 key filter, and the row with the highest ``(__seq__, __sub__)`` wins
-unless it is a tombstone.  The answer comes back as a LocalRelation
+unless it is a tombstone (``catalog._newest_live``, the merge kernel
+the driver-local compaction shares).  The answer comes back as a LocalRelation
 frame (an inline VALUES table), so collecting it runs no Spark job.
 
 Caps — the read stays driver-local only when the listed directory
@@ -158,29 +159,21 @@ def _local_read(session, spec, key: Dict[str, object], cols) -> Optional[list]:
     from fluss_datafusion_spark.catalog.catalog import (
         _BKT,
         _DEL,
-        _LOCAL_FILE_CAP,
         _SEQ,
         _SUB,
+        _arrow_log_schema,
         _has_data,
-        _pa_type,
+        _newest_live,
+        _over_local_caps,
         _parquet_files,
         bucket_id,
     )
-    from fluss_datafusion_spark.catalog.stats import _broadcast_threshold
 
     if spec.partition_keys:
         raise _Decline("partitioned table")
-    fields = []
-    for col in spec.columns:
-        t = _pa_type(col.spark_type)
-        if t is None:
-            raise _Decline(f"column type {col.type_name}")
-        fields.append(pa.field(col.stored_name, t))
-    fields += [
-        pa.field(_SEQ, pa.int64()),
-        pa.field(_SUB, pa.int64()),
-        pa.field(_DEL, pa.bool_()),
-    ]
+    schema = _arrow_log_schema(spec)
+    if schema is None:
+        raise _Decline("column type without a pyarrow mapping")
     table_dir = session.catalog.table_path(spec)
     read_dir = table_dir
     if spec.num_buckets and spec.bucket_keys:
@@ -194,12 +187,9 @@ def _local_read(session, spec, key: Dict[str, object], cols) -> Optional[list]:
     # — a listing that overlapped one may have seen a partial tree.
     before = os.stat(table_dir).st_ino
     files = sorted(_parquet_files(read_dir))
-    if len(files) > _LOCAL_FILE_CAP:
-        raise _Decline(f"{len(files)} files > {_LOCAL_FILE_CAP}")
-    size = sum(os.path.getsize(f) for f in files)
-    cap = _broadcast_threshold(session.spark)
-    if files and size > cap:
-        raise _Decline(f"{size} bytes > {cap}")
+    over = _over_local_caps(session.spark, files)
+    if over:
+        raise _Decline(over)
     if not files and not _has_data(table_dir):
         # Catalyst's empty-table frame keeps the spec's nullability
         raise _Decline("empty table")
@@ -209,17 +199,16 @@ def _local_read(session, spec, key: Dict[str, object], cols) -> Optional[list]:
         for name, value in key.items():
             col = spec.column(name)
             term = ds.field(col.stored_name) == pa.scalar(
-                value, _pa_type(col.spark_type)
+                value, schema.field(col.stored_name).type
             )
             flt = term if flt is None else flt & term
-        wanted = list(dict.fromkeys(c.stored_name for c in cols))
-        got = ds.dataset(files, schema=pa.schema(fields), format="parquet")
+        pk = [spec.column(k).stored_name for k in spec.primary_key]
+        wanted = list(dict.fromkeys([c.stored_name for c in cols] + pk))
+        got = ds.dataset(files, schema=schema, format="parquet")
         got = got.to_table(columns=wanted + [_SEQ, _SUB, _DEL], filter=flt)
+        got = _newest_live(got, pk)
         if got.num_rows:
-            stamps = list(zip(got[_SEQ].to_pylist(), got[_SUB].to_pylist()))
-            i = max(range(len(stamps)), key=stamps.__getitem__)
-            if not got[_DEL][i].as_py():
-                hit = [got[c.stored_name][i].as_py() for c in cols]
+            hit = [got[c.stored_name][0].as_py() for c in cols]
     if os.stat(table_dir).st_ino != before:
         raise _Decline("table directory replaced during the read")
     return hit
