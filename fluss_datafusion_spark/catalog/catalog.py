@@ -5156,7 +5156,7 @@ def _over_local_caps(spark, files) -> Optional[str]:
         return f"{len(files)} files > {_LOCAL_FILE_CAP}"
     size = sum(os.path.getsize(f) for f in files)
     cap = _broadcast_threshold(spark)
-    return f"{size} bytes > {cap}" if size > cap else None
+    return f"{size} bytes > {cap}" if files and size > cap else None
 
 
 def _newest_live(table, keys: List[str]):

@@ -286,6 +286,29 @@ def test_over_the_byte_cap_falls_back(spark, kv):
         spark.conf.set(key, old)
 
 
+def test_broadcast_disabled_still_serves_an_empty_bucket(spark, kv):
+    """``autoBroadcastJoinThreshold = -1`` caps every non-empty bucket
+    read, never a bucket with no files: that miss stays driver-side."""
+    spec = kv.catalog.get_table("kv")
+    used = {cat_mod.bucket_id(spec, {"k": k}) for k in (1, 2, 3, 4)}
+    miss = next(
+        k for k in range(5, 1000)
+        if cat_mod.bucket_id(spec, {"k": k}) not in used
+    )
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        df, path = pk_lookup.try_pk_lookup(
+            kv, f"SELECT * FROM kv WHERE k = {miss}"
+        )
+        assert path == "driver-local read" and _rows(df) == []
+        df, path = pk_lookup.try_pk_lookup(kv, "SELECT * FROM kv WHERE k = 3")
+        assert "bytes" in path and _rows(df) == [(3, "c")]
+    finally:
+        spark.conf.set(key, old)
+
+
 def test_partitioned_table_falls_back(spark, tmp_path):
     e = EngineSession(spark=spark, warehouse=str(tmp_path / "wh"))
     e.sql("CREATE TABLE pt (g INT NOT NULL, k BIGINT NOT NULL, v STRING,"
