@@ -5039,7 +5039,7 @@ class FlussCatalog:
             shutil.rmtree(tmp, ignore_errors=True)
             os.makedirs(tmp)
             for rel, group in sorted(groups.items()):
-                log = ds.dataset(sorted(group), schema=schema, format="parquet")
+                log = ds.dataset(group, schema=schema, format="parquet")
                 merged = _newest_live(log.to_table(), keys)
                 if merged.num_rows:
                     out = os.path.normpath(os.path.join(tmp, rel))
@@ -5174,8 +5174,9 @@ def _newest_live(table, keys: List[str]):
             null_placement="at_end",
         )
     )
+    index = pa.array(range(table.num_rows), pa.int64())
     first = (
-        table.append_column("__i__", pa.array(range(table.num_rows), pa.int64()))
+        table.append_column("__i__", index)
         .group_by(keys, use_threads=False)
         .aggregate([("__i__", "min")])["__i___min"]
     )

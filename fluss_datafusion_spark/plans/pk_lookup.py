@@ -17,8 +17,9 @@ How it reads: the key's bucket id is computed in Python
 table is unbucketed), the files are read with pyarrow and the pushed
 key filter, and the row with the highest ``(__seq__, __sub__)`` wins
 unless it is a tombstone (``catalog._newest_live``, the merge kernel
-the driver-local compaction shares).  The answer comes back as a LocalRelation
-frame (an inline VALUES table), so collecting it runs no Spark job.
+the driver-local compaction shares).  The answer comes back as a
+LocalRelation frame (an inline VALUES table), so collecting it runs no
+Spark job.
 
 Caps — the read stays driver-local only when the listed directory
 holds at most ``_LOCAL_FILE_CAP`` data files totalling at most
