@@ -1,26 +1,45 @@
-"""Incremental deduplication against a persisted LSH index.
+"""Incremental near-duplicate detection against a persisted banded index.
 
 At 100 TB you do not re-run global dedup for every ingest batch: the
-corpus's MinHash band-bucket assignment is computed ONCE, persisted as a
-parquet index, and each new batch (a) probes the index for
-batch-vs-corpus candidates and (b) dedups within itself — cost is
-O(batch), never O(corpus).  No reference analog (the reference is a SQL
-CLI over Fluss storage); this is the north-star extension surface.
+corpus's band assignment is computed ONCE and persisted as a parquet
+index, and each new batch (a) probes the index for batch-vs-corpus
+candidates and (b) pairs within itself — cost is O(batch), never
+O(corpus).  No reference analog (the reference is a SQL CLI over Fluss
+storage); this is the north-star extension surface.
 
-Index layout (parquet at ``path``):
-- ``buckets/``:  (__id__, __band__, __bucket__) — the LSH assignment
-  (the same banding minhash_lsh_pairs uses, identical fixed seeds).
-- ``shingles/``: (__id__, __sh__ array<string>) — per-doc shingle sets
-  for exact verification of candidates.
+Two indexes, one layout at ``path``:
 
-Probing shuffles on (band, bucket) — the index side is pre-bucketed by
-parquet partitioning; the verify stage joins shingles for CANDIDATE ids
-only (never a corpus-wide broadcast — same discipline as
-minhash_lsh_pairs post-r1).
+- text near-dups, MinHash LSH (``write_dedup_index`` /
+  ``incremental_dedup_pairs`` / ``append_to_index`` /
+  ``dedup_ingest_sink``): ``buckets/`` holds (__id__, __band__,
+  __bucket__) from minhash_band_buckets (the banding minhash_lsh_pairs
+  uses, identical fixed seeds); the verify store ``shingles/`` holds
+  (__id__, __sh__ array<string>), and candidates are kept at exact
+  shingle Jaccard >= threshold;
+- media near-dups, Hamming bands (``write_hamming_index`` /
+  ``incremental_hamming_pairs`` / ``append_to_hamming_index`` /
+  ``media_ingest_sink``): ``buckets/`` holds (__id__, __band__,
+  __slice__) from dedup.hamming_band_keys; the verify store ``hashes/``
+  holds (__id__, __h__ 64-bit fingerprint), and candidates are kept at
+  popcount(xor) <= max_hamming.
+
+Each index also has a ``_BUILT`` marker token (format, parameters and
+corpus identity), written last and atomically.
+
+Both are the same candidate-then-verify mechanism, written once in
+``_BandedIndex`` (build, driver-local and distributed append, probe)
+and ``_ingest_sink``; ``_LshIndex`` and ``_HammingIndex`` carry only
+what differs — the band-key column, the band function and the verify
+store with its score — and the sinks pass their batch preparation.
+Probing shuffles on (band, key) — the index side is range-clustered
+on the key and pruned by a skipping manifest; the verify stage joins
+verify rows for CANDIDATE ids only (never a corpus-wide broadcast —
+same discipline as minhash_lsh_pairs post-r1).
 """
 
 from __future__ import annotations
 
+import math
 import os
 from typing import Optional
 
@@ -34,7 +53,6 @@ from fluss_datafusion_spark.operators.dedup import (
     minhash_band_buckets,
     release_candidate_cache,
 )
-from fluss_datafusion_spark.session import spread_small_scan
 
 
 # Bump when the index layout or the shingle/minhash derivation changes:
@@ -47,6 +65,10 @@ from fluss_datafusion_spark.session import spread_small_scan
 # kernel would silently miss every duplicate pair).
 INDEX_FORMAT = "v2"
 
+# Bump when the fingerprint kernel or band layout changes (same contract
+# as INDEX_FORMAT above): a marker with a different token rebuilds.
+HAMMING_INDEX_FORMAT = "v1"
+
 
 def _index_marker_path(path: str) -> str:
     return os.path.join(path, "_BUILT")
@@ -58,6 +80,40 @@ def _index_token(source_id, k: int, num_perm: int, rows_per_band: int) -> str:
     return (
         f"{INDEX_FORMAT}|k={k}|perm={num_perm}|rpb={rows_per_band}|n={source_id}"
     )
+
+
+def _hamming_token(source_id, n_bands: int, key_blocks: int = 1) -> str:
+    # key_blocks joins the token only when non-default, so every v1
+    # index marker stays valid; a widened-key rebuild changes the token
+    # and forces stale narrow-key indexes to rebuild (the INDEX_FORMAT
+    # discipline).
+    kb = f"|kb={key_blocks}" if key_blocks != 1 else ""
+    return f"hamming-{HAMMING_INDEX_FORMAT}|bands={n_bands}{kb}|n={source_id}"
+
+
+def _write_marker(path: str, token: str) -> None:
+    """Replace the ``_BUILT`` marker atomically (temp file, then
+    rename): a failure mid-write leaves the previous token, never an
+    empty marker that would force a rebuild or fail every probe."""
+    marker = _index_marker_path(path)
+    tmp = marker + ".tmp"
+    with open(tmp, "w", encoding="utf-8") as fh:
+        fh.write(token)
+    os.replace(tmp, marker)
+
+
+def _bump_index_marker(path: str, n_rows: int) -> None:
+    """Add ``n_rows`` to the ``_BUILT`` marker's corpus count so a later
+    ensure_dedup_index doesn't see a stale token and rebuild over the
+    appended index."""
+    marker = _index_marker_path(path)
+    try:
+        with open(marker, "r", encoding="utf-8") as fh:
+            head, _, n = fh.read().rpartition("|n=")
+        if head and n.isdigit():
+            _write_marker(path, f"{head}|n={int(n) + n_rows}")
+    except OSError:
+        pass
 
 
 def ensure_dedup_index(
@@ -98,6 +154,538 @@ def ensure_dedup_index(
     return True
 
 
+def _hamming_bands(
+    hashes: DataFrame, n_bands: int, key_blocks: int = 1
+) -> DataFrame:
+    """(__id__, __band__, __slice__) key assignment of 64-bit
+    fingerprints — dedup.hamming_band_keys, the same derivation
+    dedup.hamming_near_dup_pairs uses, so index and probe bucket values
+    agree by construction (incl. the widened block-combination keys for
+    past-2^16-fingerprint corpora)."""
+    from fluss_datafusion_spark.operators.dedup import hamming_band_keys
+
+    return hashes.select(
+        "__id__",
+        F.posexplode(
+            F.array(*hamming_band_keys(n_bands, key_blocks))
+        ).alias("__band__", "__slice__"),
+    )
+
+
+def _write_store(frame: DataFrame, path: str, store: str, append=False):
+    """Write one index store and extend its skipping manifest: an
+    overwrite re-harvests every file, an append only the files it
+    added (see _harvest_store_manifest)."""
+    from fluss_datafusion_spark.catalog.catalog import _parquet_files
+
+    spath = os.path.join(path, store)
+    before = None
+    if append:
+        try:
+            before = _parquet_files(spath)
+        except Exception:
+            before = set()
+    frame.write.mode("append" if append else "overwrite").parquet(spath)
+    _harvest_store_manifest(spath, before=before)
+
+
+class _BandedIndex:
+    """One banded candidate-then-verify index at ``path``: ``buckets/``
+    (__id__, __band__, <key>) is the probe store, ``<store>/`` (__id__,
+    <col>) the verify store.  Build, append and probe are written once
+    here, over a batch's (__id__, <raw>) projection; a subclass supplies
+    what the two indexes differ in — the band-key column, the band
+    function (``bands`` distributed, ``local_bands`` driver-side) and
+    the verify store with its score."""
+
+    key: str  # band-key column of buckets/
+    raw: str  # value column of the (__id__, raw) batch projection
+    store: str  # verify store directory
+    col: str  # its value column
+    score_col: str  # verify score column of probe results
+    guard: str  # _bucket_local_pairs observe() metric name
+    # the projection is narrow enough to cache (16-byte fingerprints,
+    # not text): it then feeds both store writes of a build, which would
+    # each re-run a decode-heavy input plan (r13), and every probe branch
+    narrow = False
+    grows_marker = False  # appends add their row count to the token
+
+    def __init__(self, id_col: str, val_col: str):
+        self.id_col, self.val_col = id_col, val_col
+
+    def base(self, df: DataFrame) -> DataFrame:
+        return df.select(
+            F.col(self.id_col).alias("__id__"),
+            F.col(self.val_col).alias(self.raw),
+        )
+
+    def input_rows(self, df: DataFrame, path: str) -> int:
+        """The token's corpus count when the build is given no
+        ``source_id``."""
+        return df.count()
+
+    def build(self, df: DataFrame, path: str, source_id=None, token=None):
+        base = self.base(df)
+        if self.narrow:
+            base = base.persist()
+        # Range-cluster the verify store on the id below full-core
+        # parallelism (the spread_small_scan guard, but range instead of
+        # round-robin): per-file id bounds become DISJOINT, so the
+        # verify-store prune (r12) drops files no candidate touches.  A
+        # 100 TB input is past the guard and keeps its natural layout.
+        clustered = base
+        parallelism = df.sparkSession.sparkContext.defaultParallelism
+        if base.rdd.getNumPartitions() < parallelism:
+            clustered = base.repartitionByRange(parallelism, "__id__")
+        # Independent stores, CONCURRENT jobs: the build pays max(write),
+        # not sum (r13 A/B at sf0.1: 3.78 -> 2.76 s median).  Buckets are
+        # range-clustered on the probe key for the probe prune (r11).
+        try:
+            _parallel_writes(
+                lambda: _write_store(
+                    self.verify(clustered).sortWithinPartitions("__id__"),
+                    path, self.store,
+                ),
+                lambda: _write_store(
+                    self.bands(base).repartitionByRange(self.key, "__band__"),
+                    path, "buckets",
+                ),
+            )
+        finally:
+            if self.narrow:
+                base.unpersist()
+        # Stamp completion LAST so a crashed build never leaves a marker
+        # a later ensure_dedup_index would trust.
+        if token is None:
+            token = self.token(
+                source_id if source_id is not None
+                else self.input_rows(df, path)
+            )
+        _write_marker(path, token)
+
+    def append(self, df: DataFrame, path: str, local: bool = False) -> None:
+        if local and self.append_local(df, path):
+            return
+        base = self.base(df)
+        # Concurrent appends (r10); a crash between them leaves a
+        # partial append that the foreachBatch replay re-appends whole —
+        # duplicate index entries are benign (pairs dedup by id).  No
+        # spread (r13); sorting within the few batch partitions keeps
+        # the appended files' footer bounds tight for both prunes.
+        _parallel_writes(
+            lambda: _write_store(
+                self.verify(base).sortWithinPartitions("__id__"),
+                path, self.store, append=True,
+            ),
+            lambda: _write_store(
+                self.bands(base).sortWithinPartitions(self.key),
+                path, "buckets", append=True,
+            ),
+        )
+        if self.grows_marker:
+            _bump_index_marker(path, df.count())
+
+    def append_local(self, df: DataFrame, path: str) -> bool:
+        """Driver-local small-batch append to both stores: one capped
+        collect (_collect_capped, the catalog seam's row cap) of the
+        SAME JVM expressions the distributed path evaluates, band keys
+        from the band function's driver-side form, then one part file
+        per store through _append_store_files — same filters and sort
+        keys as the distributed writer.  Returns False (the caller runs
+        the distributed appends) past the row cap, when a store is
+        missing or empty, or when collecting, building or writing fails
+        (e.g. a null fingerprint); never raises."""
+        import numpy as np
+
+        from fluss_datafusion_spark.catalog.catalog import _collect_capped
+
+        try:
+            # two selects: the collected columns read the projection,
+            # never an input column that happens to share a name
+            rows = _collect_capped(
+                self.base(df).select("__id__", *self.local_cols())
+            )
+            if rows is None:
+                return False
+            kept, banded, keys = self.local_bands(rows)
+            kept = sorted(kept, key=lambda r: r["__id__"])
+            # bucket rows sorted by key (stable) so the file's footer
+            # bounds stay tight for probe pruning
+            n_bands = keys.shape[1]
+            order = np.argsort(keys.ravel(), kind="stable")
+            stores = [
+                (
+                    os.path.join(path, self.store),
+                    {
+                        "__id__": [r["__id__"] for r in kept],
+                        self.col: [r[self.col] for r in kept],
+                    },
+                ),
+                (
+                    os.path.join(path, "buckets"),
+                    {
+                        "__id__": [banded[i]["__id__"] for i in order // n_bands],
+                        "__band__": order % n_bands,
+                        self.key: keys.ravel()[order],
+                    },
+                ),
+            ]
+        except Exception:
+            return False
+        if not _append_store_files(stores):
+            return False
+        if self.grows_marker:
+            _bump_index_marker(path, len(rows))
+        return True
+
+    def probe(
+        self,
+        new_df: DataFrame,
+        index_path: str,
+        within,
+        max_bucket_size: int,
+        keep_markers: bool,
+    ) -> DataFrame:
+        # Probing with a different derivation than the index was built
+        # with silently misses every cross-batch pair (the
+        # INDEX_FORMAT-v2 lesson): refuse a marker whose parameter
+        # prefix disagrees.  A missing marker still probes.
+        try:
+            with open(
+                _index_marker_path(index_path), "r", encoding="utf-8"
+            ) as fh:
+                built = fh.read()
+        except OSError:
+            built = None
+        derives = self.token("").rsplit("|n=", 1)[0]
+        if built is not None and not built.startswith(derives + "|n="):
+            raise ValueError(
+                f"index at {index_path} was built as "
+                f"'{built.rsplit('|n=', 1)[0]}' but the probe derives "
+                f"'{derives}' keys — rebuild the index or probe with "
+                "its parameters"
+            )
+        spark = new_df.sparkSession
+        base = self.base(new_df)
+        # Persist (batch-sized, released via _attach_cached_deps) what
+        # every branch reads: the narrow fingerprint projection, or the
+        # text banding, the expensive interpreted pipeline.
+        if self.narrow:
+            new = base = base.persist()
+            new_bands = self.bands(base)
+        else:
+            new = new_bands = self.bands(base).persist()
+        keys = ["__band__", self.key]
+        # manifest-pruned store read (r11), then restrict the index to
+        # keys the batch touches and pair bucket-locally over the union
+        # (new ids see old ids AND each other).  ``touched`` is O(batch
+        # x bands): broadcast, the corpus-sized store is filtered where
+        # it is read, never shuffled; LEFT SEMI tolerates duplicate keys
+        # on the broadcast side, so no distinct() shuffle first.
+        idx_bands = _pruned_store_read(
+            spark, os.path.join(index_path, "buckets"),
+            new_bands.select(*keys), keys,
+        )
+        touched = F.broadcast(new_bands.select(*keys))
+        all_bands = new_bands.unionByName(
+            idx_bands.join(touched, keys, "left_semi")
+        )
+        # Keep the persisted handle: the marker joins below derive a NEW
+        # DataFrame, and unpersist() only releases the exact plan it is
+        # called on — attaching the derived frame would leak the cache.
+        raw_candidates = _bucket_local_pairs(
+            all_bands, keys, max_bucket_size, self.guard
+        )
+        # Drop index-internal pairs: keep pairs with >=1 endpoint in the
+        # batch, as two broadcast equi left-joins + an OR filter, NOT an
+        # OR-of-equalities semi-join (a BroadcastNestedLoopJoin).  Ids
+        # come from the persisted frame, not a second batch scan.
+        new_ids = new.select(F.col("__id__").alias("__nid__")).distinct()
+        candidates = raw_candidates
+        for side in ("a", "b"):
+            candidates = candidates.join(
+                F.broadcast(
+                    new_ids.select(
+                        F.col("__nid__").alias(f"id_{side}"),
+                        F.lit(True).alias(f"__{side}_new__"),
+                    )
+                ),
+                f"id_{side}",
+                "left",
+            )
+        a_new, b_new = (F.col(f"__{s}_new__").isNotNull() for s in "ab")
+        candidates = candidates.filter(a_new | b_new).select(
+            "id_a", "id_b", a_new.alias("a_new"), b_new.alias("b_new")
+        )
+        cand = candidates.select(
+            F.explode(F.array("id_a", "id_b")).alias("__id__")
+        )
+        cand_ids = F.broadcast(cand.distinct())
+        # manifest-pruned verify read (r12): candidate ids are
+        # batch-bounded, so only files whose id bounds admit one are read
+        idx_verify = _pruned_store_read(
+            spark, os.path.join(index_path, self.store), cand, ["__id__"],
+            min_files=_VERIFY_PRUNE_MIN_FILES,
+        )
+        # Text semi-joins the batch to candidate ids BEFORE shingling
+        # (Catalyst does not push a semi-join below the interpreted
+        # zip_with projection).  The candidate-bound union is persisted:
+        # it is broadcast for BOTH endpoints, and plan aliasing defeats
+        # exchange reuse (measured).
+        batch_rows = base if self.narrow else base.join(
+            cand_ids, "__id__", "left_semi"
+        )
+        verify = (
+            self.verify(batch_rows)
+            .unionByName(idx_verify.join(cand_ids, "__id__", "left_semi"))
+            .persist()
+        )
+        va, vb = (
+            F.broadcast(
+                verify.withColumnsRenamed(
+                    {"__id__": f"id_{side}", self.col: f"__v{side}__"}
+                )
+            )
+            for side in ("a", "b")
+        )
+        verified = (
+            candidates.join(va, "id_a")
+            .join(vb, "id_b")
+            .withColumn(
+                self.score_col, self.score(F.col("__va__"), F.col("__vb__"))
+            )
+            .filter(within(F.col(self.score_col)))
+            .select(
+                "id_a", "id_b", self.score_col,
+                *(["a_new", "b_new"] if keep_markers else []),
+            )
+        )
+        return _attach_cached_deps(verified, raw_candidates, new, verify)
+
+
+class _LshIndex(_BandedIndex):
+    """Text: MinHash LSH buckets over word shingles, verified by exact
+    shingle-set Jaccard."""
+
+    key, raw, store, col = "__bucket__", "__t__", "shingles", "__sh__"
+    score_col, guard = "jaccard", "incremental_bucket_guard"
+    grows_marker = True
+
+    def __init__(self, id_col, text_col, k, num_perm, rows_per_band):
+        super().__init__(id_col, text_col)
+        self.k, self.num_perm, self.rows_per_band = k, num_perm, rows_per_band
+
+    def token(self, source_id) -> str:
+        return _index_token(source_id, self.k, self.num_perm, self.rows_per_band)
+
+    def bands(self, base: DataFrame) -> DataFrame:
+        # the token-hash kernel (r7): the one derivation builds, appends
+        # and probes share, so bucket values agree by construction
+        return minhash_band_buckets(
+            base, "__id__", "__t__", self.k, self.num_perm, self.rows_per_band
+        )
+
+    def _shingles(self):
+        return word_shingles(F.col("__t__"), self.k).alias("__sh__")
+
+    def verify(self, base: DataFrame) -> DataFrame:
+        return base.select("__id__", self._shingles()).filter(
+            F.size("__sh__") > 0
+        )
+
+    def local_cols(self):
+        from fluss_datafusion_spark.functions.text import tokens
+
+        # the per-token xxhash64 array minhash_band_buckets feeds in
+        return [
+            self._shingles(),
+            F.transform(
+                tokens(F.lower(F.col("__t__"))), lambda t: F.xxhash64(t)
+            ).alias("__th__"),
+        ]
+
+    def local_bands(self, rows):
+        from fluss_datafusion_spark.operators.dedup import _band_values
+
+        # the distributed filters: size(__sh__) > 0 for the shingle
+        # store, size(__th__) >= k for the bucket store
+        th = [r for r in rows if len(r["__th__"] or ()) >= self.k]
+        packed = _band_values(
+            [r["__th__"] for r in th], self.k, self.num_perm,
+            self.rows_per_band,
+        )
+        return [r for r in rows if r["__sh__"]], th, packed
+
+    def score(self, a, b):
+        return F.size(F.array_intersect(a, b)) / F.size(F.array_union(a, b))
+
+
+class _HammingIndex(_BandedIndex):
+    """Media: banded 64-bit fingerprint keys, verified by an exact
+    popcount of the xor."""
+
+    key, raw, store, col = "__slice__", "__h__", "hashes", "__h__"
+    score_col, guard = "ham", "incremental_hamming_guard"
+    narrow = True
+
+    def __init__(self, id_col, hash_col, n_bands, key_blocks):
+        super().__init__(id_col, hash_col)
+        self.n_bands, self.key_blocks = n_bands, key_blocks
+
+    def token(self, source_id) -> str:
+        return _hamming_token(source_id, self.n_bands, self.key_blocks)
+
+    def bands(self, base: DataFrame) -> DataFrame:
+        return _hamming_bands(base, self.n_bands, self.key_blocks)
+
+    def verify(self, base: DataFrame) -> DataFrame:
+        return base
+
+    def input_rows(self, df: DataFrame, path: str) -> int:
+        # the hashes store keeps every input row: read the count from
+        # its footers, not a THIRD run of the decode-heavy input plan
+        try:
+            import pyarrow.parquet as pq
+
+            from fluss_datafusion_spark.catalog.catalog import _parquet_files
+
+            return sum(
+                pq.read_metadata(f).num_rows
+                for f in _parquet_files(os.path.join(path, "hashes"))
+            )
+        except Exception:
+            return df.count()
+
+    def local_cols(self):
+        from fluss_datafusion_spark.operators.dedup import hamming_band_keys
+
+        # the SAME key expressions the distributed path posexplodes —
+        # exactness by construction, no Python twin of the bit arithmetic
+        return [
+            "__h__",
+            F.array(*hamming_band_keys(self.n_bands, self.key_blocks)).alias(
+                "__keys__"
+            ),
+        ]
+
+    def local_bands(self, rows):
+        import numpy as np
+
+        # a null fingerprint has null keys: the int64 array refuses it
+        keys = np.array([r["__keys__"] for r in rows], dtype=np.int64)
+        return rows, rows, keys.reshape(
+            len(rows), math.comb(self.n_bands, self.key_blocks)
+        )
+
+    def score(self, a, b):
+        return F.bit_count(a.bitwiseXOR(b)).cast("int")
+
+
+def _ingest_sink(
+    stream: DataFrame,
+    catalog,
+    table: str,
+    checkpoint: str,
+    id_col: str,
+    transform,
+    metrics: Optional[list],
+    prepare,
+    probe,
+    append,
+):
+    """The stateless foreachBatch body both ingest sinks share: per
+    micro-batch, optional ``transform``, ``prepare`` (identity for
+    text, the fingerprint pass for media), ``probe`` for pairs carrying
+    (a_new, b_new), the drop rule, then the upsert and ``append`` of
+    the survivors as overlapped writes.  ``probe`` / ``append`` are the
+    public wrappers, called through the module globals."""
+    import contextlib
+
+    from fluss_datafusion_spark.catalog.catalog import _LOCAL_ROW_CAP
+
+    def _apply(batch_df: DataFrame, batch_id: int) -> None:
+        with contextlib.ExitStack() as stack:
+            # every cache — and the probe's candidate caches — is
+            # released on the stack, so a failing write leaks none of
+            # them into the session
+            def cached(df):
+                df = df.persist()
+                stack.callback(df.unpersist)
+                return df
+
+            def record(n_in, n_kept):
+                metrics.append(
+                    {
+                        "batch_id": batch_id,
+                        "n_in": n_raw,
+                        "n_filtered": n_raw - n_in,
+                        "n_dropped": n_in - n_kept,
+                        "n_kept": n_kept,
+                    }
+                )
+
+            # The n_raw / n_in COUNT jobs exist only for metrics records
+            # and their early-outs, so metrics-off batches skip both
+            # (r13, two job floors per micro-batch; an empty batch flows
+            # through the cached empty probe for pennies).  The raw
+            # batch is persisted only while something reads it twice (a
+            # transform, or the metrics count); the prepared frame feeds
+            # the probe and the survivors anti-join, so always.
+            if metrics is not None or transform is not None:
+                raw = cached(batch_df)
+            else:
+                raw = batch_df
+            if metrics is not None:
+                n_raw = raw.count()
+                if n_raw == 0:
+                    return
+            batch = prepare(transform(raw) if transform else raw)
+            if not batch.is_cached:
+                batch = cached(batch)
+            if metrics is not None:
+                n_in = batch.count()
+                if n_in == 0:
+                    record(0, 0)
+                    return
+            pairs = probe(batch)
+            stack.callback(release_candidate_cache, pairs)
+            # Every pair touches the batch and carries (a_new, b_new)
+            # endpoint markers.  If one endpoint is already indexed, the
+            # OTHER endpoint is the batch doc — drop it whichever id is
+            # greater (the corpus copy must win; batch ids are only
+            # globally unique, not monotone with ingest order).  Pairs
+            # wholly inside the batch fall back to greater-id-drops.
+            drop = pairs.select(
+                F.when(~F.col("b_new"), F.col("id_a"))
+                .when(~F.col("a_new"), F.col("id_b"))
+                .otherwise(F.greatest("id_a", "id_b"))
+                .alias(id_col)
+            ).distinct()
+            survivors = cached(batch.join(drop, id_col, "left_anti"))
+            n_kept = survivors.count()  # one job materializes the cache
+            if n_kept:
+                # the engine upsert and the index append are independent
+                # outputs of the SAME cached frame: overlap them (r10 —
+                # see _parallel_writes for the replay-safety argument).
+                # n_kept is exact, so a small batch takes both
+                # driver-local write paths — their capped collects are
+                # cache reads, never a second execution (r13)
+                local = n_kept <= _LOCAL_ROW_CAP
+                _parallel_writes(
+                    lambda: catalog.insert(table, survivors, local=local),
+                    lambda: append(survivors, local),
+                )
+            if metrics is not None:
+                record(n_in, n_kept)
+
+    return (
+        stream.writeStream.foreachBatch(_apply)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
 def write_dedup_index(
     df: DataFrame,
     id_col: str,
@@ -116,69 +704,9 @@ def write_dedup_index(
     (minhash_band_buckets — the exact kernel probes use).  Both outputs are
     written partition-parallel; re-running overwrites atomically per
     subdirectory."""
-    # Range-cluster the shingle store on the doc id WHEN the input is
-    # below full-core parallelism (the spread_small_scan guard, but
-    # range instead of round-robin: same narrow pre-shingle shuffle,
-    # same parallelism, and per-file id bounds become DISJOINT — the
-    # verify-store prune (r12) can then drop files untouched by a
-    # batch's candidate ids).  A 100 TB input is past the guard and
-    # keeps its natural (typically id-clustered) layout; within-file
-    # sort tightens row-group stats either way.  Worst case is wide
-    # bounds = full read — never wrong.
-    base = df.select(
-        F.col(id_col).alias("__id__"), F.col(text_col).alias("__t__")
+    _LshIndex(id_col, text_col, k, num_perm, rows_per_band).build(
+        df, path, source_id, _token
     )
-    parallelism = df.sparkSession.sparkContext.defaultParallelism
-    if base.rdd.getNumPartitions() < parallelism:
-        base = base.repartitionByRange(parallelism, "__id__")
-    sh = base.select(
-        "__id__", word_shingles(F.col("__t__"), k).alias("__sh__")
-    ).filter(F.size("__sh__") > 0)
-
-    # The two stores are independent outputs of the raw corpus: write
-    # them as CONCURRENT jobs (threads share the SparkSession), the
-    # same shape write_hamming_index already uses — the build pays
-    # max(write), not sum, whenever neither scan saturates the cores
-    # (r13 interleaved A/B at sf0.1: 3.78 -> 2.76 s median; at full
-    # cluster saturation the scheduler interleaves and it is never
-    # slower than sequential).  The marker still lands strictly LAST.
-    def _write_shingles():
-        spath = os.path.join(path, "shingles")
-        sh.sortWithinPartitions("__id__").write.mode("overwrite").parquet(
-            spath
-        )
-        _harvest_store_manifest(spath)
-
-    def _write_buckets():
-        # r7: buckets derive from the TOKEN-hash kernel
-        # (minhash_band_buckets) — the same function probes use, so
-        # index and probe bucket values agree by construction.  This is
-        # a second linear text scan, but the token pass costs ~1/3 of
-        # the shingle pass it replaced (no k-gram string concatenation),
-        # so the build is net cheaper.
-        buckets = minhash_band_buckets(
-            df, id_col, text_col, k, num_perm, rows_per_band
-        )
-        bpath = os.path.join(path, "buckets")
-        # range-cluster on the probe key + harvest a skipping manifest
-        # so every ingest batch's probe can drop untouched store files
-        # driver-side (r11; see _pruned_store_read)
-        buckets.repartitionByRange("__bucket__", "__band__").write.mode(
-            "overwrite"
-        ).parquet(bpath)
-        _harvest_store_manifest(bpath)
-
-    _parallel_writes(_write_shingles, _write_buckets)
-    # Stamp completion LAST so a crashed build never leaves a marker a
-    # later ensure_dedup_index would trust.  ``source_id`` (snapshot /
-    # fingerprint) must match what probers pass to ensure_dedup_index;
-    # the count() fallback is for unversioned sources only.
-    token = _token or _index_token(
-        source_id if source_id is not None else df.count(),
-        k, num_perm, rows_per_band,
-    )
-    with open(_index_marker_path(path), "w", encoding="utf-8") as fh:
-        fh.write(token)
 
 
 def incremental_dedup_pairs(
@@ -213,222 +741,10 @@ def incremental_dedup_pairs(
     prune untouched files).  The mega-bucket guard caps degenerate
     buckets exactly like the batch-global operator.
     """
-    spark = new_docs.sparkSession
-    # The batch's shingle+minhash banding is the expensive interpreted
-    # pipeline and feeds BOTH the touched-bucket probe and the pairing
-    # union — persist so it runs once (batch-sized, released with the
-    # candidate cache via _attach_cached_deps).  (Caching the raw
-    # shingle arrays instead, to share them with the verify stage, was
-    # measured a wash: the full-batch array materialization costs what
-    # the candidate-only re-shingle saves, and candidates ≪ batch.)
-    new_buckets = minhash_band_buckets(
-        new_docs, id_col, text_col, k, num_perm, rows_per_band
-    ).persist()
-    # manifest-pruned store read (r11): the bucket-clustered store
-    # drops untouched files driver-side before the semi-join below
-    idx_buckets = _pruned_store_read(
-        spark,
-        os.path.join(index_path, "buckets"),
-        new_buckets.select("__band__", "__bucket__"),
-        ["__band__", "__bucket__"],
+    return _LshIndex(id_col, text_col, k, num_perm, rows_per_band).probe(
+        new_docs, index_path, lambda s: s >= threshold, max_bucket_size,
+        keep_markers,
     )
-
-    # Restrict the index to buckets the batch actually touches, then pair
-    # bucket-locally over the union (new ids see old ids AND each other).
-    # ``touched`` is O(batch x bands) — broadcast it so the (corpus-
-    # sized at 100 TB) index bucket table is filtered where it is read,
-    # never shuffled.  LEFT SEMI, not inner: semi-join tolerates
-    # duplicate keys on the broadcast side, so no distinct() shuffle is
-    # needed over the batch's bucket assignment first.
-    touched = F.broadcast(new_buckets.select("__band__", "__bucket__"))
-    idx_touched = idx_buckets.join(touched, ["__band__", "__bucket__"], "left_semi")
-    all_buckets = new_buckets.unionByName(idx_touched)
-    # Keep the persisted handle: the marker joins below derive a NEW
-    # DataFrame, and unpersist() only releases the exact plan it is
-    # called on — attaching the derived frame would leak the cache.
-    raw_candidates = _bucket_local_pairs(
-        all_buckets, ["__band__", "__bucket__"], max_bucket_size,
-        "incremental_bucket_guard",
-    )
-    candidates = raw_candidates
-
-    # Drop corpus-internal pairs: keep pairs with >=1 endpoint in the
-    # batch.  Expressed as two equi left-joins + an OR filter, NOT a
-    # single OR-of-equalities semi-join — Catalyst can only plan the
-    # latter as a BroadcastNestedLoopJoin (|candidates| x |batch|
-    # comparisons); the marker form hash-joins on each endpoint.
-    # Derived from the PERSISTED bucket assignment, not a second batch
-    # scan: ids without shingles have no buckets and so can never be
-    # candidate endpoints — same id set, no parquet re-read.
-    new_ids = new_buckets.select(F.col("__id__").alias("__nid__")).distinct()
-    candidates = (
-        candidates.join(
-            F.broadcast(
-                new_ids.select(
-                    F.col("__nid__").alias("id_a"), F.lit(True).alias("__a_new__")
-                )
-            ),
-            "id_a",
-            "left",
-        )
-        .join(
-            F.broadcast(
-                new_ids.select(
-                    F.col("__nid__").alias("id_b"), F.lit(True).alias("__b_new__")
-                )
-            ),
-            "id_b",
-            "left",
-        )
-        .filter(F.col("__a_new__").isNotNull() | F.col("__b_new__").isNotNull())
-        .select(
-            "id_a",
-            "id_b",
-            F.col("__a_new__").isNotNull().alias("a_new"),
-            F.col("__b_new__").isNotNull().alias("b_new"),
-        )
-    )
-
-    cand_ids = F.broadcast(
-        candidates.select(
-            F.explode(F.array("id_a", "id_b")).alias("__id__")
-        ).distinct()
-    )
-    # Semi-join each side down to candidate ids BEFORE shingling the
-    # batch (Catalyst does not push a semi-join below the interpreted
-    # zip_with shingle projection — shingle-then-filter would shingle
-    # the whole batch a second time); the index side is pre-shingled
-    # parquet, so its semi-join just filters the scan early.
-    new_sh = (
-        new_docs.select(F.col(id_col).alias("__id__"), F.col(text_col).alias("__t__"))
-        .join(cand_ids, "__id__", "left_semi")
-        .select("__id__", word_shingles(F.col("__t__"), k).alias("__sh__"))
-    )
-    # manifest-pruned verify read (r12): candidate ids are batch-bounded,
-    # so the shingle store — the index's heaviest column — serves the
-    # verify join from only the files whose id bounds admit a candidate
-    idx_sh = _pruned_store_read(
-        spark,
-        os.path.join(index_path, "shingles"),
-        candidates.select(F.explode(F.array("id_a", "id_b")).alias("__id__")),
-        ["__id__"],
-        min_files=_VERIFY_PRUNE_MIN_FILES,
-    )
-    # Persist the candidate-bound shingle union: it is broadcast for
-    # BOTH endpoints of the verify join, and without materialization the
-    # two broadcast builds each re-run the semi-joins, the batch
-    # re-shingle, and the index shingle scan (plan aliasing defeats
-    # exchange reuse here — measured, not assumed).  Candidate-bound =
-    # small by the same argument that lets it broadcast at all.
-    sh = new_sh.unionByName(idx_sh.join(cand_ids, "__id__", "left_semi")).persist()
-    sa, sb = F.broadcast(sh).alias("sa"), F.broadcast(sh).alias("sb")
-    verified = (
-        candidates.join(sa, F.col("id_a") == F.col("sa.__id__"))
-        .join(sb, F.col("id_b") == F.col("sb.__id__"))
-        .withColumn(
-            "jaccard",
-            F.size(F.array_intersect("sa.__sh__", "sb.__sh__"))
-            / F.size(F.array_union("sa.__sh__", "sb.__sh__")),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select(
-            "id_a",
-            "id_b",
-            "jaccard",
-            *(["a_new", "b_new"] if keep_markers else []),
-        )
-    )
-    return _attach_cached_deps(verified, raw_candidates, new_buckets, sh)
-
-
-def _bump_index_marker(path: str, n_rows: int) -> None:
-    """Add ``n_rows`` to the ``_BUILT`` marker's corpus count so a later
-    ensure_dedup_index doesn't see a stale token and rebuild over the
-    appended index."""
-    marker = _index_marker_path(path)
-    try:
-        with open(marker, "r", encoding="utf-8") as fh:
-            head, _, n = fh.read().rpartition("|n=")
-        if head and n.isdigit():
-            with open(marker, "w", encoding="utf-8") as fh:
-                fh.write(f"{head}|n={int(n) + n_rows}")
-    except OSError:
-        pass
-
-
-def _local_append_dedup(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    path: str,
-    k: int,
-    num_perm: int,
-    rows_per_band: int,
-) -> bool:
-    """Driver-local small-batch append to both dedup stores: one capped
-    collect of the SAME JVM expressions the distributed path evaluates
-    (word_shingles for the shingle store, the per-token xxhash64 array
-    minhash_band_buckets feeds its kernel), the bucket rows from the
-    kernel's own numpy body (dedup._band_values), then one part file
-    per store through _append_store_files.  Same filters and sort keys
-    as the distributed writer, and the marker count grows by the
-    collected row count (the distributed path's df.count()).  Returns
-    False — the caller runs the distributed appends — past the row
-    cap, when a store is missing or empty, or when collecting,
-    building or writing fails; never raises."""
-    import numpy as np
-
-    from fluss_datafusion_spark.catalog.catalog import _collect_capped
-    from fluss_datafusion_spark.functions.text import tokens
-    from fluss_datafusion_spark.operators.dedup import _band_values
-
-    try:
-        rows = _collect_capped(
-            df.select(
-                F.col(id_col).alias("__id__"),
-                word_shingles(F.col(text_col), k).alias("__sh__"),
-                F.transform(
-                    tokens(F.lower(F.col(text_col))), lambda t: F.xxhash64(t)
-                ).alias("__th__"),
-            )
-        )
-        if rows is None:
-            return False
-        # shingle rows: size(__sh__) > 0, sorted by id
-        sh = sorted(
-            (r for r in rows if r["__sh__"]), key=lambda r: r["__id__"]
-        )
-        # bucket rows: size(__th__) >= k, band values from the kernel,
-        # sorted by bucket so the file's footer bounds stay tight
-        th = [r for r in rows if len(r["__th__"] or ()) >= k]
-        packed = _band_values(
-            [r["__th__"] for r in th], k, num_perm, rows_per_band
-        )
-        n_bands = packed.shape[1]
-        order = np.argsort(packed.ravel(), kind="stable")
-        stores = [
-            (
-                os.path.join(path, "shingles"),
-                {
-                    "__id__": [r["__id__"] for r in sh],
-                    "__sh__": [r["__sh__"] for r in sh],
-                },
-            ),
-            (
-                os.path.join(path, "buckets"),
-                {
-                    "__id__": [th[i]["__id__"] for i in order // n_bands],
-                    "__band__": order % n_bands,
-                    "__bucket__": packed.ravel()[order],
-                },
-            ),
-        ]
-    except Exception:
-        return False
-    if not _append_store_files(stores):
-        return False
-    _bump_index_marker(path, len(rows))
-    return True
 
 
 def append_to_index(
@@ -442,75 +758,21 @@ def append_to_index(
     local: bool = False,
 ) -> None:
     """Extend an existing dedup index with new (already-deduplicated)
-    documents — parquet append, no rewrite of existing files.  The batch
-    is shingled once into a (bounded, batch-sized) cache feeding both
-    the shingle append and the bucket derivation — append mode can't use
-    the write-then-read-back trick (reading the store back would rescan
+    documents — parquet append, no rewrite of existing files.  The
+    shingle append and the bucket derivation run as two concurrent
+    jobs over the batch — append mode can't use the
+    write-then-read-back trick (reading the store back would rescan
     every earlier batch's files).
 
     ``local=True``: callers that already counted a non-empty batch at
     or under the row cap (ingest sinks materialize their survivors cache
     with a count) append it DRIVER-SIDE — one collect of the cached
     frame and one pyarrow part file per store instead of two write jobs
-    and a count (see _local_append_dedup); large/unknown batches, and a
+    and a count (see _BandedIndex.append_local); large/unknown batches, and a
     local append that declines, keep the distributed appends."""
-    if local and _local_append_dedup(
-        df, id_col, text_col, path, k, num_perm, rows_per_band
-    ):
-        return
-    sh = (
-        # no spread (r13): the shingle pass lands in a persist consumed
-        # by two branches — round-robin widening a batch-sized input
-        # adds a shuffle plus 32-wide cache partitions for every
-        # downstream task wave.  Interleaved A/B: ns_dedup_incremental
-        # 7.0-7.3 -> 5.0-5.6 s, ns_dedup_idx_build 4.1-5.0 -> 3.7-4.5 s.
-        df
-        .select(
-            F.col(id_col).alias("__id__"),
-            word_shingles(F.col(text_col), k).alias("__sh__"),
-        )
-        .filter(F.size("__sh__") > 0)
-        .persist()
+    _LshIndex(id_col, text_col, k, num_perm, rows_per_band).append(
+        df, path, local
     )
-    try:
-        # token-hash kernel: must match the probes (see write_dedup_index).
-        # The two stores are independent outputs: concurrent jobs (r10)
-        def _append_buckets():
-            bpath = os.path.join(path, "buckets")
-            from fluss_datafusion_spark.catalog.catalog import (
-                _parquet_files,
-            )
-
-            try:
-                before = _parquet_files(bpath)
-            except Exception:
-                before = set()
-            minhash_band_buckets(
-                df, id_col, text_col, k, num_perm, rows_per_band
-            ).sortWithinPartitions("__bucket__").write.mode(
-                "append"
-            ).parquet(bpath)
-            _harvest_store_manifest(bpath, before=before)
-
-        def _append_shingles():
-            spath = os.path.join(path, "shingles")
-            from fluss_datafusion_spark.catalog.catalog import (
-                _parquet_files,
-            )
-
-            try:
-                before = _parquet_files(spath)
-            except Exception:
-                before = set()
-            sh.sortWithinPartitions("__id__").write.mode(
-                "append"
-            ).parquet(spath)
-            _harvest_store_manifest(spath, before=before)
-
-        _parallel_writes(_append_shingles, _append_buckets)
-        _bump_index_marker(path, df.count())
-    finally:
-        sh.unpersist()
 
 
 def curation_ingest_transform(
@@ -582,130 +844,16 @@ def dedup_ingest_sink(
     ``metrics`` (optional list) records per batch:
     {batch_id, n_in, n_filtered, n_dropped, n_kept}.
     """
-    from pyspark.sql import functions as F  # noqa: F811 (local clarity)
-
-    from fluss_datafusion_spark.catalog.catalog import _LOCAL_ROW_CAP
-
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        import contextlib
-
-        with contextlib.ExitStack() as stack:
-            # the batch frame feeds three consumers (bucket assignment,
-            # shingle verify, the survivors anti-join) — persist always;
-            # the n_raw / n_in COUNT jobs exist only for metrics records
-            # and their early-outs, so metrics-off batches skip both
-            # (r13, two job floors per micro-batch; an empty batch flows
-            # through the cached empty probe for pennies)
-            raw_df = batch_df.persist()
-            stack.callback(raw_df.unpersist)
-            if metrics is not None:
-                n_raw = raw_df.count()
-                if n_raw == 0:
-                    return
-            batch_df = transform(raw_df) if transform else raw_df
-            if batch_df is not raw_df:
-                batch_df = batch_df.persist()
-                stack.callback(batch_df.unpersist)
-            if metrics is not None:
-                n_in = batch_df.count()
-                if n_in == 0:
-                    metrics.append(
-                        {
-                            "batch_id": batch_id,
-                            "n_in": n_raw,
-                            "n_filtered": n_raw,
-                            "n_dropped": 0,
-                            "n_kept": 0,
-                        }
-                    )
-                    return
-            pairs = incremental_dedup_pairs(
-                batch_df, index_path, id_col, text_col, threshold=threshold,
-                keep_markers=True,
-            )
-            # Every pair touches the batch (incremental_dedup_pairs
-            # guarantees it) and carries (a_new, b_new) endpoint markers
-            # already — no re-join against the batch ids here.  If one
-            # endpoint is already indexed, the OTHER endpoint is the
-            # batch doc — drop it whichever id is greater (the corpus
-            # copy must win; batch ids are only globally unique, not
-            # monotone with ingest order).  Pairs wholly inside the
-            # batch fall back to greater-id-drops.
-            drop = pairs.select(
-                F.when(~F.col("b_new"), F.col("id_a"))
-                .when(~F.col("a_new"), F.col("id_b"))
-                .otherwise(F.greatest("id_a", "id_b"))
-                .alias(id_col)
-            ).distinct()
-            survivors = batch_df.join(drop, id_col, "left_anti").persist()
-            n_kept = survivors.count()  # one job materializes the cache
-            if n_kept:
-                # engine upsert + index append are independent outputs
-                # of the SAME cached frame: overlap them (r10 — see
-                # _parallel_writes for the replay-safety argument).
-                # n_kept is exact (the cache was just materialized), so
-                # a small batch takes both driver-local write paths —
-                # the capped collects are cache reads, never a second
-                # execution
-                local = n_kept <= _LOCAL_ROW_CAP
-                _parallel_writes(
-                    lambda: catalog.insert(table, survivors, local=local),
-                    lambda: append_to_index(
-                        survivors, id_col, text_col, index_path, local=local
-                    ),
-                )
-            release_candidate_cache(pairs)
-            if metrics is not None:
-                metrics.append(
-                    {
-                        "batch_id": batch_id,
-                        "n_in": n_raw,
-                        "n_filtered": n_raw - n_in,
-                        "n_dropped": n_in - n_kept,
-                        "n_kept": n_kept,
-                    }
-                )
-            survivors.unpersist()
-
-    return (
-        stream_docs.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-# -- incremental HAMMING (perceptual-hash) dedup ------------------------------
-
-# Bump when the fingerprint kernel or band layout changes (same contract
-# as INDEX_FORMAT above): a marker with a different token rebuilds.
-HAMMING_INDEX_FORMAT = "v1"
-
-
-def _hamming_token(source_id, n_bands: int, key_blocks: int = 1) -> str:
-    # key_blocks joins the token only when non-default, so every v1
-    # index marker stays valid; a widened-key rebuild changes the token
-    # and forces stale narrow-key indexes to rebuild (the INDEX_FORMAT
-    # discipline).
-    kb = f"|kb={key_blocks}" if key_blocks != 1 else ""
-    return f"hamming-{HAMMING_INDEX_FORMAT}|bands={n_bands}{kb}|n={source_id}"
-
-
-def _hamming_bands(
-    hashes: DataFrame, n_bands: int, key_blocks: int = 1
-) -> DataFrame:
-    """(__id__, __band__, __slice__) key assignment of 64-bit
-    fingerprints — dedup.hamming_band_keys, the same derivation
-    dedup.hamming_near_dup_pairs uses, so index and probe bucket values
-    agree by construction (incl. the widened block-combination keys for
-    past-2^16-fingerprint corpora)."""
-    from fluss_datafusion_spark.operators.dedup import hamming_band_keys
-
-    return hashes.select(
-        "__id__",
-        F.posexplode(
-            F.array(*hamming_band_keys(n_bands, key_blocks))
-        ).alias("__band__", "__slice__"),
+    return _ingest_sink(
+        stream_docs, catalog, table, checkpoint, id_col, transform, metrics,
+        prepare=lambda batch: batch,
+        probe=lambda batch: incremental_dedup_pairs(
+            batch, index_path, id_col, text_col, threshold=threshold,
+            keep_markers=True,
+        ),
+        append=lambda survivors, local: append_to_index(
+            survivors, id_col, text_col, index_path, local=local
+        ),
     )
 
 
@@ -917,143 +1065,9 @@ def write_hamming_index(
     ``write_dedup_index``: at 100 TB the corpus is fingerprinted once
     (decode + dHash, the expensive Arrow pass) and every ingest batch
     probes in O(batch)."""
-    # persist the NARROW (id, hash) projection: both store writes (and
-    # previously the marker's count) consume it, and without a cache
-    # each one re-executes the full input plan — for fingerprint inputs
-    # that is the decode-heavy Arrow pass, the single most expensive
-    # piece of the build (r13).  16 bytes/row bounds the cache at any
-    # corpus size; the expensive payload bytes are NOT cached.
-    hashes = df.select(
-        F.col(id_col).alias("__id__"), F.col(hash_col).alias("__h__")
-    ).persist()
-
-    # the two stores are independent outputs of one input: write them
-    # as CONCURRENT jobs (threads share the SparkSession) so the build
-    # pays max(write), not sum — the marker still lands strictly LAST
-    def _write_buckets():
-        # range-cluster on the probe key so per-file footer bounds are
-        # tight, then harvest a skipping manifest: every ingest batch's
-        # probe can then drop untouched store files driver-side (r11)
-        bpath = os.path.join(path, "buckets")
-        _hamming_bands(hashes, n_bands, key_blocks).repartitionByRange(
-            "__slice__", "__band__"
-        ).write.mode("overwrite").parquet(bpath)
-        _harvest_store_manifest(bpath)
-
-    def _write_hashes():
-        hpath = os.path.join(path, "hashes")
-        # disjoint per-file id bounds for the verify-store prune (r12):
-        # range-cluster below full-core parallelism, natural layout
-        # past it — see write_dedup_index's shingle-store note
-        h = hashes
-        parallelism = h.sparkSession.sparkContext.defaultParallelism
-        if h.rdd.getNumPartitions() < parallelism:
-            h = h.repartitionByRange(parallelism, "__id__")
-        h.sortWithinPartitions("__id__").write.mode(
-            "overwrite"
-        ).parquet(hpath)
-        _harvest_store_manifest(hpath)
-
-    try:
-        _parallel_writes(_write_hashes, _write_buckets)
-    finally:
-        hashes.unpersist()
-    if source_id is None:
-        # the token's n is the input row count — exactly the hashes
-        # store's row count (no filter between df and the store), so
-        # read it from the just-written parquet footers instead of
-        # paying a THIRD execution of the (decode-heavy) input plan
-        # via df.count() (r13: each store write already executed it
-        # once; measured one full fingerprint pass saved per build)
-        try:
-            import pyarrow.parquet as _pq
-
-            from fluss_datafusion_spark.catalog.catalog import (
-                _parquet_files,
-            )
-
-            source_id = sum(
-                _pq.read_metadata(f).num_rows
-                for f in _parquet_files(os.path.join(path, "hashes"))
-            )
-        except Exception:
-            source_id = df.count()
-    token = _hamming_token(source_id, n_bands, key_blocks)
-    with open(_index_marker_path(path), "w", encoding="utf-8") as fh:
-        fh.write(token)
-
-
-def _local_append_hamming(
-    df: DataFrame,
-    id_col: str,
-    hash_col: str,
-    path: str,
-    n_bands: int,
-    key_blocks: int,
-) -> bool:
-    """Driver-local small-batch append to both hamming stores: the band
-    keys are evaluated by the SAME hamming_band_keys expressions the
-    distributed path posexplodes (one collect — exactness by
-    construction, no Python twin of the bit arithmetic), then one part
-    file per store through _append_store_files.  Same small-delta
-    rationale and the same row cap as the catalog's driver-local seam
-    (_collect_capped).  Returns False (the caller runs the distributed
-    appends) past the cap, when either store is missing or empty, or
-    when collecting, building or writing fails (e.g. a null hash) —
-    never raises."""
-    from fluss_datafusion_spark.catalog.catalog import _collect_capped
-    from fluss_datafusion_spark.operators.dedup import hamming_band_keys
-
-    try:
-        # two selects: the band keys read __h__ from the projection
-        # below, never from an input column that happens to share the
-        # name (a lateral alias would resolve to the input's)
-        rows = _collect_capped(
-            df.select(
-                F.col(id_col).alias("__id__"), F.col(hash_col).alias("__h__")
-            ).select(
-                "__id__",
-                "__h__",
-                F.array(*hamming_band_keys(n_bands, key_blocks)).alias(
-                    "__keys__"
-                ),
-            )
-        )
-        if rows is None:
-            return False
-        ids = [r["__id__"] for r in rows]
-        hs = [r["__h__"] for r in rows]
-        b_ids, b_bands, b_slices = [], [], []
-        for r in rows:
-            for band, sl in enumerate(r["__keys__"]):
-                b_ids.append(r["__id__"])
-                b_bands.append(band)
-                b_slices.append(sl)
-        # sort the bucket rows by slice so the appended file's footer
-        # bounds stay tight for probe pruning (mirrors the distributed
-        # path's sortWithinPartitions("__slice__"))
-        order = sorted(range(len(b_slices)), key=lambda i: (b_slices[i],))
-        horder = sorted(range(len(ids)), key=lambda i: (ids[i],))
-        stores = [
-            (
-                os.path.join(path, "buckets"),
-                {
-                    "__id__": [b_ids[i] for i in order],
-                    "__band__": [b_bands[i] for i in order],
-                    "__slice__": [b_slices[i] for i in order],
-                },
-            ),
-            (
-                os.path.join(path, "hashes"),
-                {
-                    "__id__": [ids[i] for i in horder],
-                    "__h__": [hs[i] for i in horder],
-                },
-            ),
-        ]
-    except Exception:
-        return False
-    return _append_store_files(stores)
+    _HammingIndex(id_col, hash_col, n_bands, key_blocks).build(
+        df, path, source_id
+    )
 
 
 def append_to_hamming_index(
@@ -1074,48 +1088,11 @@ def append_to_hamming_index(
     or under the row cap (ingest sinks materialize their survivors cache
     with a count) append it DRIVER-SIDE — one collect of the cached
     frame and two pyarrow part files instead of two write jobs (see
-    _local_append_hamming); large/unknown batches keep the distributed
+    _BandedIndex.append_local); large/unknown batches keep the distributed
     appends."""
-    if local and _local_append_hamming(
-        df, id_col, hash_col, path, n_bands, key_blocks
-    ):
-        return
-    hashes = df.select(
-        F.col(id_col).alias("__id__"), F.col(hash_col).alias("__h__")
+    _HammingIndex(id_col, hash_col, n_bands, key_blocks).append(
+        df, path, local
     )
-    # concurrent independent appends (see write_hamming_index); a crash
-    # between them leaves a partial append, which the foreachBatch
-    # replay re-appends wholesale — duplicate index entries are benign
-    # (candidate pairs dedup by id), exactly as with sequential writes
-    def _append_buckets():
-        bpath = os.path.join(path, "buckets")
-        from fluss_datafusion_spark.catalog.catalog import _parquet_files
-
-        try:
-            before = _parquet_files(bpath)
-        except Exception:
-            before = set()
-        # batch-sized: sort within the (few) incoming partitions so the
-        # appended files' slice bounds stay tight for probe pruning
-        _hamming_bands(hashes, n_bands, key_blocks).sortWithinPartitions(
-            "__slice__"
-        ).write.mode("append").parquet(bpath)
-        _harvest_store_manifest(bpath, before=before)
-
-    def _append_hashes():
-        hpath = os.path.join(path, "hashes")
-        from fluss_datafusion_spark.catalog.catalog import _parquet_files
-
-        try:
-            before = _parquet_files(hpath)
-        except Exception:
-            before = set()
-        hashes.sortWithinPartitions("__id__").write.mode("append").parquet(
-            hpath
-        )
-        _harvest_store_manifest(hpath, before=before)
-
-    _parallel_writes(_append_hashes, _append_buckets)
 
 
 def incremental_hamming_pairs(
@@ -1143,113 +1120,10 @@ def incremental_hamming_pairs(
     Recall is pigeonhole-exact for max_hamming <= n_bands - key_blocks
     (pass key_blocks=2 past ~2^16 distinct fingerprints — see
     dedup.hamming_band_keys)."""
-    # Probing with a different key derivation than the index was built
-    # with silently misses every cross-batch pair (the INDEX_FORMAT-v2
-    # lesson) — refuse on a marker whose (bands, kb) prefix disagrees.
-    marker = _index_marker_path(index_path)
-    try:
-        with open(marker, "r", encoding="utf-8") as fh:
-            token = fh.read()
-    except OSError:
-        token = None
-    if token is not None:
-        prefix = _hamming_token("", n_bands, key_blocks).rsplit("|n=", 1)[0]
-        if not token.startswith(prefix + "|n="):
-            raise ValueError(
-                f"hamming index at {index_path} was built as "
-                f"'{token.rsplit('|n=', 1)[0]}' but the probe derives "
-                f"'{prefix}' keys — rebuild the index or match "
-                "n_bands/key_blocks"
-            )
-    spark = new_df.sparkSession
-    new_hashes = new_df.select(
-        F.col(id_col).alias("__id__"), F.col(hash_col).alias("__h__")
-    ).persist()
-    new_bands = _hamming_bands(new_hashes, n_bands, key_blocks)
-    # manifest-pruned store read (r11): the slice-clustered store drops
-    # untouched files driver-side; the broadcast semi-join below stays
-    # the exactness filter (per-column bounds admit the cross-product)
-    idx_bands = _pruned_store_read(
-        spark,
-        os.path.join(index_path, "buckets"),
-        new_bands.select("__band__", "__slice__"),
-        ["__band__", "__slice__"],
+    return _HammingIndex(id_col, hash_col, n_bands, key_blocks).probe(
+        new_df, index_path, lambda s: s <= max_hamming, max_bucket_size,
+        keep_markers,
     )
-    touched = F.broadcast(new_bands.select("__band__", "__slice__"))
-    idx_touched = idx_bands.join(
-        touched, ["__band__", "__slice__"], "left_semi"
-    )
-    all_bands = new_bands.unionByName(idx_touched)
-    raw_candidates = _bucket_local_pairs(
-        all_bands,
-        ["__band__", "__slice__"],
-        max_bucket_size,
-        "incremental_hamming_guard",
-    )
-    new_ids = new_hashes.select(F.col("__id__").alias("__nid__")).distinct()
-    candidates = (
-        raw_candidates.join(
-            F.broadcast(
-                new_ids.select(
-                    F.col("__nid__").alias("id_a"), F.lit(True).alias("__a__")
-                )
-            ),
-            "id_a",
-            "left",
-        )
-        .join(
-            F.broadcast(
-                new_ids.select(
-                    F.col("__nid__").alias("id_b"), F.lit(True).alias("__b__")
-                )
-            ),
-            "id_b",
-            "left",
-        )
-        .filter(F.col("__a__").isNotNull() | F.col("__b__").isNotNull())
-        .select(
-            "id_a",
-            "id_b",
-            F.col("__a__").isNotNull().alias("a_new"),
-            F.col("__b__").isNotNull().alias("b_new"),
-        )
-    )
-    cand_ids = F.broadcast(
-        candidates.select(
-            F.explode(F.array("id_a", "id_b")).alias("__id__")
-        ).distinct()
-    )
-    # manifest-pruned verify read (r12): same file-drop discipline as
-    # the bucket store, keyed by the batch-bounded candidate ids
-    idx_hashes = _pruned_store_read(
-        spark,
-        os.path.join(index_path, "hashes"),
-        candidates.select(F.explode(F.array("id_a", "id_b")).alias("__id__")),
-        ["__id__"],
-        min_files=_VERIFY_PRUNE_MIN_FILES,
-    )
-    hashes = new_hashes.unionByName(
-        idx_hashes.join(cand_ids, "__id__", "left_semi")
-    ).persist()
-    ha = F.broadcast(
-        hashes.withColumnsRenamed({"__id__": "id_a", "__h__": "__ha__"})
-    )
-    hb = F.broadcast(
-        hashes.withColumnsRenamed({"__id__": "id_b", "__h__": "__hb__"})
-    )
-    verified = (
-        candidates.join(ha, "id_a")
-        .join(hb, "id_b")
-        .withColumn("ham", F.expr("bit_count(__ha__ ^ __hb__)").cast("int"))
-        .filter(F.col("ham") <= max_hamming)
-        .select(
-            "id_a",
-            "id_b",
-            "ham",
-            *(["a_new", "b_new"] if keep_markers else []),
-        )
-    )
-    return _attach_cached_deps(verified, raw_candidates, new_hashes, hashes)
 
 
 def media_ingest_sink(
@@ -1305,112 +1179,31 @@ def media_ingest_sink(
     hooks, and NEGATIVE for row-expanding hooks (a scene hook emits
     several rows per video); n_dropped/n_kept are at fingerprint-row
     grain."""
-    from fluss_datafusion_spark.catalog.catalog import _LOCAL_ROW_CAP
     from fluss_datafusion_spark.functions.multimodal import image_dhash_stats
 
     fp_fn = fingerprint if fingerprint is not None else image_dhash_stats
 
-    def _apply(batch_df: DataFrame, batch_id: int) -> None:
-        import contextlib
-
-        with contextlib.ExitStack() as stack:
-            # metrics-off fast shape (r13): the n_raw / n_in counts exist
-            # only for the metrics records and their empty-batch
-            # early-outs — without metrics an empty batch flows through
-            # the (cached, empty) probe for pennies, so skipping the two
-            # count jobs saves two per-micro-batch job floors.  The raw
-            # persist is kept only while something reads the batch twice
-            # (a transform, or the metrics count + the fingerprint pass).
-            if metrics is not None or transform is not None:
-                raw_df = batch_df.persist()
-                stack.callback(raw_df.unpersist)
-            else:
-                raw_df = batch_df
-            n_raw = raw_df.count() if metrics is not None else None
-            if n_raw == 0 and metrics is not None:
-                return
-            cur = transform(raw_df) if transform else raw_df
-            fp_raw = fp_fn(
-                cur.select(
-                    F.col(id_col).alias("media_id"),
-                    F.col(payload_col).alias("payload"),
-                )
-            ).filter(F.col("decoded_ok"))
-            keep = [
-                c
-                for c in fp_raw.columns
-                if c not in ("media_id", "decoded_ok")
-            ]
-            fp = fp_raw.select(
-                F.col("media_id").alias(id_col), *keep
-            ).persist()
-            stack.callback(fp.unpersist)
-            if metrics is not None:
-                n_in = fp.count()
-                if n_in == 0:
-                    metrics.append(
-                        {
-                            "batch_id": batch_id,
-                            "n_in": n_raw,
-                            "n_filtered": n_raw,
-                            "n_dropped": 0,
-                            "n_kept": 0,
-                        }
-                    )
-                    return
-            pairs = incremental_hamming_pairs(
-                fp,
-                index_path,
-                id_col,
-                hash_col,
-                max_hamming=max_hamming,
-                n_bands=n_bands,
-                keep_markers=True,
-                key_blocks=key_blocks,
+    def _fingerprint(cur: DataFrame) -> DataFrame:
+        fp = fp_fn(
+            cur.select(
+                F.col(id_col).alias("media_id"),
+                F.col(payload_col).alias("payload"),
             )
-            drop = pairs.select(
-                F.when(~F.col("b_new"), F.col("id_a"))
-                .when(~F.col("a_new"), F.col("id_b"))
-                .otherwise(F.greatest("id_a", "id_b"))
-                .alias(id_col)
-            ).distinct()
-            survivors = fp.join(drop, id_col, "left_anti").persist()
-            n_kept = survivors.count()  # one job materializes the cache
-            if n_kept:
-                # the engine upsert and the index append are independent
-                # outputs of the SAME cached frame: overlap them (r10 —
-                # the batch pays max(write), not sum; see _parallel_writes
-                # for the replay-safety argument).  n_kept is exact (the
-                # cache was materialized by the count above), so a small
-                # batch takes both driver-local write paths — the
-                # "probe" collects are cache reads, never a second
-                # execution (r13).
-                local = n_kept <= _LOCAL_ROW_CAP
-                _parallel_writes(
-                    lambda: catalog.insert(table, survivors, local=local),
-                    lambda: append_to_hamming_index(
-                        survivors, id_col, hash_col, index_path,
-                        n_bands=n_bands, key_blocks=key_blocks, local=local,
-                    ),
-                )
-            release_candidate_cache(pairs)
-            if metrics is not None:
-                metrics.append(
-                    {
-                        "batch_id": batch_id,
-                        "n_in": n_raw,
-                        "n_filtered": n_raw - n_in,
-                        "n_dropped": n_in - n_kept,
-                        "n_kept": n_kept,
-                    }
-                )
-            survivors.unpersist()
+        ).filter(F.col("decoded_ok"))
+        keep = [c for c in fp.columns if c not in ("media_id", "decoded_ok")]
+        return fp.select(F.col("media_id").alias(id_col), *keep)
 
-    return (
-        stream_media.writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint)
-        .trigger(availableNow=True)
-        .start()
+    return _ingest_sink(
+        stream_media, catalog, table, checkpoint, id_col, transform, metrics,
+        prepare=_fingerprint,
+        probe=lambda batch: incremental_hamming_pairs(
+            batch, index_path, id_col, hash_col, max_hamming=max_hamming,
+            n_bands=n_bands, keep_markers=True, key_blocks=key_blocks,
+        ),
+        append=lambda survivors, local: append_to_hamming_index(
+            survivors, id_col, hash_col, index_path, n_bands=n_bands,
+            key_blocks=key_blocks, local=local,
+        ),
     )
 
 

@@ -261,7 +261,7 @@ def test_hamming_local_append_null_hash_falls_back(spark, tmp_path):
     batch = spark.createDataFrame(
         [(100, 5), (101, None)], "media_id long, dhash long"
     )
-    assert inc._local_append_hamming(batch, "media_id", "dhash", idx, 4, 1) is False
+    assert inc._HammingIndex("media_id", "dhash", 4, 1).append_local(batch, idx) is False
     inc.append_to_hamming_index(batch, "media_id", "dhash", idx, local=True)
     for store in ("hashes", "buckets"):
         assert not any("-local" in f for f in os.listdir(os.path.join(idx, store)))
@@ -375,8 +375,8 @@ def test_dedup_local_append_declines_missing_store(spark, tmp_path):
     inc.write_dedup_index(corpus, "doc_id", "text", idx)
     before = _marker(idx)
     shutil.rmtree(os.path.join(idx, "shingles"))
-    assert inc._local_append_dedup(
-        batch, "doc_id", "text", idx, 3, 128, 2
+    assert inc._LshIndex("doc_id", "text", 3, 128, 2).append_local(
+        batch, idx
     ) is False
     assert not any(
         "-local" in f or f.endswith(".tmp") for f in _store_files(idx, "buckets")
@@ -404,8 +404,8 @@ def test_dedup_local_append_write_failure_leaves_nothing(
 
     with monkeypatch.context() as m:
         m.setattr(pq, "write_table", flaky)
-        assert inc._local_append_dedup(
-            batch, "doc_id", "text", idx, 3, 128, 2
+        assert inc._LshIndex("doc_id", "text", 3, 128, 2).append_local(
+            batch, idx
         ) is False
     assert len(calls) == 2
     for store in ("shingles", "buckets"):
@@ -417,3 +417,143 @@ def test_dedup_local_append_write_failure_leaves_nothing(
     inc.append_to_index(batch, "doc_id", "text", idx, local=True)
     sh = spark.read.parquet(os.path.join(idx, "shingles"))
     assert sh.count() == sh.select("__id__").distinct().count() == 40
+
+
+@pytest.mark.parametrize("local", [True, False], ids=["local", "distributed"])
+@pytest.mark.parametrize("kind", ["lsh", "hamming"])
+def test_appended_index_equals_rebuilt(spark, tmp_path, kind, local):
+    """Both append paths of both indexes are pure appends: after
+    build(corpus) + append(batch), each store equals a rebuild over
+    corpus + batch (same rows, same Spark schema)."""
+    if kind == "lsh":
+        corpus, batch = _text_frames(spark)
+        cols, stores = ("doc_id", "text"), ("shingles", "buckets")
+        build, append = inc.write_dedup_index, inc.append_to_index
+    else:
+        corpus, rng = _hash_frames(spark)
+        batch = spark.createDataFrame(
+            [(100 + i, rng.getrandbits(63)) for i in range(8)],
+            "media_id long, dhash long",
+        )
+        cols, stores = ("media_id", "dhash"), ("hashes", "buckets")
+        build, append = inc.write_hamming_index, inc.append_to_hamming_index
+    appended, rebuilt = str(tmp_path / "appended"), str(tmp_path / "rebuilt")
+    build(corpus, *cols, appended)
+    batch = batch.persist()
+    batch.count()
+    append(batch, *cols, appended, local=local)
+    build(corpus.unionByName(batch), *cols, rebuilt)
+    batch.unpersist()
+    for store in stores:
+        a = spark.read.parquet(os.path.join(appended, store))
+        b = spark.read.parquet(os.path.join(rebuilt, store))
+        assert a.schema == b.schema, store
+        assert a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty(), store
+        # the append path under test really ran
+        assert any("-local" in f for f in _store_files(appended, store)) == local
+
+
+def test_lsh_probe_refuses_mismatched_index(spark, tmp_path):
+    """A k=4 probe of a k=3 LSH index derives different bands and
+    shingles, so it must refuse, naming both tokens; a missing marker
+    still probes."""
+    corpus, batch = _text_frames(spark)
+    idx = str(tmp_path / "idx")
+    inc.write_dedup_index(corpus, "doc_id", "text", idx, k=3)
+    with pytest.raises(ValueError, match="rebuild the index") as err:
+        inc.incremental_dedup_pairs(batch, idx, "doc_id", "text", k=4)
+    for k in (3, 4):
+        assert f"{inc.INDEX_FORMAT}|k={k}|perm=128|rpb=2" in str(err.value)
+    os.remove(os.path.join(idx, "_BUILT"))
+    pairs = inc.incremental_dedup_pairs(batch, idx, "doc_id", "text", k=3)
+    assert pairs.count() > 0
+    inc.release_candidate_cache(pairs)
+
+
+def test_marker_write_failure_keeps_previous_token(spark, tmp_path, monkeypatch):
+    """A marker write that raises after the open (the truncate) and
+    before the token lands leaves the previous ``_BUILT`` token intact,
+    for both index builds and the LSH append's count bump."""
+    import builtins
+
+    corpus, batch = _text_frames(spark)
+    hashes, _ = _hash_frames(spark)
+    lsh, ham = str(tmp_path / "lsh"), str(tmp_path / "ham")
+    inc.write_dedup_index(corpus, "doc_id", "text", lsh)
+    inc.write_hamming_index(hashes, "media_id", "dhash", ham)
+    before = {p: _marker(p) for p in (lsh, ham)}
+    real_open = builtins.open
+
+    class _Torn:
+        def __init__(self, fh):
+            self.fh = fh
+
+        def __enter__(self):
+            return self
+
+        def __exit__(self, *exc):
+            self.fh.close()
+
+        def write(self, data):
+            raise OSError("injected mid-marker failure")
+
+    def torn_open(file, mode="r", *a, **k):
+        fh = real_open(file, mode, *a, **k)
+        return _Torn(fh) if "w" in mode else fh
+
+    monkeypatch.setattr(inc, "open", torn_open, raising=False)
+    with pytest.raises(OSError, match="injected"):
+        inc.write_dedup_index(corpus, "doc_id", "text", lsh, source_id="s2")
+    with pytest.raises(OSError, match="injected"):
+        inc.write_hamming_index(hashes, "media_id", "dhash", ham, source_id="s2")
+    inc.append_to_index(batch, "doc_id", "text", lsh, local=True)
+    monkeypatch.undo()
+    assert {p: _marker(p) for p in (lsh, ham)} == before
+
+
+class _FailingCatalog:
+    def insert(self, *args, **kwargs):
+        raise RuntimeError("injected upsert failure")
+
+
+@pytest.mark.parametrize("kind", ["text", "media"])
+def test_sink_failed_write_releases_caches(spark, tmp_path, kind):
+    """A raising upsert fails the micro-batch, and the session then
+    holds no more persisted RDDs than before the run: the sink's batch
+    and survivors caches and the probe's candidate caches are all
+    released on the failure path too."""
+    import pyarrow as pa
+
+    idx, replay = str(tmp_path / "idx"), str(tmp_path / "replay")
+    os.makedirs(replay)
+    if kind == "text":
+        corpus, batch = _text_frames(spark)
+        inc.write_dedup_index(corpus, "doc_id", "text", idx)
+        schema, sink = "doc_id long, text string", inc.dedup_ingest_sink
+    else:
+        from fluss_datafusion_spark.functions.multimodal import (
+            synthesize_gradient_bmp_media,
+        )
+
+        media = synthesize_gradient_bmp_media(
+            spark.range(0, 40).select(F.col("id").alias("doc_id"))
+        )
+        inc.write_hamming_index(
+            image_dhash_stats(media.filter(F.col("media_id") < 20)),
+            "media_id", "dhash", idx,
+        )
+        batch = media.filter(F.col("media_id") >= 20)
+        schema, sink = "media_id long, payload binary", inc.media_ingest_sink
+    pq.write_table(
+        pa.Table.from_pandas(batch.toPandas(), preserve_index=False),
+        os.path.join(replay, "b00000.parquet"),
+    )
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    before = persistent().size()
+    query = sink(
+        spark.readStream.schema(schema).parquet(replay),
+        _FailingCatalog(), "t", idx, str(tmp_path / "ckpt"),
+    )
+    with pytest.raises(Exception, match="injected upsert failure"):
+        query.awaitTermination()
+    assert persistent().size() <= before

@@ -228,8 +228,8 @@ def test_failed_rename_leaves_table_and_store_readable(
         e.sql("INSERT INTO lr VALUES (3, 'c'), (4, 'd'), (5, 'e')")
     batch = spark.createDataFrame([(100, 5), (101, 6)],
                                   "media_id long, dhash long")
-    assert inc._local_append_hamming(
-        batch, "media_id", "dhash", idx, 4, 1) is False
+    assert inc._HammingIndex("media_id", "dhash", 4, 1).append_local(
+        batch, idx) is False
     monkeypatch.setattr(os, "replace", real_replace)
     assert len(renames) == 4
 
