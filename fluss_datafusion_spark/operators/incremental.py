@@ -224,6 +224,14 @@ class _BandedIndex:
         ``source_id``."""
         return df.count()
 
+    def verify(self, base: DataFrame) -> DataFrame:
+        """(__id__, <col>) verify rows of a projection."""
+        return base
+
+    def stored(self, rows: DataFrame) -> DataFrame:
+        """The verify rows the store keeps."""
+        return rows
+
     def build(self, df: DataFrame, path: str, source_id=None, token=None):
         base = self.base(df)
         if self.narrow:
@@ -243,7 +251,8 @@ class _BandedIndex:
         try:
             _parallel_writes(
                 lambda: _write_store(
-                    self.verify(clustered).sortWithinPartitions("__id__"),
+                    self.stored(self.verify(clustered))
+                    .sortWithinPartitions("__id__"),
                     path, self.store,
                 ),
                 lambda: _write_store(
@@ -274,7 +283,7 @@ class _BandedIndex:
         # the appended files' footer bounds tight for both prunes.
         _parallel_writes(
             lambda: _write_store(
-                self.verify(base).sortWithinPartitions("__id__"),
+                self.stored(self.verify(base)).sortWithinPartitions("__id__"),
                 path, self.store, append=True,
             ),
             lambda: _write_store(
@@ -440,19 +449,13 @@ class _BandedIndex:
             .unionByName(idx_verify.join(cand_ids, "__id__", "left_semi"))
             .persist()
         )
-        va, vb = (
-            F.broadcast(
-                verify.withColumnsRenamed(
-                    {"__id__": f"id_{side}", self.col: f"__v{side}__"}
-                )
-            )
-            for side in ("a", "b")
-        )
+        va, vb = F.broadcast(verify).alias("va"), F.broadcast(verify).alias("vb")
         verified = (
-            candidates.join(va, "id_a")
-            .join(vb, "id_b")
+            candidates.join(va, F.col("id_a") == F.col("va.__id__"))
+            .join(vb, F.col("id_b") == F.col("vb.__id__"))
             .withColumn(
-                self.score_col, self.score(F.col("__va__"), F.col("__vb__"))
+                self.score_col,
+                self.score(F.col(f"va.{self.col}"), F.col(f"vb.{self.col}")),
             )
             .filter(within(F.col(self.score_col)))
             .select(
@@ -489,9 +492,11 @@ class _LshIndex(_BandedIndex):
         return word_shingles(F.col("__t__"), self.k).alias("__sh__")
 
     def verify(self, base: DataFrame) -> DataFrame:
-        return base.select("__id__", self._shingles()).filter(
-            F.size("__sh__") > 0
-        )
+        return base.select("__id__", self._shingles())
+
+    def stored(self, rows: DataFrame) -> DataFrame:
+        # documents under k words have no shingles and no buckets
+        return rows.filter(F.size("__sh__") > 0)
 
     def local_cols(self):
         from fluss_datafusion_spark.functions.text import tokens
@@ -537,9 +542,6 @@ class _HammingIndex(_BandedIndex):
 
     def bands(self, base: DataFrame) -> DataFrame:
         return _hamming_bands(base, self.n_bands, self.key_blocks)
-
-    def verify(self, base: DataFrame) -> DataFrame:
-        return base
 
     def input_rows(self, df: DataFrame, path: str) -> int:
         # the hashes store keeps every input row: read the count from
