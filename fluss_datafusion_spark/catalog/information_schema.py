@@ -257,7 +257,7 @@ def register_views(catalog, include_stats: bool = True) -> None:
         if not _mv.is_matview(catalog, qname):
             continue
         m = _mv._load_mv(catalog, qname)
-        source_desc = m["source"]
+        source_desc = m["sources"][0]["name"]
         if len(m["sources"]) > 1:
             parts = [f"{m['sources'][0]['name']} {m['sources'][0]['alias']}"]
             for src, pairs in zip(m["sources"][1:], m["joins"]):
@@ -266,16 +266,17 @@ def register_views(catalog, include_stats: bool = True) -> None:
             source_desc = " ".join(parts)
         # staleness (r6): statements committed on any source past the
         # view's checkpoint — 0 = fresh, N = a REFRESH would apply N
-        # statements' changes (the Snowflake/BigQuery staleness signal)
-        checkpoints = m.get("last_seqs") or [m.get("last_seq") or 0] + (
-            [m.get("last_seq2") or 0] if m.get("source2") else []
-        )
+        # statements' changes (the Snowflake/BigQuery staleness signal).
+        # Measured against the committed seq a REFRESH anchors on, which
+        # any session sees (this session's counter misses other
+        # sessions' writes)
         lag = 0
-        for src, lo in zip(m["sources"], checkpoints):
+        for src, lo in zip(m["sources"], m["last_seqs"]):
             try:
-                lag += max(0, catalog.current_seq(src["name"]) - int(lo))
+                hi = catalog._committed_seq(catalog.get_table(src["name"]))
             except Exception:
-                pass  # source dropped: surface the view row regardless
+                continue  # source dropped: surface the view row regardless
+            lag += max(0, hi - int(lo))
         mviews.append(
             (
                 s.database,
@@ -287,7 +288,7 @@ def register_views(catalog, include_stats: bool = True) -> None:
                     for a in m["aggs"]
                 ),
                 m.get("where"),
-                m.get("last_seq"),
+                m["last_seqs"][0],
                 lag,
                 lag == 0,
             )

@@ -13,8 +13,9 @@ Supported view shapes (the classic incrementally-maintainable algebra):
 
     SELECT g1, g2, agg1 AS a1, ... FROM src [WHERE pred] GROUP BY g1, g2
 
-    SELECT a.g, b.h, agg(a.x) AS s, ...
+    SELECT a.g, b.h, agg(c.x) AS s, ...
     FROM src1 [AS] a JOIN src2 [AS] b ON a.k = b.k [AND ...]
+    [JOIN src3 [AS] c ON b.j = c.j [AND ...]] ...
     [WHERE pred] GROUP BY a.g, b.h
 
 with the self-maintainable aggregates ``count(*)``, ``count(x)``,
@@ -27,11 +28,33 @@ flags just that group for recomputation from the source (a
 semi-join-restricted scan touching only the flagged groups' rows —
 the standard IVM treatment of non-self-maintainable aggregates; see
 Gupta & Mumick, "Maintenance of Materialized Views", 1995).  GROUP BY
-columns become the view table's PRIMARY KEY, so they must be non-null
+columns become the view's PRIMARY KEY, so they must be non-null
 in every source row the WHERE clause admits (enforced at build; add a
-NOT NULL conjunct to the WHERE to carve out null groups).
+NOT NULL conjunct to the WHERE to carve out null groups).  Join views
+reference every column alias-qualified (``a.col``), the WHERE clause
+included; a single-source view references plain column names.
 
-Delta-maintenance math per refresh window (single source):
+ONE delta rule maintains every shape: the incremental join delta (the
+DBSP / differential-dataflow derivation; Blakeley, Larson & Tompa 1986
+for the select-project-join case) folded over the sources in FROM
+order.  With J = A1 ⋈ ... ⋈ Ak the join so far, δJ its sign-weighted
+change multiset, and C the next source (C1 = C0 + δC; δC from C's
+bounded CDC window, snapshots pinned with ``read(as_of_seq=...)``):
+
+    δ(J ⋈ C) = δJ ⋈ C1  +  J1 ⋈ δC  −  δJ ⋈ δC
+
+where a joined row's sign is the product of its inputs' signs (the
+third term's sign is negated — both-sides-changed pairs are counted by
+the first two terms twice).  The fold starts from δA = A's CDC window,
+so k = 1 is the window itself, k = 2 is the classic pairwise rule, and
+each further source is one more fold step.  The signed rows then feed
+one group-aggregate delta, so a dim update that re-attributes every
+joined fact row falls out of the algebra with no special casing.
+Each term joins a (small) delta against a snapshot or another delta —
+AQE broadcasts the delta side — so refresh cost is
+O(changes × join fan-out), never O(Σ|sources|).
+
+Delta-maintenance math per refresh window:
 
     sign(op)   = +1 for +I/+U, -1 for -U/-D
     d_count    = SUM(sign)                        (per group)
@@ -43,22 +66,13 @@ Delta-maintenance math per refresh window (single source):
                  min over -images <= stored min (symmetric for max)
     group gone = hidden row count hits 0 → PK tombstone
 
-JOIN views use the standard incremental join delta rule (the DBSP /
-differential-dataflow derivation; Blakeley, Larson & Tompa 1986 for
-the select-project-join case).  With A1 = A0 + δA and B1 = B0 + δB
-(sign-weighted change multisets from each source's bounded CDC window,
-snapshots pinned with ``read(as_of_seq=...)``):
-
-    δ(A ⋈ B) = δA ⋈ B1  +  A1 ⋈ δB  −  δA ⋈ δB
-
-where a joined row's sign is the product of its inputs' signs (the
-third term's sign is negated — both-sides-changed pairs are counted by
-the first two terms twice).  The signed joined rows then feed the SAME
-group-aggregate delta machinery as the single-source case, so a dim
-update that re-attributes every joined fact row falls out of the
-algebra with no special casing.  Each term joins a (small) delta
-against a snapshot or another delta — AQE broadcasts the delta side —
-so refresh cost is O(changes × join fan-out), never O(|A| + |B|).
+Persisted spec (``_mv.json`` beside the view's data): ``sources``
+(``[{name, alias}]`` in FROM order), ``joins`` (per joined source, its
+AND-ed ``[earlier_alias.col, alias.col]`` pairs), ``last_seqs`` (one
+checkpoint seq per source), plus ``where``, ``group_cols``,
+``group_names``, ``aggs`` and ``float_sums``.  Specs written before the
+n-source form (flat per-source keys for one or two sources) are
+translated on load, in ``_load_mv`` only.
 
 SQL sums over zero non-null values are NULL, so every sum/avg carries a
 hidden non-null count; ``avg`` additionally stores its hidden sum and
@@ -70,8 +84,8 @@ transparently falls back to a full rebuild — the same contract as any
 CDC consumer checkpointed below the floor.
 
 Scale shape: a refresh is one changelog derivation per source filtered
-to the seq window (a parquet scan + one window pass), the delta joins
-above for join views, one map-side-combined delta aggregation keyed on
+to the seq window (a parquet scan + one window pass), the fold's delta
+joins above, one map-side-combined delta aggregation keyed on
 the group columns, one broadcast-or-shuffle LEFT join of (tiny) delta
 against the view, and ONE fused append (upserts and tombstones land
 under one seq via a per-row __del__ flag — r7).  Nothing corpus-sized
@@ -92,6 +106,11 @@ from typing import Dict, List, Optional, Tuple
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from fluss_datafusion_spark.catalog.ddl import (
+    _mask_literals,
+    _split_top_level,
+    _unmask_literals,
+)
 from fluss_datafusion_spark.catalog.metadata import (
     ColumnSpec,
     TableSpec,
@@ -130,19 +149,14 @@ _AGG_RE = re.compile(
 
 
 def parse_matview_select(select_sql: str) -> Dict:
-    """Parse the maintainable-view SELECT into
-    {source, source2, alias, alias2, join_on, where, group_cols,
-    group_names, aggs:[{fn, col, alias}]}.  ``source2``/``alias``/
-    ``join_on`` are None/empty for the single-table form; for join
-    views ``group_cols``/agg ``col``s hold the alias-qualified
-    expressions as written and ``group_names`` the unqualified output
-    names (the view's PK)."""
-    from fluss_datafusion_spark.catalog.ddl import (
-        _mask_literals,
-        _split_top_level,
-        _unmask_literals,
-    )
-
+    """Parse the maintainable-view SELECT into {sources:[{name, alias}],
+    joins, where, group_cols, group_names, aggs:[{fn, col, alias}]}.
+    ``joins[i]`` holds source i+1's AND-ed equality pairs, each
+    ``[earlier_alias.col, new_alias.col]``; a single source has no
+    joins (and alias None unless written).  For join views
+    ``group_cols``/agg ``col``s hold the alias-qualified expressions as
+    written and ``group_names`` the unqualified output names (the
+    view's PK)."""
     masked, lits = _mask_literals(select_sql.strip().rstrip(";"))
     match = _SELECT_RE.match(masked)
     if not match:
@@ -164,8 +178,6 @@ def parse_matview_select(select_sql: str) -> Dict:
     source = head.group("src").replace("`", "")
     is_join = len(segments) > 1
     alias = head.group("a1") or (source.split(".")[-1] if is_join else None)
-    # sources[i] = {name, alias}; joins[i] = the i+1-th source's AND-ed
-    # equality pairs, each [earlier_alias.col, new_alias.col]
     sources = [{"name": source, "alias": alias}]
     joins: List[List[List[str]]] = []
     for seg in segments[1:]:
@@ -205,9 +217,6 @@ def parse_matview_select(select_sql: str) -> Dict:
                 )
         sources.append({"name": src_i, "alias": alias_i})
         joins.append(pairs)
-    source2 = sources[1]["name"] if is_join else None
-    alias2 = sources[1]["alias"] if is_join else None
-    join_on = joins[0] if is_join else []
     aliases = {s["alias"] for s in sources if s["alias"]}
 
     def _check_ref(ref: str, what: str) -> str:
@@ -274,14 +283,6 @@ def parse_matview_select(select_sql: str) -> Dict:
     if len(set(names)) != len(names):
         raise ValueError(f"duplicate output column names in {names}")
     return {
-        "source": source,
-        "source2": source2,
-        "alias": alias,
-        "alias2": alias2,
-        "join_on": join_on,
-        # n-ary form (r6): the full source list + per-join equality
-        # pairs; the 2-source legacy keys above stay populated so
-        # persisted pre-r6 _mv.json files keep loading
         "sources": sources,
         "joins": joins,
         "where": _unmask_literals(
@@ -313,33 +314,29 @@ def _lazy_checkpoint(df: DataFrame) -> DataFrame:
         spark.conf.set("spark.sql.adaptive.enabled", aqe)
 
 
-def _acol(mv: Dict, col: Optional[str]) -> Optional[str]:
-    """Normalized-frame column name for an aggregate argument (qualified
-    refs mangle the dot so the projection is flat)."""
-    if col is None:
-        return None
-    return col.replace(".", "__") if mv.get("source2") else col
-
-
-
-
-
-def _is_nary(mv: Dict) -> bool:
-    return len(mv.get("sources") or []) >= 3
-
-
-def _aliases(mv: Dict) -> List[str]:
-    return [s["alias"] for s in mv["sources"]]
+def _flat_name(mv: Dict, alias: Optional[str], col: str) -> str:
+    """Name of source ``alias``'s column ``col`` in the fold's flat
+    frames: the plain name for a single source (whose refs are
+    unqualified), ``alias__col`` once joins qualify every ref."""
+    return col if len(mv["sources"]) == 1 else f"{alias}__{col}"
 
 
 def _flat_expr(mv: Dict, expr: str) -> str:
-    """Rewrite alias-qualified refs (``a.col``) to the flat mangled
-    names (``a__col``) the n-ary fold frames carry."""
-    pat = r"\b(" + "|".join(re.escape(a) for a in _aliases(mv)) + r")\.(\w+)"
-    return re.sub(pat, r"\1__\2", expr)
+    """Rewrite alias-qualified refs (``a.col``, optionally backticked)
+    to the flat names (``a__col``) the fold frames carry; string
+    literals are masked first, so ``'c.region'`` stays a literal.  The
+    identity for a single source."""
+    if len(mv["sources"]) == 1:
+        return expr
+    masked, lits = _mask_literals(expr)
+    aliases = "|".join(re.escape(s["alias"]) for s in mv["sources"])
+    flat = re.sub(rf"`?\b({aliases})`?\.`?(\w+)`?", r"\1__\2", masked)
+    return _unmask_literals(flat, lits)
 
 
-
+def _acol(mv: Dict, col: Optional[str]) -> Optional[str]:
+    """Flat-frame column name for an aggregate argument."""
+    return None if col is None else _flat_expr(mv, col)
 
 
 # -- SQL-string plan construction (r9) ---------------------------------
@@ -350,9 +347,9 @@ def _flat_expr(mv: Dict, expr: str) -> str:
 # DataFrame template parameters — the read_changelog treatment
 # (catalog.py r8: 251 -> 22 py4j commands).  The per-column
 # select/withColumn/join chains they replace cost ~340 ms of py4j
-# round-trips per warm REFRESH (r9 profile: _delta_rows 94 cmds +
-# _normalized_source 45 + _signed_changes 73 per window); an n-ary
-# refresh (q66) runs the derivation once per source per statement.
+# round-trips per warm REFRESH (r9 profile: ~210 commands per window);
+# an n-source refresh (q66) runs the derivation once per source per
+# statement.
 # Semantics are unchanged: the SQL text is generated from the same
 # parsed view dict, and every user-derived fragment is brace-escaped
 # so spark.sql's string formatter can't misread it.
@@ -370,19 +367,17 @@ def _bt(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
 
 
-# op -> row-contribution sign (matches _signed_changes' historic rule)
+# op -> row-contribution sign
 _SIGN_CASE = "CASE WHEN op IN ('+I', '+U') THEN 1 ELSE -1 END"
 _CDC_META = ("op", "change_seq", "change_sub")
 
 
-def _norm_items_sql(mv: Dict, sign_sql: Optional[str] = None,
-                    flat: bool = False) -> str:
-    """SELECT items of the normalized shape the agg machinery consumes:
-    group output names + (mangled) agg args + optional sign — the SQL
-    text form of _project_normal/_project_normal_flat."""
-    tx = (lambda e: _flat_expr(mv, e)) if flat else (lambda e: e)
+def _norm_items_sql(mv: Dict, sign_sql: Optional[str] = None) -> str:
+    """SELECT items of the normalized shape the agg machinery consumes,
+    over a flat frame: group output names + flat agg args + optional
+    sign."""
     items = [
-        f"({_fmt_safe(tx(expr))}) AS {_bt(name)}"
+        f"({_fmt_safe(_flat_expr(mv, expr))}) AS {_bt(name)}"
         for expr, name in zip(mv["group_cols"], mv["group_names"])
     ]
     done = set()
@@ -391,24 +386,24 @@ def _norm_items_sql(mv: Dict, sign_sql: Optional[str] = None,
         if c is None or c in done:
             continue
         done.add(c)
-        items.append(f"({_fmt_safe(tx(c))}) AS {_bt(_acol(mv, c))}")
+        flat = _acol(mv, c)
+        items.append(f"({_fmt_safe(flat)}) AS {_bt(flat)}")
     if sign_sql is not None:
         items.append(f"CAST(({sign_sql}) AS INT) AS {_bt(_SIGN)}")
     return ", ".join(items)
 
 
-def _pair_on_sql(mv: Dict, pairs, flat: bool = False) -> str:
-    tx = (lambda e: _flat_expr(mv, e)) if flat else (lambda e: e)
+def _pair_on_sql(mv: Dict, pairs) -> str:
     return " AND ".join(
-        f"({_fmt_safe(tx(l))}) = ({_fmt_safe(tx(r))})" for l, r in pairs
+        f"({_fmt_safe(_flat_expr(mv, l))}) = ({_fmt_safe(_flat_expr(mv, r))})"
+        for l, r in pairs
     )
 
 
-def _where_sql(mv: Dict, flat: bool = False) -> str:
+def _where_sql(mv: Dict) -> str:
     if not mv["where"]:
         return ""
-    w = _flat_expr(mv, mv["where"]) if flat else mv["where"]
-    return f" WHERE {_fmt_safe(w)}"
+    return f" WHERE {_fmt_safe(_flat_expr(mv, mv['where']))}"
 
 
 class _SqlPlan:
@@ -428,62 +423,41 @@ class _SqlPlan:
         return self.spark.sql(q, **self.params)
 
 
-def _flat_items_sql(cols: List[str], alias: str) -> str:
-    return ", ".join(f"{_bt(c)} AS {_bt(alias + '__' + c)}" for c in cols)
+def _flat_items_sql(mv: Dict, cols: List[str], alias: Optional[str]) -> str:
+    return ", ".join(
+        f"{_bt(c)} AS {_bt(_flat_name(mv, alias, c))}" for c in cols
+    )
 
 
-def _nary_snap_from(catalog, mv: Dict, his: List[int], plan: _SqlPlan) -> str:
-    """FROM-clause text of the fold-join of all sources pinned at their
-    anchors, as flat (alias__col) subselects."""
-    parts = None
-    for i, (s, hi) in enumerate(zip(mv["sources"], his)):
-        snap = catalog.read(s["name"], as_of_seq=hi)
-        cols = catalog.get_table(s["name"]).spark_schema().fieldNames()
-        t = f"(SELECT {_flat_items_sql(cols, s['alias'])} FROM {plan.ref(snap)})"
-        if parts is None:
-            parts = t
-        else:
-            parts += f" JOIN {t} ON {_pair_on_sql(mv, mv['joins'][i - 1], flat=True)}"
-    return parts
+def _snap_sql(catalog, mv: Dict, i: int, hi: int, plan: _SqlPlan) -> str:
+    """Flat subselect of source ``i`` pinned at seq ``hi`` — the one
+    snapshot builder behind the full build, the bounded rescan and the
+    fold's C1 / J1 sides."""
+    s = mv["sources"][i]
+    snap = catalog.read(s["name"], as_of_seq=hi)
+    cols = catalog.get_table(s["name"]).spark_schema().fieldNames()
+    items = _flat_items_sql(mv, cols, s["alias"])
+    return f"(SELECT {items} FROM {plan.ref(snap)})"
 
 
-def _normalized_source(catalog, mv: Dict, anchors: Dict) -> DataFrame:
-    """The view's input relation (joined for join views), pinned at the
-    given per-source seq anchors, WHERE applied, normalized — one
-    generated SQL statement."""
+def _join_chain(mv: Dict, parts: List[str]) -> str:
+    """``parts[0] JOIN parts[1] ON <joins[0]> JOIN ...``: the flat
+    frames of the first len(parts) sources joined in FROM order."""
+    frm = parts[0]
+    for i, part in enumerate(parts[1:], 1):
+        frm += f" JOIN {part} ON {_pair_on_sql(mv, mv['joins'][i - 1])}"
+    return frm
+
+
+def _normalized_source(catalog, mv: Dict, his: List[int]) -> DataFrame:
+    """The view's input relation (every source joined), pinned at the
+    per-source seq anchors, WHERE applied, normalized — one generated
+    SQL statement."""
     plan = _SqlPlan(catalog.spark)
-    if _is_nary(mv):
-        frm = _nary_snap_from(catalog, mv, anchors["his"], plan)
-        return plan.sql(
-            f"SELECT {_norm_items_sql(mv, flat=True)} FROM {frm}"
-            f"{_where_sql(mv, flat=True)}"
-        )
-    if mv.get("source2") is None:
-        src = catalog.read(mv["source"], as_of_seq=anchors["hi"])
-        return plan.sql(
-            f"SELECT {_norm_items_sql(mv)} FROM {plan.ref(src)}"
-            f"{_where_sql(mv)}"
-        )
-    a1 = catalog.read(mv["source"], as_of_seq=anchors["hi"])
-    b1 = catalog.read(mv["source2"], as_of_seq=anchors["hi2"])
-    on = _pair_on_sql(mv, mv["join_on"])
-    return plan.sql(
-        f"SELECT {_norm_items_sql(mv)} FROM {plan.ref(a1)} {_bt(mv['alias'])}"
-        f" JOIN {plan.ref(b1)} {_bt(mv['alias2'])} ON {on}{_where_sql(mv)}"
+    frm = _join_chain(
+        mv, [_snap_sql(catalog, mv, i, hi, plan) for i, hi in enumerate(his)]
     )
-
-
-def _signed_changes(catalog, mv: Dict, source: str, lo: int, hi: int,
-                    sign_name: str = _SIGN) -> DataFrame:
-    """Bounded CDC window of one source as sign-weighted plain rows
-    (one generated SQL statement over the changelog window)."""
-    ch = catalog.read_changes(source, from_seq=lo, to_seq=hi)
-    cols = [c for c in ch.columns if c not in _CDC_META]
-    items = ", ".join(_bt(c) for c in cols)
-    return catalog.spark.sql(
-        f"SELECT {items}, {_SIGN_CASE} AS {_bt(sign_name)} FROM {{ch}}",
-        ch=ch,
-    )
+    return plan.sql(f"SELECT {_norm_items_sql(mv)} FROM {frm}{_where_sql(mv)}")
 
 
 # windows below this many summed parquet bytes inline their delta
@@ -518,96 +492,98 @@ def _window_bytes(catalog, name: str, lo: int, hi: int) -> float:
     return total
 
 
-def _delta_rows_nary(catalog, mv: Dict, anchors: Dict) -> DataFrame:
-    """n-ary join delta by FOLDING the two-relation rule: with
+def _delta_rows(catalog, mv: Dict, his: List[int],
+                los: List[int]) -> DataFrame:
+    """Sign-weighted normalized rows whose aggregation is the view's
+    exact delta over the refresh windows (lo, hi] — at least one source
+    has a non-empty window.  The fold of the two-relation rule: with
     J = A1⋈...⋈Ak the accumulated join and δJ its accumulated delta,
     adding source C gives
 
         δ(J ⋈ C) = δJ ⋈ C1  +  J1 ⋈ δC  −  δJ ⋈ δC
 
-    — the same three terms as the pairwise rule, applied k−1 times
-    (δ(ABC) telescopes out of δ(AB)).  Each fold step joins a
-    changes-sized delta against a pinned snapshot (AQE broadcasts the
-    delta side) and checkpoints the accumulated delta once, so refresh
-    cost is O(changes × join fan-out × n_sources), never O(Σ|sources|).
-    Signs multiply through each join; the both-delta term is negated
-    exactly as in the 2-ary rule.
+    — applied k−1 times from δA = A's CDC window (δ(ABC) telescopes out
+    of δ(AB)); a single source is its window alone.  Each fold step
+    joins a changes-sized delta against a pinned snapshot (AQE
+    broadcasts the delta side), so refresh cost is
+    O(changes × join fan-out × n_sources), never O(Σ|sources|).  Signs
+    multiply through each join; the both-delta term is negated.  The
+    WHERE clause applies to the folded rows.
 
     The whole fold is composed as SQL text (checkpoint boundaries
     excepted — a checkpointed delta re-enters as a template param), so
     a refresh ships ONE statement per checkpoint segment instead of
     ~100 py4j plan-construction round-trips."""
     spark = catalog.spark
-    his, los = anchors["his"], anchors["los"]
     srcs = mv["sources"]
     n_src = len(srcs)
     has_delta = [h > l for h, l in zip(his, los)]
     plan = _SqlPlan(spark)
     sc = "__mv_sign_c__"
-    # r10: when EVERY leaf CDC window is provably SMALL (summed parquet
-    # bytes of the window's files, known from the manifest — a
-    # metadata-only check, no job), multi-consumer subtrees inline as
-    # text instead of checkpointing: re-scanning a statement-sized
-    # window twice inside the ONE final job costs less than each lazy
-    # checkpoint's ~130 ms of toRdd planning.  Large windows keep the
-    # r8 checkpoint policy — recompute there would double a real scan.
-    all_windows_small = all(
-        not has_delta[i]
-        or _window_bytes(catalog, s["name"], los[i], his[i])
-        <= _INLINE_WINDOW_BYTES
-        for i, s in enumerate(srcs)
-    )
+    snaps: Dict[int, str] = {}
+    windows_small = None
+
+    def snap(i: int) -> str:
+        # read lazily: a source whose snapshot no term joins is never read
+        if i not in snaps:
+            snaps[i] = _snap_sql(catalog, mv, i, his[i], plan)
+        return snaps[i]
 
     def flat_cols(i: int) -> List[str]:
         al = srcs[i]["alias"]
         return [
-            f"{al}__{c}"
+            _flat_name(mv, al, c)
             for c in catalog.get_table(srcs[i]["name"])
             .spark_schema()
             .fieldNames()
         ]
 
-    def snap_text(i: int) -> str:
-        snap = catalog.read(srcs[i]["name"], as_of_seq=his[i])
-        cols = catalog.get_table(srcs[i]["name"]).spark_schema().fieldNames()
-        return (
-            f"(SELECT {_flat_items_sql(cols, srcs[i]['alias'])}"
-            f" FROM {plan.ref(snap)})"
-        )
-
     def delta_text(i: int, sign_name: str) -> Optional[str]:
-        if his[i] <= los[i]:
+        if not has_delta[i]:
             return None
         src = srcs[i]
         ch = catalog.read_changes(src["name"], from_seq=los[i], to_seq=his[i])
         cols = [c for c in ch.columns if c not in _CDC_META]
         return (
-            f"(SELECT {_flat_items_sql(cols, src['alias'])},"
+            f"(SELECT {_flat_items_sql(mv, cols, src['alias'])},"
             f" {_SIGN_CASE} AS {_bt(sign_name)} FROM {plan.ref(ch)})"
         )
 
     def materialize(text: str) -> str:
         # Checkpoint policy (r8): a lazy checkpoint costs ~130 ms of
         # toRdd planning even with AQE scoped off — a delta subtree
-        # only deserves one when it feeds MORE than one join term;
-        # single-consumer subtrees inline into the next statement.
-        # r10: small-window refreshes inline EVERY subtree (see
-        # all_windows_small above).
-        if all_windows_small:
+        # only deserves one when it feeds TWO join terms (the only
+        # caller); single-consumer subtrees inline into the next
+        # statement.  r10: when EVERY leaf CDC window is provably SMALL
+        # (summed parquet bytes of the window's files, known from the
+        # manifest — a metadata-only check, no job), two-consumer
+        # subtrees inline too: re-scanning a statement-sized window
+        # twice inside the ONE final job costs less than a checkpoint.
+        # Large windows keep the checkpoint — recompute there would
+        # double a real scan.  The check runs on the first two-consumer
+        # subtree only, so a refresh without one reads no manifest.
+        nonlocal windows_small
+        if windows_small is None:
+            windows_small = all(
+                not has_delta[i]
+                or _window_bytes(catalog, s["name"], los[i], his[i])
+                <= _INLINE_WINDOW_BYTES
+                for i, s in enumerate(srcs)
+            )
+        if windows_small:
             return text
-        df = _lazy_checkpoint(spark.sql(f"SELECT * FROM {text}", **plan.params))
-        return plan.ref(df)
+        return plan.ref(
+            _lazy_checkpoint(spark.sql(f"SELECT * FROM {text}", **plan.params))
+        )
 
     cum_cols = flat_cols(0)
-    j1_from = snap_text(0)
     dj = delta_text(0, _SIGN)
     # d0 feeds two fold-1 terms (δJ⋈C1 + δJ⋈δC) only if source 1 also
     # has a delta; otherwise it flows through exactly one join per fold
     if dj is not None and n_src > 1 and has_delta[1]:
         dj = materialize(dj)
     for i in range(1, n_src):
-        cond = _pair_on_sql(mv, mv["joins"][i - 1], flat=True)
-        c1 = snap_text(i)
+        cond = _pair_on_sql(mv, mv["joins"][i - 1])
         dc = delta_text(i, sc)
         if dc is not None and dj is not None:
             # δC feeds J1⋈δC AND δJ⋈δC — two consumers
@@ -617,127 +593,32 @@ def _delta_rows_nary(catalog, mv: Dict, anchors: Dict) -> DataFrame:
         terms = []
         if dj is not None:
             terms.append(
-                f"SELECT {sel}, {_bt(_SIGN)} FROM {dj} JOIN {c1} ON {cond}"
+                f"SELECT {sel}, {_bt(_SIGN)}"
+                f" FROM {dj} JOIN {snap(i)} ON {cond}"
             )
         if dc is not None:
+            j1 = _join_chain(mv, [snap(k) for k in range(i)])
             terms.append(
                 f"SELECT {sel}, {_bt(sc)} AS {_bt(_SIGN)}"
-                f" FROM {j1_from} JOIN {dc} ON {cond}"
+                f" FROM {j1} JOIN {dc} ON {cond}"
             )
         if dj is not None and dc is not None:
             terms.append(
                 f"SELECT {sel}, -({_bt(_SIGN)} * {_bt(sc)}) AS {_bt(_SIGN)}"
                 f" FROM {dj} JOIN {dc} ON {cond}"
             )
-        dj = (
-            "(" + " UNION ALL ".join(f"({t})" for t in terms) + ")"
-            if terms
-            else None
-        )
+        if terms:
+            dj = "(" + " UNION ALL ".join(f"({t})" for t in terms) + ")"
         # the folded delta feeds two terms of the NEXT step only if that
         # source has its own delta; the LAST fold's output always has a
         # single consumer (the delta aggregation under merged's
         # checkpoint) and never checkpoints
         if dj is not None and i + 1 < n_src and has_delta[i + 1]:
             dj = materialize(dj)
-        j1_from = f"{j1_from} JOIN {c1} ON {cond}"
         cum_cols = step_cols
-    if dj is None:  # no source had a window (caller guards, but be safe)
-        return plan.sql(
-            f"SELECT {_norm_items_sql(mv, '1', flat=True)}"
-            f" FROM {j1_from} LIMIT 0"
-        )
     return plan.sql(
-        f"SELECT {_norm_items_sql(mv, _bt(_SIGN), flat=True)} FROM {dj}"
-        f"{_where_sql(mv, flat=True)}"
+        f"SELECT {_norm_items_sql(mv, _bt(_SIGN))} FROM {dj}{_where_sql(mv)}"
     )
-
-
-def _delta_rows(catalog, mv: Dict, anchors: Dict) -> DataFrame:
-    """Sign-weighted normalized rows whose aggregation is the view's
-    exact delta over the refresh window — one generated SQL statement
-    per checkpoint segment (see _delta_rows_nary).
-
-    Single source: the CDC window itself.  Join views: the three-term
-    join delta  δA ⋈ B1  +  A1 ⋈ δB  −  δA ⋈ δB  with per-pair sign
-    products (see module docstring); three or more sources fold the
-    same rule pairwise (see _delta_rows_nary)."""
-    plan = _SqlPlan(catalog.spark)
-    if _is_nary(mv):
-        return _delta_rows_nary(catalog, mv, anchors)
-    if mv.get("source2") is None:
-        ch = catalog.read_changes(
-            mv["source"], from_seq=anchors["lo"], to_seq=anchors["hi"]
-        )
-        # WHERE evaluates over the raw change images (before the
-        # normalized projection), exactly as the filtered-DataFrame
-        # form did
-        return plan.sql(
-            f"SELECT {_norm_items_sql(mv, _SIGN_CASE)}"
-            f" FROM {plan.ref(ch)}{_where_sql(mv)}"
-        )
-
-    sa, sb = "__mv_sign_a__", "__mv_sign_b__"
-    a, b = _bt(mv["alias"]), _bt(mv["alias2"])
-    on = _pair_on_sql(mv, mv["join_on"])
-    where = _where_sql(mv)
-    d_a = d_b = None
-    # a delta checkpoints ONLY when it feeds two terms (its own snapshot
-    # join AND the both-delta correction) — i.e. when the OTHER source
-    # also changed; single-consumer deltas inline into the merged plan
-    # (r8 checkpoint policy, see _delta_rows_nary)
-    both_changed = (
-        anchors["hi"] > anchors["lo"] and anchors["hi2"] > anchors["lo2"]
-    )
-    # r10 (same policy as the n-ary fold): a provably SMALL window —
-    # manifest-known parquet bytes — inlines its delta into both terms
-    # instead of checkpointing; re-scanning a statement-sized window
-    # twice in the one final job beats the ~130 ms toRdd planning
-    small_windows = not both_changed or (
-        _window_bytes(catalog, mv["source"], anchors["lo"], anchors["hi"])
-        <= _INLINE_WINDOW_BYTES
-        and _window_bytes(
-            catalog, mv["source2"], anchors["lo2"], anchors["hi2"]
-        )
-        <= _INLINE_WINDOW_BYTES
-    )
-    if anchors["hi"] > anchors["lo"]:
-        d_a = _signed_changes(
-            catalog, mv, mv["source"], anchors["lo"], anchors["hi"],
-            sign_name=sa,
-        )
-        if both_changed and not small_windows:
-            d_a = _lazy_checkpoint(d_a)
-    if anchors["hi2"] > anchors["lo2"]:
-        d_b = _signed_changes(
-            catalog, mv, mv["source2"], anchors["lo2"], anchors["hi2"],
-            sign_name=sb,
-        )
-        if both_changed and not small_windows:
-            d_b = _lazy_checkpoint(d_b)
-    terms = []
-    if d_a is not None:
-        b1 = catalog.read(mv["source2"], as_of_seq=anchors["hi2"])
-        terms.append(
-            f"SELECT {_norm_items_sql(mv, _bt(sa))} FROM {plan.ref(d_a)} {a}"
-            f" JOIN {plan.ref(b1)} {b} ON {on}{where}"
-        )
-    if d_b is not None:
-        a1 = catalog.read(mv["source"], as_of_seq=anchors["hi"])
-        terms.append(
-            f"SELECT {_norm_items_sql(mv, _bt(sb))} FROM {plan.ref(a1)} {a}"
-            f" JOIN {plan.ref(d_b)} {b} ON {on}{where}"
-        )
-    if d_a is not None and d_b is not None:
-        # the both-delta pairs were counted by the first two terms
-        # twice: subtract them (sign products negated)
-        terms.append(
-            f"SELECT {_norm_items_sql(mv, f'-({_bt(sa)} * {_bt(sb)})')}"
-            f" FROM {plan.ref(d_a)} {a} JOIN {plan.ref(d_b)} {b}"
-            f" ON {on}{where}"
-        )
-    return plan.sql(" UNION ALL ".join(f"({t})" for t in terms))
-
 
 
 def _with_kahan_state(state: DataFrame, mv: Dict) -> DataFrame:
@@ -786,7 +667,7 @@ def _physical_aggs(mv: Dict) -> List:
 
 def _user_projection(mv: Dict) -> List:
     """User-facing columns derived from the physical ones."""
-    out = [F.col(c) for c in mv.get("group_names", mv["group_cols"])]
+    out = [F.col(c) for c in mv["group_names"]]
     for a in mv["aggs"]:
         alias = a["alias"]
         if a["fn"] in ("count", "min", "max"):
@@ -815,18 +696,26 @@ def _load_mv(catalog, name: str) -> Dict:
             mv = json.load(fh)
     except OSError:
         raise ValueError(f"{name} is not a materialized view") from None
-    # pre-join-view / pre-Kahan / pre-n-ary specs lack these keys
-    mv.setdefault("source2", None)
+    # pre-join-view / pre-Kahan specs lack these keys
     mv.setdefault("group_names", mv["group_cols"])
     mv.setdefault("float_sums", [])
+    # pre-n-source specs name one or two sources through flat keys: the
+    # one place they are read, translated and dropped
     if "sources" not in mv:
         mv["sources"] = [{"name": mv["source"], "alias": mv.get("alias")}]
         mv["joins"] = []
-        if mv["source2"]:
+        if mv.get("source2"):
             mv["sources"].append(
                 {"name": mv["source2"], "alias": mv.get("alias2")}
             )
             mv["joins"].append(mv.get("join_on") or [])
+    if "last_seqs" not in mv:
+        mv["last_seqs"] = [mv.get("last_seq") or 0]
+        if mv.get("source2"):
+            mv["last_seqs"].append(mv.get("last_seq2") or 0)
+    for key in ("source", "alias", "source2", "alias2", "join_on",
+                "last_seq", "last_seq2"):
+        mv.pop(key, None)
     return mv
 
 
@@ -857,30 +746,25 @@ def _register_user_view(catalog, name: str, mv: Dict) -> None:
     catalog._stale_views.add(spec.qualified_name)
 
 
-def _anchors_now(catalog, mv: Dict) -> Dict:
+def _anchors_now(catalog, mv: Dict) -> List[int]:
     """Per-source refresh anchors = the highest COMMITTED seq visible
     from ANY session (r6: the raw in-memory counter is empty in a fresh
     session, which silently no-opped cross-session refreshes; inflight
     reservations are excluded so an anchor can never skip a statement
     whose data hasn't landed yet)."""
-
-    def _hi(name: str) -> int:
-        return catalog._committed_seq(catalog.get_table(name))
-
-    out = {"hi": _hi(mv["source"]), "hi2": 0}
-    if mv.get("source2"):
-        out["hi2"] = _hi(mv["source2"])
-    out["his"] = [_hi(s["name"]) for s in mv.get("sources") or []]
-    return out
+    return [
+        catalog._committed_seq(catalog.get_table(s["name"]))
+        for s in mv["sources"]
+    ]
 
 
-def _full_state(catalog, mv: Dict, anchors: Dict) -> DataFrame:
-    rows = _normalized_source(catalog, mv, anchors)
+def _full_state(catalog, mv: Dict, his: List[int]) -> DataFrame:
+    rows = _normalized_source(catalog, mv, his)
     state = rows.groupBy(*mv["group_names"]).agg(*_physical_aggs(mv))
     return _with_kahan_state(state, mv)
 
 
-def _pinned_state(catalog, mv: Dict, anchors: Dict):
+def _pinned_state(catalog, mv: Dict, his: List[int]):
     """Full build state, materialized exactly once and pinned: returns
     (DataFrame, collected_rows_or_None).  A state within the catalog's
     driver-local row cap (_collect_capped, shared with the refresh
@@ -889,7 +773,7 @@ def _pinned_state(catalog, mv: Dict, anchors: Dict):
     plain python; larger states eager-checkpoint."""
     from fluss_datafusion_spark.catalog.catalog import _collect_capped
 
-    state_df = _full_state(catalog, mv, anchors)
+    state_df = _full_state(catalog, mv, his)
     rows = _collect_capped(state_df)
     if rows is not None:
         local = catalog.spark.createDataFrame(
@@ -910,7 +794,7 @@ def create_matview(catalog, name: str, select_sql: str) -> int:
 
 def _create_matview_impl(catalog, name: str, select_sql: str) -> int:
     mv = parse_matview_select(select_sql)
-    is_join = mv["source2"] is not None
+    is_join = len(mv["sources"]) > 1
     col_sets = {}
     for s in mv["sources"]:
         src_spec = catalog.get_table(s["name"])
@@ -929,26 +813,24 @@ def _create_matview_impl(catalog, name: str, select_sql: str) -> int:
     ]
     missing = []
     for ref in referenced:
-        if not is_join:
-            if ref not in col_sets[mv["alias"]]:
-                missing.append(ref)
-        else:
-            al, col = ref.split(".")
-            if col not in col_sets[al]:
-                missing.append(ref)
+        al, col = (
+            ref.split(".") if is_join else (mv["sources"][0]["alias"], ref)
+        )
+        if col not in col_sets[al]:
+            missing.append(ref)
     if missing:
         raise ValueError(f"unknown source columns: {sorted(set(missing))}")
 
     # checkpoint BEFORE building, and build AT the checkpoint (as-of
     # reads) so a concurrent write between checkpoint and build is
     # applied exactly once — by the next refresh
-    anchors = _anchors_now(catalog, mv)
+    his = _anchors_now(catalog, mv)
     # materialize once: the null-group check and the insert below would
     # otherwise each re-run the full build aggregation.  Small builds
     # (≤10k groups) pin as driver-local rows — the refresh path's r9
     # trick — which also folds the null-group probe job into plain
     # python; larger builds keep the eager checkpoint.
-    state, local_rows = _pinned_state(catalog, mv, anchors)
+    state, local_rows = _pinned_state(catalog, mv, his)
     # float sums get a Kahan compensation column (exact types don't)
     double_fields = {
         f.name
@@ -1000,10 +882,7 @@ def _create_matview_impl(catalog, name: str, select_sql: str) -> int:
         if_not_exists=False,
     )
     n = catalog.insert(name, state)
-    mv["last_seq"] = anchors["hi"]
-    if mv["source2"]:
-        mv["last_seq2"] = anchors["hi2"]
-    mv["last_seqs"] = list(anchors["his"])
+    mv["last_seqs"] = his
     _save_mv(catalog, name, mv)
     _register_user_view(catalog, name, mv)
     return n
@@ -1052,6 +931,27 @@ def _count_delta_groups(local_rows) -> Tuple[int, int, int]:
     return n_rescan, n_up, n_dead
 
 
+def _reserve_refresh_seq(catalog, spec, mv: Dict, view_base: int) -> int:
+    """CONCURRENTLY guard of a refresh write: reserve its seq against
+    the view-table base captured before the checkpoint load, then
+    re-validate the checkpoint itself — a concurrent refresh either
+    conflicts the reservation or shows up as moved ``last_seqs``; both
+    release the seq and abort BEFORE any append (the retry loop in
+    refresh_matview re-runs against the winner's state)."""
+    from fluss_datafusion_spark.catalog.catalog import ConcurrentWriteConflict
+
+    seq_ref = catalog._reserve_seqs(spec, 1, expect_base=view_base)[0]
+    fresh = _load_mv(catalog, spec.qualified_name)
+    if fresh["last_seqs"] != mv["last_seqs"]:
+        catalog._release_seqs(spec, [seq_ref])
+        raise ConcurrentWriteConflict(
+            f"materialized view {spec.qualified_name} was refreshed "
+            "concurrently; nothing was written — re-running against the "
+            "new checkpoint"
+        )
+    return seq_ref
+
+
 def _try_local_refresh_write(catalog, spec, mv, local_rows, view_base):
     """Driver-local refresh write (see the call site): derive the fused
     upsert/tombstone rows from the collected merged delta with the SAME
@@ -1062,10 +962,7 @@ def _try_local_refresh_write(catalog, spec, mv, local_rows, view_base):
     refresh result dict, or None when any group needs a bounded rescan
     (the Spark path handles the rescan union) or a column type is
     outside the local writer's support."""
-    from fluss_datafusion_spark.catalog.catalog import (
-        ConcurrentWriteConflict,
-        _local_write_ok,
-    )
+    from fluss_datafusion_spark.catalog.catalog import _local_write_ok
 
     if not _local_write_ok(spec):
         return None
@@ -1085,17 +982,7 @@ def _try_local_refresh_write(catalog, spec, mv, local_rows, view_base):
                 r[f.name] if (f.name in pk or alive) else None
             )
         flags.append(not alive)
-    seq_ref = catalog._reserve_seqs(spec, 1, expect_base=view_base)[0]
-    fresh = _load_mv(catalog, spec.qualified_name)
-    if fresh.get("last_seqs", fresh.get("last_seq")) != mv.get(
-        "last_seqs", mv.get("last_seq")
-    ):
-        catalog._release_seqs(spec, [seq_ref])
-        raise ConcurrentWriteConflict(
-            f"materialized view {spec.qualified_name} was refreshed "
-            "concurrently; nothing was written — re-running against the "
-            "new checkpoint"
-        )
+    seq_ref = _reserve_refresh_seq(catalog, spec, mv, view_base)
     catalog._local_write_rows(
         spec,
         cols,
@@ -1115,32 +1002,23 @@ def _refresh_matview_impl(catalog, name: str) -> Dict[str, int]:
     # table past our expectation and the reservation below conflicts
     view_base = catalog._latest_seq(spec)
     mv = _load_mv(catalog, name)
-    anchors = _anchors_now(catalog, mv)
-    anchors["lo"] = mv["last_seq"]
-    anchors["lo2"] = mv.get("last_seq2", 0)
-    anchors["los"] = mv.get(
-        "last_seqs",
-        [anchors["lo"]] + ([anchors["lo2"]] if mv.get("source2") else []),
-    )
-    if all(hi <= lo for hi, lo in zip(anchors["his"], anchors["los"])):
+    his = _anchors_now(catalog, mv)
+    if all(hi <= lo for hi, lo in zip(his, mv["last_seqs"])):
         _register_user_view(catalog, name, mv)
         return {"upserted": 0, "deleted": 0, "full_rebuild": 0}
 
     def _checkpoint():
-        mv["last_seq"] = anchors["hi"]
-        if mv.get("source2"):
-            mv["last_seq2"] = anchors["hi2"]
-        mv["last_seqs"] = list(anchors["his"])
+        mv["last_seqs"] = his
         _save_mv(catalog, name, mv)
         _register_user_view(catalog, name, mv)
 
     try:
-        rows = _delta_rows(catalog, mv, anchors)
+        rows = _delta_rows(catalog, mv, his, mv["last_seqs"])
     except ValueError:
         # a source compacted past our checkpoint: the exact change
         # window is gone — rebuild from the snapshot (the standard
         # CDC-consumer fallback), then checkpoint at the anchors
-        state, _rows = _pinned_state(catalog, mv, anchors)
+        state, _rows = _pinned_state(catalog, mv, his)
         catalog.truncate_table(name)
         n = catalog.insert(name, state)
         _checkpoint()
@@ -1322,32 +1200,13 @@ def _refresh_matview_impl(catalog, name: str) -> Dict[str, int]:
     rescanned = None
     if rescan_flags and n_rescan > 0:
         rescanned = _with_kahan_state(
-            _normalized_source(catalog, mv, anchors)
+            _normalized_source(catalog, mv, his)
             .join(rescan_keys, mv["group_names"], "left_semi")
             .groupBy(*mv["group_names"])
             .agg(*_physical_aggs(mv)),
             mv,  # a rescan recomputes from scratch: compensation resets
         ).select(*schema_order)
-    # CONCURRENTLY guard: reserve the refresh's seq against the base
-    # captured before the checkpoint load, then re-validate the
-    # checkpoint itself — a concurrent refresh either conflicts the
-    # reservation or shows up as a moved checkpoint; both abort cleanly
-    # BEFORE any append (the retry loop in refresh_matview re-runs
-    # against the winner's state)
-    from fluss_datafusion_spark.catalog.catalog import (
-        ConcurrentWriteConflict,
-    )
-
-    seq_ref = catalog._reserve_seqs(spec, 1, expect_base=view_base)[0]
-    fresh = _load_mv(catalog, name)
-    if fresh.get("last_seqs", fresh.get("last_seq")) != mv.get(
-        "last_seqs", mv.get("last_seq")
-    ):
-        catalog._release_seqs(spec, [seq_ref])
-        raise ConcurrentWriteConflict(
-            f"materialized view {name} was refreshed concurrently; "
-            "nothing was written — re-running against the new checkpoint"
-        )
+    seq_ref = _reserve_refresh_seq(catalog, spec, mv, view_base)
     # ONE append under ONE seq (r7 statement batching), ONE pass over
     # the checkpoint (r8): upserts and tombstones come out of a single
     # filter+select — a per-row CASE nulls the non-key payload of dead

@@ -46,7 +46,7 @@ def _got(e, name="mv"):
 
 def test_parse_matview_select():
     mv = parse_matview_select(MV_SELECT)
-    assert mv["source"] == "src" and mv["group_cols"] == ["g"]
+    assert mv["sources"][0]["name"] == "src" and mv["group_cols"] == ["g"]
     assert [a["fn"] for a in mv["aggs"]] == ["count", "count", "sum", "avg"]
     assert mv["aggs"][0]["col"] is None and mv["aggs"][1]["col"] == "x"
     assert mv["where"] is None

@@ -58,9 +58,11 @@ def _got(e, name="mv"):
 
 def test_parse_join_select():
     mv = parse_matview_select(JOIN_SELECT)
-    assert mv["source"] == "fact" and mv["source2"] == "dim"
-    assert mv["alias"] == "f" and mv["alias2"] == "d"
-    assert mv["join_on"] == [["f.dk", "d.k"]]
+    assert mv["sources"][0]["name"] == "fact"
+    assert mv["sources"][1]["name"] == "dim"
+    assert mv["sources"][0]["alias"] == "f"
+    assert mv["sources"][1]["alias"] == "d"
+    assert mv["joins"][0] == [["f.dk", "d.k"]]
     assert mv["group_cols"] == ["d.region"]
     assert mv["group_names"] == ["region"]
     assert mv["aggs"][3]["col"] == "f.amt"
@@ -69,8 +71,9 @@ def test_parse_join_select():
         "SELECT dim.region, count(*) AS n FROM fact JOIN dim"
         " ON dim.k = fact.dk GROUP BY dim.region"
     )
-    assert mv["alias"] == "fact" and mv["alias2"] == "dim"
-    assert mv["join_on"] == [["fact.dk", "dim.k"]]
+    assert mv["sources"][0]["alias"] == "fact"
+    assert mv["sources"][1]["alias"] == "dim"
+    assert mv["joins"][0] == [["fact.dk", "dim.k"]]
 
 
 def test_join_matview_initial_build(spark, tmp_path):

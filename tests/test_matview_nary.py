@@ -64,8 +64,8 @@ def test_parse_three_table_join():
         [["f.cust_id", "c.cust_id"]],
         [["f.prod_id", "p.prod_id"]],
     ]
-    # legacy 2-source keys stay populated for persisted specs
-    assert mv["source"] == "fact" and mv["source2"] == "cust"
+    assert mv["sources"][0]["name"] == "fact"
+    assert mv["sources"][1]["name"] == "cust"
     # a later join may reference ANY earlier alias
     mv = parse_matview_select(
         "SELECT a.g, sum(cc.x) AS s FROM t a JOIN u b ON a.k = b.k"

@@ -91,34 +91,22 @@ wrap_method(DataFrameWriter, "parquet", "JOB:write.parquet")
 # matview phases
 for fn in [
     "_delta_rows",
-    "_signed_changes",
+    "_snap_sql",
     "_normalized_source",
+    "_window_bytes",
     "_load_mv",
     "_save_mv",
     "_register_user_view",
     "_anchors_now",
+    "_reserve_refresh_seq",
 ]:
     wrap_mod(mvmod, fn)
 
 # catalog phases
 for fn in ["read_changes", "read_changelog", "read", "_append_log",
            "_merge_log", "_log_df", "_reserve_seqs", "_record_commit",
-           "_harvest_file_stats"]:
-    if hasattr(catmod.FlussCatalog, fn):
-        orig = getattr(catmod.FlussCatalog, fn)
-
-        def make(fn, orig):
-            def f(*a, **k):
-                t0, c0 = time.perf_counter(), _cmd_count[0]
-                try:
-                    return orig(*a, **k)
-                finally:
-                    PROF[fn] = PROF.get(fn, 0.0) + time.perf_counter() - t0
-                    NCMD[fn] = NCMD.get(fn, 0) + _cmd_count[0] - c0
-
-            return f
-
-        setattr(catmod.FlussCatalog, fn, make(fn, orig))
+           "_local_write_rows"]:
+    wrap_method(catmod.FlussCatalog, fn, fn)
 
 root = os.path.join(tempfile.gettempdir(), "spark_graft_profile_ph")
 shutil.rmtree(root, ignore_errors=True)
