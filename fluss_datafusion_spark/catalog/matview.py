@@ -551,17 +551,17 @@ def _delta_rows(catalog, mv: Dict, his: List[int],
 
     def materialize(text: str) -> str:
         # Checkpoint policy (r8): a lazy checkpoint costs ~130 ms of
-        # toRdd planning even with AQE scoped off — a delta subtree
-        # only deserves one when it feeds TWO join terms (the only
-        # caller); single-consumer subtrees inline into the next
-        # statement.  r10: when EVERY leaf CDC window is provably SMALL
-        # (summed parquet bytes of the window's files, known from the
-        # manifest — a metadata-only check, no job), two-consumer
-        # subtrees inline too: re-scanning a statement-sized window
-        # twice inside the ONE final job costs less than a checkpoint.
-        # Large windows keep the checkpoint — recompute there would
-        # double a real scan.  The check runs on the first two-consumer
-        # subtree only, so a refresh without one reads no manifest.
+        # toRdd planning even with AQE scoped off, so only a delta
+        # subtree that feeds TWO join terms comes here; single-consumer
+        # subtrees inline into the next statement.  r10: when EVERY
+        # leaf CDC window is provably SMALL (summed parquet bytes of
+        # the window's files, known from the manifest — a metadata-only
+        # check, no job), two-consumer subtrees inline too: re-scanning
+        # a statement-sized window twice inside the ONE final job costs
+        # less than a checkpoint.  Large windows keep the checkpoint —
+        # recompute there would double a real scan.  The check runs on
+        # the first two-consumer subtree only, so a refresh without one
+        # reads no manifest.
         nonlocal windows_small
         if windows_small is None:
             windows_small = all(

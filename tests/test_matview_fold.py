@@ -74,6 +74,11 @@ def test_flat_expr_leaves_literals_alone():
     assert matview._flat_expr(mv, mv["where"]) == (
         "c__region = 'c.region'"
     )
+    # backticked refs flatten too (they bound as written before the fold)
+    expr = "`c`.`region` <> 'p.cat' OR p.cat = f.x"
+    assert matview._flat_expr(mv, expr) == (
+        "c__region <> 'p.cat' OR p__cat = f__x"
+    )
     single = matview.parse_matview_select(
         "SELECT g, count(*) AS n FROM src WHERE g <> 'src.g' GROUP BY g"
     )
