@@ -31,8 +31,10 @@ Gupta & Mumick, "Maintenance of Materialized Views", 1995).  GROUP BY
 columns become the view's PRIMARY KEY, so they must be non-null
 in every source row the WHERE clause admits (enforced at build; add a
 NOT NULL conjunct to the WHERE to carve out null groups).  Join views
-reference every column alias-qualified (``a.col``), the WHERE clause
-included; a single-source view references plain column names.
+reference GROUP BY, aggregate and ON columns alias-qualified
+(``a.col``); their WHERE clause may also name a column of exactly one
+source unqualified.  A single-source view references plain column
+names.
 
 ONE delta rule maintains every shape: the incremental join delta (the
 DBSP / differential-dataflow derivation; Blakeley, Larson & Tompa 1986
@@ -314,29 +316,79 @@ def _lazy_checkpoint(df: DataFrame) -> DataFrame:
         spark.conf.set("spark.sql.adaptive.enabled", aqe)
 
 
+def _qualified(mv: Dict) -> bool:
+    """Whether the fold's flat frames qualify column names by source:
+    a single source keeps plain names (its refs are unqualified), join
+    views carry ``alias__col``."""
+    return len(mv["sources"]) > 1
+
+
 def _flat_name(mv: Dict, alias: Optional[str], col: str) -> str:
     """Name of source ``alias``'s column ``col`` in the fold's flat
-    frames: the plain name for a single source (whose refs are
-    unqualified), ``alias__col`` once joins qualify every ref."""
-    return col if len(mv["sources"]) == 1 else f"{alias}__{col}"
+    frames."""
+    return f"{alias}__{col}" if _qualified(mv) else col
 
 
-def _flat_expr(mv: Dict, expr: str) -> str:
-    """Rewrite alias-qualified refs (``a.col``, optionally backticked)
-    to the flat names (``a__col``) the fold frames carry; string
-    literals are masked first, so ``'c.region'`` stays a literal.  The
-    identity for a single source."""
-    if len(mv["sources"]) == 1:
+# an identifier, optionally backticked and dot-qualified by one more
+# (``a.col``, ``col``, ```a`.`col```), that is neither the tail of a
+# longer dotted path, a function name, nor a typed-literal keyword
+# (``DATE '...'`` — literals are masked to \x01<i>\x01 first)
+_REF_RE = re.compile(
+    r"(?<![\w.`])`?(?P<head>[A-Za-z_]\w*)`?"
+    r"(?:\.`?(?P<tail>\w+)`?)?"
+    r"(?![\w`]|\s*\(|\s*\x01)"
+)
+_CAST_TYPE_RE = re.compile(r"\bAS\s*$", re.IGNORECASE)
+
+
+def _flat_expr(mv: Dict, expr: str,
+               cols: Optional[Dict[str, List[str]]] = None) -> str:
+    """Rewrite column refs of a join view's expression to the flat
+    names the fold frames carry; the identity for a single source.
+
+    ``alias.col`` (alias matched case-insensitively, as Spark resolves
+    it) becomes ``alias__col``.  With ``cols`` (alias -> the source's
+    column names; given for the free-form WHERE clause) a bare ``col``
+    that names a column of exactly one source becomes that source's
+    flat name too, an ambiguous bare ref or an ``alias.col`` naming no
+    column of that source raises ValueError, and any other identifier
+    (keywords, functions, unknown names) is left for Spark to resolve.
+    String literals are masked first, so ``'c.region'`` stays a
+    literal."""
+    if not _qualified(mv):
         return expr
+    aliases = {s["alias"].lower(): s["alias"] for s in mv["sources"]}
+    owners: Dict[str, List[Tuple[str, str]]] = {}
+    for alias, names in (cols or {}).items():
+        for c in names:
+            owners.setdefault(c.lower(), []).append((alias, c))
     masked, lits = _mask_literals(expr)
-    aliases = "|".join(re.escape(s["alias"]) for s in mv["sources"])
-    flat = re.sub(rf"`?\b({aliases})`?\.`?(\w+)`?", r"\1__\2", masked)
-    return _unmask_literals(flat, lits)
 
+    def flat(m: "re.Match[str]") -> str:
+        head, tail = m.group("head"), m.group("tail")
+        alias = aliases.get(head.lower())
+        if alias is not None and tail is not None:
+            if cols is not None:
+                known = {c.lower(): c for c in cols[alias]}
+                if tail.lower() not in known:
+                    raise ValueError(
+                        f"unknown column {head}.{tail} in {expr!r}"
+                    )
+                tail = known[tail.lower()]
+            return _flat_name(mv, alias, tail)
+        hits = owners.get(head.lower())
+        if not hits or _CAST_TYPE_RE.search(masked, 0, m.start()):
+            return m.group(0)
+        if len(hits) > 1:
+            raise ValueError(
+                f"ambiguous column reference {head!r} in {expr!r}: "
+                "qualify it with its source alias "
+                f"({sorted(a for a, _ in hits)})"
+            )
+        ref = _flat_name(mv, *hits[0])
+        return ref if tail is None else f"{ref}.{tail}"
 
-def _acol(mv: Dict, col: Optional[str]) -> Optional[str]:
-    """Flat-frame column name for an aggregate argument."""
-    return None if col is None else _flat_expr(mv, col)
+    return _unmask_literals(_REF_RE.sub(flat, masked), lits)
 
 
 # -- SQL-string plan construction (r9) ---------------------------------
@@ -386,7 +438,7 @@ def _norm_items_sql(mv: Dict, sign_sql: Optional[str] = None) -> str:
         if c is None or c in done:
             continue
         done.add(c)
-        flat = _acol(mv, c)
+        flat = _flat_expr(mv, c)
         items.append(f"({_fmt_safe(flat)}) AS {_bt(flat)}")
     if sign_sql is not None:
         items.append(f"CAST(({sign_sql}) AS INT) AS {_bt(_SIGN)}")
@@ -400,10 +452,11 @@ def _pair_on_sql(mv: Dict, pairs) -> str:
     )
 
 
-def _where_sql(mv: Dict) -> str:
+def _where_sql(catalog, mv: Dict) -> str:
     if not mv["where"]:
         return ""
-    return f" WHERE {_fmt_safe(_flat_expr(mv, mv['where']))}"
+    cols = {s["alias"]: _source_cols(catalog, s) for s in mv["sources"]}
+    return f" WHERE {_fmt_safe(_flat_expr(mv, mv['where'], cols))}"
 
 
 class _SqlPlan:
@@ -423,6 +476,10 @@ class _SqlPlan:
         return self.spark.sql(q, **self.params)
 
 
+def _source_cols(catalog, source: Dict) -> List[str]:
+    return catalog.get_table(source["name"]).spark_schema().fieldNames()
+
+
 def _flat_items_sql(mv: Dict, cols: List[str], alias: Optional[str]) -> str:
     return ", ".join(
         f"{_bt(c)} AS {_bt(_flat_name(mv, alias, c))}" for c in cols
@@ -435,8 +492,7 @@ def _snap_sql(catalog, mv: Dict, i: int, hi: int, plan: _SqlPlan) -> str:
     fold's C1 / J1 sides."""
     s = mv["sources"][i]
     snap = catalog.read(s["name"], as_of_seq=hi)
-    cols = catalog.get_table(s["name"]).spark_schema().fieldNames()
-    items = _flat_items_sql(mv, cols, s["alias"])
+    items = _flat_items_sql(mv, _source_cols(catalog, s), s["alias"])
     return f"(SELECT {items} FROM {plan.ref(snap)})"
 
 
@@ -457,7 +513,7 @@ def _normalized_source(catalog, mv: Dict, his: List[int]) -> DataFrame:
     frm = _join_chain(
         mv, [_snap_sql(catalog, mv, i, hi, plan) for i, hi in enumerate(his)]
     )
-    return plan.sql(f"SELECT {_norm_items_sql(mv)} FROM {frm}{_where_sql(mv)}")
+    return plan.sql(f"SELECT {_norm_items_sql(mv)} FROM {frm}{_where_sql(catalog, mv)}")
 
 
 # windows below this many summed parquet bytes inline their delta
@@ -531,12 +587,7 @@ def _delta_rows(catalog, mv: Dict, his: List[int],
 
     def flat_cols(i: int) -> List[str]:
         al = srcs[i]["alias"]
-        return [
-            _flat_name(mv, al, c)
-            for c in catalog.get_table(srcs[i]["name"])
-            .spark_schema()
-            .fieldNames()
-        ]
+        return [_flat_name(mv, al, c) for c in _source_cols(catalog, srcs[i])]
 
     def delta_text(i: int, sign_name: str) -> Optional[str]:
         if not has_delta[i]:
@@ -617,7 +668,7 @@ def _delta_rows(catalog, mv: Dict, his: List[int],
             dj = materialize(dj)
         cum_cols = step_cols
     return plan.sql(
-        f"SELECT {_norm_items_sql(mv, _bt(_SIGN))} FROM {dj}{_where_sql(mv)}"
+        f"SELECT {_norm_items_sql(mv, _bt(_SIGN))} FROM {dj}{_where_sql(catalog, mv)}"
     )
 
 
@@ -640,7 +691,8 @@ def _physical_aggs(mv: Dict) -> List:
     the bounded rescan."""
     cols = [F.sum(F.lit(1)).alias(_STAR)]
     for a in mv["aggs"]:
-        alias, c = a["alias"], _acol(mv, a["col"])
+        alias, c = a["alias"], a["col"]
+        c = None if c is None else _flat_expr(mv, c)
         nn = (
             None
             if c is None
@@ -1027,7 +1079,8 @@ def _refresh_matview_impl(catalog, name: str) -> Dict[str, int]:
     sign = F.col(_SIGN)
     delta_cols = [F.sum(sign).alias(f"__d_{_STAR}")]
     for a in mv["aggs"]:
-        alias, c = a["alias"], _acol(mv, a["col"])
+        alias, c = a["alias"], a["col"]
+        c = None if c is None else _flat_expr(mv, c)
         nn_sign = (
             sign
             if c is None

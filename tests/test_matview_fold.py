@@ -7,6 +7,8 @@ oracle re-aggregation of the current sources."""
 
 import json
 
+import pytest
+
 from fluss_datafusion_spark import EngineSession
 from fluss_datafusion_spark.catalog import information_schema, matview
 
@@ -67,6 +69,43 @@ def test_two_source_where_literal_spelling_a_ref(spark, tmp_path):
 
 def test_three_source_where_literal_spelling_a_ref(spark, tmp_path):
     _check_literal_where(_mk(spark, tmp_path, "wh_fold3"), _SELECT_3)
+
+
+_SELECT_BARE = (
+    "SELECT c.region, count(*) AS n, sum(f.amount) AS s FROM fact f"
+    " JOIN cust c ON f.cust_id = c.cust_id"
+    " WHERE amount > 5 AND C.region <> 'f.amount' GROUP BY c.region"
+)
+
+
+def test_two_source_where_bare_and_case_folded_refs(spark, tmp_path):
+    # the WHERE names ``amount`` unqualified and ``C.region`` with the
+    # alias in another case: Spark resolves both over the aliased join
+    e = _mk(spark, tmp_path, "wh_bare")
+    select_sql = _SELECT_BARE
+    e.sql(f"CREATE MATERIALIZED VIEW mvb AS {select_sql}")
+    assert _rows(e, "SELECT * FROM mvb") == _rows(e, select_sql) == [
+        ("c.region", 1, 11), ("us", 1, 7)
+    ]
+    e.sql("INSERT INTO fact VALUES (103, 2, 10, 9), (104, 1, 20, 2)")
+    e.sql("UPDATE cust SET region = 'eu' WHERE cust_id = 1")
+    e.sql("REFRESH MATERIALIZED VIEW mvb")
+    assert _rows(e, "SELECT * FROM mvb") == _rows(e, select_sql) == [
+        ("eu", 1, 11), ("us", 2, 16)
+    ]
+
+
+def test_join_where_ambiguous_or_unknown_ref_is_a_value_error(
+        spark, tmp_path):
+    e = _mk(spark, tmp_path, "wh_ambig")
+    for where, needle in (("cust_id > 0", "ambiguous"),
+                          ("f.nope > 0", "unknown column f.nope")):
+        with pytest.raises(ValueError, match=needle):
+            e.sql(
+                "CREATE MATERIALIZED VIEW mva AS SELECT c.region,"
+                " count(*) AS n FROM fact f JOIN cust c"
+                f" ON f.cust_id = c.cust_id WHERE {where} GROUP BY c.region"
+            )
 
 
 def test_flat_expr_leaves_literals_alone():
@@ -183,3 +222,25 @@ def test_legacy_two_source_spec_loads_and_refreshes(spark, tmp_path):
         "last_seq2": e.catalog.current_seq("cust"),
     }
     _check_legacy(e, tmp_path, "wh_leg2", "mv2", _FRESH_2, legacy, 2)
+
+
+def test_legacy_two_source_spec_with_bare_where_refreshes(spark, tmp_path):
+    # a pre-n-source spec whose WHERE names a column unqualified (the
+    # two-source path bound it over the aliased join) keeps refreshing
+    e = _mk(spark, tmp_path, "wh_leg2w")
+    legacy = {
+        "source": "fact",
+        "alias": "f",
+        "source2": "cust",
+        "alias2": "c",
+        "join_on": [["f.cust_id", "c.cust_id"]],
+        "where": "amount > 4",
+        "group_cols": ["c.region"],
+        "group_names": ["region"],
+        "aggs": _AGGS_2,
+        "float_sums": [],
+        "last_seq": e.catalog.current_seq("fact"),
+        "last_seq2": e.catalog.current_seq("cust"),
+    }
+    select_sql = _FRESH_2.replace(" GROUP BY", " WHERE amount > 4 GROUP BY")
+    _check_legacy(e, tmp_path, "wh_leg2w", "mv2w", select_sql, legacy, 2)
