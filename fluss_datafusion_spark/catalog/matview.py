@@ -455,7 +455,11 @@ def _pair_on_sql(mv: Dict, pairs) -> str:
 def _where_sql(catalog, mv: Dict) -> str:
     if not mv["where"]:
         return ""
-    cols = {s["alias"]: _source_cols(catalog, s) for s in mv["sources"]}
+    cols = (
+        {s["alias"]: _source_cols(catalog, s) for s in mv["sources"]}
+        if _qualified(mv)
+        else None
+    )
     return f" WHERE {_fmt_safe(_flat_expr(mv, mv['where'], cols))}"
 
 
@@ -513,7 +517,9 @@ def _normalized_source(catalog, mv: Dict, his: List[int]) -> DataFrame:
     frm = _join_chain(
         mv, [_snap_sql(catalog, mv, i, hi, plan) for i, hi in enumerate(his)]
     )
-    return plan.sql(f"SELECT {_norm_items_sql(mv)} FROM {frm}{_where_sql(catalog, mv)}")
+    return plan.sql(
+        f"SELECT {_norm_items_sql(mv)} FROM {frm}{_where_sql(catalog, mv)}"
+    )
 
 
 # windows below this many summed parquet bytes inline their delta
@@ -668,7 +674,8 @@ def _delta_rows(catalog, mv: Dict, his: List[int],
             dj = materialize(dj)
         cum_cols = step_cols
     return plan.sql(
-        f"SELECT {_norm_items_sql(mv, _bt(_SIGN))} FROM {dj}{_where_sql(catalog, mv)}"
+        f"SELECT {_norm_items_sql(mv, _bt(_SIGN))} FROM {dj}"
+        f"{_where_sql(catalog, mv)}"
     )
 
 

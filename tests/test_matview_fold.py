@@ -124,6 +124,20 @@ def test_flat_expr_leaves_literals_alone():
     assert matview._flat_expr(single, single["where"]) == single["where"]
 
 
+def test_flat_expr_bare_refs_skip_types_functions_and_typed_literals():
+    mv = matview.parse_matview_select(_SELECT_3)
+    # columns named like a type, a function and a typed-literal keyword
+    cols = {"f": ["amount", "date", "upper"], "c": ["region"], "p": ["cat"]}
+    expr = (
+        "date > DATE '2020-01-01' AND CAST(amount AS date) IS NOT NULL"
+        " AND upper(region) = upper AND Region.x = 1"
+    )
+    assert matview._flat_expr(mv, expr, cols) == (
+        "f__date > DATE '2020-01-01' AND CAST(f__amount AS date) IS NOT NULL"
+        " AND upper(c__region) = f__upper AND c__region.x = 1"
+    )
+
+
 # -- legacy (pre-n-ary) _mv.json specs ---------------------------------------
 
 _AGGS_1 = [
