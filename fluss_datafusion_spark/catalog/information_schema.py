@@ -52,8 +52,13 @@ def register_views(catalog, include_stats: bool = True) -> None:
     listing (all other stats come from parquet footers / os.walk, no
     Spark job either way)."""
     spark = catalog.spark
+    # through get_table, like every other statement boundary: one stat()
+    # per table picks up a spec another session re-saved (tags,
+    # branches, columns) instead of answering from the cached one
     specs: List[TableSpec] = [
-        spec for db in catalog.databases.values() for spec in db.values()
+        catalog.get_table(f"{db}.{name}")
+        for db, tables in list(catalog.databases.items())
+        for name in list(tables)
     ]
 
     schemata = [(name,) for name in catalog.list_databases()] or [("fluss",)]
@@ -301,10 +306,11 @@ def register_views(catalog, include_stats: bool = True) -> None:
     ).createOrReplaceTempView("information_schema_materialized_views")
 
     # Named version refs (r8): tags (read-only) and branches (writable)
-    # in one view — the observability side of SHOW TAGS / SHOW BRANCHES
-    # (anchor_seq = the tag's pinned seq / the branch's fork seq;
-    # head_seq differs from anchor only for branches with deltas;
-    # readable=false marks refs stranded below the compaction floor)
+    # in one view, which SHOW TAGS / SHOW BRANCHES rewrite onto
+    # (sql/rewriter.py).  anchor_seq = the tag's pinned seq / the
+    # branch's fork seq; head_seq differs from anchor only for branches
+    # with deltas; readable=false marks refs stranded below the
+    # compaction floor
     refs = []
     for s in specs:
         floor = catalog._floor.get(s.qualified_name, 0)

@@ -4,6 +4,11 @@ Mirrors the reference's design choice of rewriting SHOW/DESCRIBE commands
 into SELECTs over information_schema *as strings*, never touching engine
 plan IR (src/sql/rewriter.rs:19-77; README "SQL Rewriting Mechanism").
 
+Rewritten commands: SHOW TABLES / DATABASES, and per table SHOW CREATE
+TABLE / PARTITIONS / BUCKETS / OPTIONS (TBLPROPERTIES) / STATS / TAGS /
+BRANCHES and DESCRIBE.  SHOW TAGS and SHOW BRANCHES read
+``information_schema.table_refs`` and rewrite only for engine tables.
+
 Our information_schema views are registered as flat temp views
 (``information_schema_tables`` etc.) because Spark temp views are not
 database-qualified; the rewriter maps both the SHOW commands and literal
@@ -17,36 +22,71 @@ from typing import Optional
 
 from fluss_datafusion_spark.sql.dialect import escape_sql_string, parse_qualified_name
 
+_NAME = r"(?P<name>(?:`[^`]*`|\"[^\"]*\"|[\w@$.])+)"
 _SHOW_TABLES_RE = re.compile(
     r"^\s*SHOW\s+TABLES(?:\s+(?:FROM|IN)\s+(?P<db>(?:`[^`]*`|\"[^\"]*\"|[\w@$])+))?\s*$",
     re.IGNORECASE,
 )
-_SHOW_CREATE_RE = re.compile(
-    r"^\s*SHOW\s+CREATE\s+TABLE\s+(?P<name>(?:`[^`]*`|\"[^\"]*\"|[\w@$.])+)\s*$",
-    re.IGNORECASE,
-)
-_SHOW_PARTITIONS_RE = re.compile(
-    r"^\s*SHOW\s+PARTITIONS\s+(?P<name>(?:`[^`]*`|\"[^\"]*\"|[\w@$.])+)\s*$",
-    re.IGNORECASE,
-)
-_SHOW_BUCKETS_RE = re.compile(
-    r"^\s*SHOW\s+BUCKETS\s+(?P<name>(?:`[^`]*`|\"[^\"]*\"|[\w@$.])+)\s*$",
-    re.IGNORECASE,
-)
-_SHOW_OPTIONS_RE = re.compile(
-    r"^\s*SHOW\s+(?:(?:TABLE\s+)?OPTIONS|TBLPROPERTIES)\s+"
-    r"(?P<name>(?:`[^`]*`|\"[^\"]*\"|[\w@$.])+)\s*$",
-    re.IGNORECASE,
-)
-_DESCRIBE_RE = re.compile(
-    r"^\s*(?:DESCRIBE|DESC)\s+(?:TABLE\s+)?(?P<name>(?:`[^`]*`|\"[^\"]*\"|[\w@$.])+)\s*$",
-    re.IGNORECASE,
-)
 _SHOW_DATABASES_RE = re.compile(r"^\s*SHOW\s+(?:DATABASES|SCHEMAS)\s*$", re.IGNORECASE)
-_SHOW_STATS_RE = re.compile(
-    r"^\s*SHOW\s+STATS\s+(?:FOR\s+)?(?P<name>(?:`[^`]*`|\"[^\"]*\"|[\w@$.])+)\s*$",
-    re.IGNORECASE,
-)
+
+# The per-table commands, one row each: (command head, information_schema
+# view, select list, extra filter, ORDER BY, engine tables only).  Each
+# rewrites to ``SELECT <list> FROM information_schema.<view> WHERE
+# table_schema = '<db>' AND table_name = '<t>' [AND <filter>] [ORDER BY
+# <order>]``.  An engine-only command whose operand is not an engine
+# table is left for Spark, so an unknown name still gets Spark's error.
+_TABLE_COMMANDS = [
+    (
+        r"SHOW\s+CREATE\s+TABLE\s+", "table_ddl", "create_table",
+        None, None, False,
+    ),
+    # partition_id >= 0 hides the synthetic "__non_partitioned__" row
+    # (src/sql/rewriter.rs:40-47, src/catalog/schema.rs:471-480).
+    (
+        r"SHOW\s+PARTITIONS\s+", "partitions",
+        "partition_id, partition_name, partition_qualified_name",
+        "partition_id >= 0", "partition_name", False,
+    ),
+    (
+        r"SHOW\s+BUCKETS\s+", "buckets",
+        "partition_id, bucket_id, bucket_key, row_count",
+        None, "partition_id, bucket_id", False,
+    ),
+    (
+        r"SHOW\s+(?:(?:TABLE\s+)?OPTIONS|TBLPROPERTIES)\s+",
+        "table_options",
+        "option_name, option_value, option_type",
+        None, "option_type, option_name", False,
+    ),
+    # `DESCRIBE SELECT ...` etc. are not table describes: the lookahead
+    # keeps a bare keyword operand out
+    (
+        r"(?:DESCRIBE|DESC)\s+(?:TABLE\s+)?"
+        r"(?!(?:SELECT|QUERY|EXTENDED|FORMATTED|DETAIL|HISTORY)\s*$)",
+        "columns",
+        "column_name, data_type, is_nullable, column_default, comment, "
+        "is_primary_key",
+        None, "ordinal_position", False,
+    ),
+    (
+        r"SHOW\s+STATS\s+(?:FOR\s+)?", "column_stats",
+        "column_name, row_count, null_count, ndv, min_value, max_value, "
+        "avg_len, max_len, stale",
+        None, "column_name", False,
+    ),
+    (
+        r"SHOW\s+TAGS\s+(?:(?:FROM|IN)\s+)?", "table_refs",
+        "ref_name AS tag_name, anchor_seq AS seq, created_at, "
+        "readable AS time_travelable",
+        "ref_type = 'TAG'", "tag_name", True,
+    ),
+    (
+        r"SHOW\s+BRANCHES\s+(?:(?:FROM|IN)\s+)?", "table_refs",
+        "ref_name AS branch_name, anchor_seq AS fork_seq, head_seq, "
+        "created_at, readable",
+        "ref_type = 'BRANCH'", "branch_name", True,
+    ),
+]
 # Cheap pre-filter: the literal-aware QUALIFY rewrite only runs when the
 # raw text contains the token at all (false positives are fine — the
 # rewrite itself masks literals and is a no-op without a real clause).
@@ -112,85 +152,32 @@ def _rewrite_command(sql: str, catalog) -> Optional[str]:
             f"WHERE table_schema = '{escape_sql_string(db_name)}' ORDER BY table_name"
         )
 
-    match = _SHOW_CREATE_RE.match(sql)
-    if match:
-        db, table = _split_name(match.group("name"), catalog)
-        return (
-            "SELECT create_table FROM information_schema.table_ddl "
-            f"WHERE table_schema = '{escape_sql_string(db)}' "
-            f"AND table_name = '{escape_sql_string(table)}'"
-        )
-
-    match = _SHOW_PARTITIONS_RE.match(sql)
-    if match:
-        db, table = _split_name(match.group("name"), catalog)
-        # partition_id >= 0 hides the synthetic "__non_partitioned__" row
-        # (src/sql/rewriter.rs:40-47, src/catalog/schema.rs:471-480).
-        return (
-            "SELECT partition_id, partition_name, partition_qualified_name "
-            "FROM information_schema.partitions "
-            f"WHERE table_schema = '{escape_sql_string(db)}' "
-            f"AND table_name = '{escape_sql_string(table)}' "
-            "AND partition_id >= 0 ORDER BY partition_name"
-        )
-
-    match = _SHOW_BUCKETS_RE.match(sql)
-    if match:
-        db, table = _split_name(match.group("name"), catalog)
-        return (
-            "SELECT partition_id, bucket_id, bucket_key, row_count "
-            "FROM information_schema.buckets "
-            f"WHERE table_schema = '{escape_sql_string(db)}' "
-            f"AND table_name = '{escape_sql_string(table)}' "
-            "ORDER BY partition_id, bucket_id"
-        )
-
-    match = _SHOW_OPTIONS_RE.match(sql)
-    if match:
-        db, table = _split_name(match.group("name"), catalog)
-        return (
-            "SELECT option_name, option_value, option_type "
-            "FROM information_schema.table_options "
-            f"WHERE table_schema = '{escape_sql_string(db)}' "
-            f"AND table_name = '{escape_sql_string(table)}' "
-            "ORDER BY option_type, option_name"
-        )
-
-    match = _DESCRIBE_RE.match(sql)
-    if match:
-        name = match.group("name")
-        # `DESCRIBE SELECT ...` etc. are not table describes; only rewrite
-        # when the operand looks like a table name.
-        if name.upper() in (
-            "SELECT", "QUERY", "EXTENDED", "FORMATTED", "DETAIL", "HISTORY",
-        ):
-            return None
-        db, table = _split_name(name, catalog)
-        return (
-            "SELECT column_name, data_type, is_nullable, column_default, "
-            "comment, is_primary_key FROM information_schema.columns "
-            f"WHERE table_schema = '{escape_sql_string(db)}' "
-            f"AND table_name = '{escape_sql_string(table)}' "
-            "ORDER BY ordinal_position"
-        )
-
     if _SHOW_DATABASES_RE.match(sql):
         return (
             "SELECT schema_name AS database_name FROM information_schema.schemata "
             "ORDER BY database_name"
         )
 
-    match = _SHOW_STATS_RE.match(sql)
-    if match:
+    for head, view, columns, extra, order, engine_only in _TABLE_COMMANDS:
+        match = re.match(rf"^\s*{head}{_NAME}\s*$", sql, re.IGNORECASE)
+        if not match:
+            continue
         db, table = _split_name(match.group("name"), catalog)
-        return (
-            "SELECT column_name, row_count, null_count, ndv, min_value, "
-            "max_value, avg_len, max_len, stale "
-            "FROM information_schema.column_stats "
+        # a catalog without has_table (a plain string context) rewrites
+        # unconditionally, like every other per-table command
+        has_table = getattr(catalog, "has_table", None)
+        if engine_only and has_table is not None and not has_table(f"{db}.{table}"):
+            return None
+        out = (
+            f"SELECT {columns} FROM information_schema.{view} "
             f"WHERE table_schema = '{escape_sql_string(db)}' "
-            f"AND table_name = '{escape_sql_string(table)}' "
-            "ORDER BY column_name"
+            f"AND table_name = '{escape_sql_string(table)}'"
         )
+        if extra:
+            out += f" AND {extra}"
+        if order:
+            out += f" ORDER BY {order}"
+        return out
 
     return None
 

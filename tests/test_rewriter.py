@@ -84,6 +84,40 @@ def test_rewrite_describe():
     assert "information_schema_columns" in rw("DESC my_table")
 
 
+def test_rewrite_show_tags_and_branches():
+    result = rw("SHOW TAGS t")
+    assert "information_schema_table_refs" in result
+    assert "ref_type = 'TAG'" in result
+    assert "'fluss'" in result and "'t'" in result
+    assert "tag_name" in result
+
+    result = rw("SHOW BRANCHES t")
+    assert "information_schema_table_refs" in result
+    assert "ref_type = 'BRANCH'" in result
+    assert "branch_name" in result
+
+    result = rw("SHOW BRANCHES FROM db.t")
+    assert "information_schema_table_refs" in result
+    assert "ref_type = 'BRANCH'" in result
+    assert "'db'" in result and "'t'" in result
+
+
+def test_show_refs_rewrite_only_engine_tables():
+    """SHOW TAGS/BRANCHES rewrite only for an engine table, so an
+    unknown name keeps Spark's error.  A catalog without ``has_table``
+    (a plain string context such as FakeCatalog) cannot tell, and
+    rewrites like every other per-table command."""
+
+    class Engine(FakeCatalog):
+        def has_table(self, name):
+            return name == "fluss.t"
+
+    assert "information_schema_table_refs" in rewrite_sql("SHOW TAGS t", Engine())
+    assert rewrite_sql("SHOW TAGS u", Engine()) == "SHOW TAGS u"
+    assert rewrite_sql("SHOW BRANCHES u", Engine()) == "SHOW BRANCHES u"
+    assert "information_schema_table_refs" in rewrite_sql("SHOW TAGS u", None)
+
+
 def test_no_rewrite_standard_sql():
     assert rw("SELECT * FROM my_table") == "SELECT * FROM my_table"
     assert rw("INSERT INTO my_table VALUES (1)") == "INSERT INTO my_table VALUES (1)"
